@@ -1,10 +1,10 @@
 """Seeded input generators for the benchmark workloads.
 
 Every generator is a pure function of its arguments.  The corpora that
-have a seed-independent correct output (``canon_corpus``, ``canon_giant``,
-``dedup_docs``) are built from a fixed base seed; the run seed only
-renames blank nodes and/or shuffles rows, which must not change the
-output (blabel's TEST-mode isomorphism invariance).
+have a seed-independent correct output (``canon_giant``, ``dedup_docs``)
+are built from a fixed base seed; the run seed only renames blank nodes
+and/or shuffles rows, which must not change the output (blabel's
+TEST-mode isomorphism invariance).
 """
 
 from __future__ import annotations
@@ -18,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BASE_SEED = 20260101
-
-TRIPLE_SCHEMA = "graph_id string, subj string, pred string, obj string"
+DUP_SHARE = 0.1
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 
@@ -100,13 +99,13 @@ def rename_and_shuffle(triples: DataFrame, seed: int) -> DataFrame:
             .orderBy(F.rand(seed)))
 
 
-def documents(n_docs: int, dup_share: float = 0.1) -> list[tuple[int, str]]:
-    """(doc_id, text) corpus: random vocabulary docs, ``dup_share`` of
+def documents(n_docs: int) -> list[tuple[int, str]]:
+    """(doc_id, text) corpus: random vocabulary docs, ``DUP_SHARE`` of
     them near-copies (a few words replaced) of an earlier doc."""
     rng = random.Random(BASE_SEED)
     texts: list[str] = []
     for i in range(n_docs):
-        if i and rng.random() < dup_share:
+        if i and rng.random() < DUP_SHARE:
             words = texts[rng.randrange(i)].split(" ")
             for _ in range(max(1, len(words) // 20)):
                 words[rng.randrange(len(words))] = rng.choice(VOCAB)
