@@ -1,7 +1,7 @@
 """Seeded input generators for the benchmark workloads.
 
 Every generator is a pure function of its arguments.  The corpora that
-have a seed-independent correct output (``canon_giant``, ``dedup_docs``)
+have a seed-independent correct output (the giant graph, the dedup docs)
 are built from a fixed base seed; the run seed only renames blank nodes
 and/or shuffles rows, which must not change the output (blabel's
 TEST-mode isomorphism invariance).
@@ -9,80 +9,63 @@ TEST-mode isomorphism invariance).
 
 from __future__ import annotations
 
-import os
 import random
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BASE_SEED = 20260101
-DUP_SHARE = 0.1
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 
-# the small word vocabulary of the repo's `documents` test table: word
-# shingles collide often, so MinHash bands have popular keys
+# the repo's `documents` test table (5,000 docs at sf0.1): every word drawn
+# uniformly from this 30-word vocabulary, 10-100 words a doc, and 5 % of
+# the docs (250) an exact copy of another doc with " dup" appended
 VOCAB = ["a", "agg", "batch", "big", "column", "customer", "data", "fast",
          "filter", "group", "hash", "join", "key", "line", "merge", "order",
          "part", "query", "row", "scan", "slow", "small", "sort", "spark",
          "stream", "table", "the", "value", "vector", "window"]
+DOC_WORDS = (10, 100)
+DUP_SHARE = 0.05
 
 
-def write_tpch_tables(directory: str, n_orders: int) -> None:
-    """orders / lineitem / customer parquet with the columns the repo's
-    derived triples view (``ops.triples_view.build_triples``) reads, in
-    TPC-H proportions: 10 orders per customer, 1-7 lines per order."""
-    rng = np.random.default_rng(BASE_SEED)
+def order_triples(n_orders: int) -> list[tuple[str, str, str]]:
+    """The shapes of the repo's derived triples view
+    (``ops.triples_view.build_triples``) over TPC-H-proportioned rows:
+    10 orders per customer (a third of the customers never order), 1-7
+    lines per order.  Orders and customers are blank nodes."""
+    rng = random.Random(BASE_SEED)
     n_cust = max(n_orders // 10, 3)
     n_parts = max(n_orders * 2 // 15, 1)
-    custkeys = np.arange(1, n_cust + 1)
-    orderkeys = np.arange(1, n_orders + 1)
-    n_lines = rng.integers(1, 8, n_orders)
-    tables = {
-        "orders": pd.DataFrame({
-            "o_orderkey": orderkeys,
-            # TPC-H: a third of the customers never order
-            "o_custkey": rng.choice(custkeys[custkeys % 3 != 0], n_orders),
-            "o_orderstatus": rng.choice(["F", "O", "P"], n_orders,
-                                        p=[0.49, 0.49, 0.02])}),
-        "lineitem": pd.DataFrame({
-            "l_orderkey": np.repeat(orderkeys, n_lines),
-            "l_partkey": rng.integers(1, n_parts + 1, int(n_lines.sum()))}),
-        "customer": pd.DataFrame({
-            "c_custkey": custkeys,
-            "c_mktsegment": rng.choice(SEGMENTS, n_cust)}),
-    }
-    for name, pdf in tables.items():
-        os.makedirs(directory, exist_ok=True)
-        pdf.to_parquet(os.path.join(directory, f"{name}.parquet"),
-                       index=False)
+    buyers = [c for c in range(1, n_cust + 1) if c % 3]
+    rows = []
+    for o in range(1, n_orders + 1):
+        buyer = rng.choice(buyers)
+        rows.append((f"_:o{o}", "<rel:placed_by>", f"_:c{buyer}"))
+        status = rng.choices("FOP", (0.49, 0.49, 0.02))[0]
+        rows.append((f"_:o{o}", "<rel:status>", f'"{status}"'))
+        for _ in range(rng.randint(1, 7)):
+            rows.append((f"_:o{o}", "<rel:has_part>",
+                         f"<part:{rng.randint(1, n_parts)}>"))
+    for c in range(1, n_cust + 1):
+        rows.append((f"<cust:{c}>", "<rel:segment>",
+                     f'"{rng.choice(SEGMENTS)}"'))
+    return rows
 
 
-def tpch_triples(spark: SparkSession, directory: str,
-                 n_orders: int) -> DataFrame:
-    """The derived triples view (200 graphs) over freshly written tables."""
-    from blabel_spark.ops.triples_view import build_triples
-    write_tpch_tables(directory, n_orders)
-    return build_triples(spark, directory)
-
-
-def giant_graph(spark: SparkSession, directory: str, n_orders: int,
-                n_chains: int, chain_len: int, hub_leaves: int) -> DataFrame:
-    """ONE graph holding the derived triples, ``n_chains`` bnode chains and
+def giant_graph(spark: SparkSession, n_orders: int, n_chains: int,
+                chain_len: int, hub_leaves: int) -> DataFrame:
+    """ONE graph holding the order triples, ``n_chains`` bnode chains and
     one hub bnode whose leaves each carry a distinct literal (distinct
     leaves keep the hub free of automorphisms, see NOTES.md cliffs)."""
     from blabel_spark.synthetic import chain
-    rows = []
+    rows = order_triples(n_orders)
     for i in range(n_chains):
         rows.extend(chain(chain_len, tag=f"c{i}_"))
     for i in range(hub_leaves):
         rows.append(("_:hub", "<rel:leaf>", f"_:leaf{i}"))
         rows.append((f"_:leaf{i}", "<rel:val>", f'"{i}"'))
-    extra = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    base = tpch_triples(spark, directory, n_orders)
-    return (base.select("subj", "pred", "obj").union(extra)
+    return (spark.createDataFrame(rows, "subj string, pred string, obj string")
             .select(F.lit("giant").alias("graph_id"), "subj", "pred", "obj"))
 
 
@@ -100,18 +83,15 @@ def rename_and_shuffle(triples: DataFrame, seed: int) -> DataFrame:
 
 
 def documents(n_docs: int) -> list[tuple[int, str]]:
-    """(doc_id, text) corpus: random vocabulary docs, ``DUP_SHARE`` of
-    them near-copies (a few words replaced) of an earlier doc."""
+    """(doc_id, text) corpus with the structure of the repo's `documents`
+    table: uniform vocabulary docs, ``DUP_SHARE`` of them a copy of
+    another doc plus the word "dup"."""
     rng = random.Random(BASE_SEED)
-    texts: list[str] = []
-    for i in range(n_docs):
-        if i and rng.random() < DUP_SHARE:
-            words = texts[rng.randrange(i)].split(" ")
-            for _ in range(max(1, len(words) // 20)):
-                words[rng.randrange(len(words))] = rng.choice(VOCAB)
-        else:
-            words = [rng.choice(VOCAB) for _ in range(rng.randint(8, 100))]
-        texts.append(" ".join(words))
+    texts = [" ".join(rng.choices(VOCAB, k=rng.randint(*DOC_WORDS)))
+             for _ in range(n_docs)]
+    for i in rng.sample(range(n_docs), round(DUP_SHARE * n_docs)):
+        j = rng.randrange(n_docs - 1)
+        texts[i] = texts[j + (j >= i)] + " dup"
     return list(enumerate(texts))
 
 

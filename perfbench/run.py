@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its metrics as one JSON line.
 
-    python3 perfbench/run.py --workload kg_build --seed 1 --seconds 10 \\
+    python3 perfbench/run.py --workload kg_dedup --seed 1 --seconds 1 \\
         --trace 0 [--size smoke]
 
 One driver process, ``local[<cores>]``, one client running passes back to
@@ -12,14 +12,14 @@ back (closed loop).  Protocol:
    ``STAGE_REPEATS`` times; ``setup_s`` = session + median staging;
 2. pass 1 is the cold pass (``cold_pass_s``), then the thorough output
    check runs once, untimed;
-3. warm passes run for ``--seconds`` and at least the workload's
-   ``min_warm``; while the first warm pass is more than ``LEVEL``
-   slower than the next, it is warm-up and is discarded (at most
-   ``MAX_WARMUP`` times); ``warm_pass_s`` is the median of the rest.
+3. warm passes run for ``--seconds`` and at least ``MIN_WARM`` of them;
+   while the first warm pass is more than ``LEVEL`` slower than the next,
+   it is warm-up and is discarded (at most ``MAX_WARMUP`` times);
+   ``warm_pass_s`` is the median of the rest.
 
-With ``--trace 1`` step 3 alternates untraced and traced passes, Spark's
-event log is on for the whole process, and the per-layer metrics of
-BENCHMARK.json are printed instead of the end-to-end ones.  Every pass is
+With ``--trace 1`` each warm pass of step 3 is followed by a traced one,
+Spark's event log is on for the whole process, and the per-layer metrics
+of BENCHMARK.json are printed instead of the end-to-end ones.  Every pass is
 checked; a pass that raises or fails its check counts as failed.
 """
 
@@ -47,6 +47,7 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 
 STAGE_REPEATS = 2
+MIN_WARM = 1
 MAX_WARMUP = 3
 LEVEL = 0.25
 DRIVER_MEMORY = "1g"
@@ -134,16 +135,10 @@ class Runner:
         cold = self.one(verify=True)
         warm, traced, discarded = [], [], 0
         t0 = time.perf_counter()
-        while (len(traced if trace else warm) < self.wl.min_warm
-               or time.perf_counter() - t0 < seconds):
-            if not trace:
-                order = (False,)
-            elif len(traced) % 2 == 0:
-                order = (False, True)
-            else:  # ABBA: a trend in the walls cancels out of the
-                order = (True, False)  # traced - untraced difference
-            for t in order:
-                (traced if t else warm).append(self.one(traced=t))
+        while len(warm) < MIN_WARM or time.perf_counter() - t0 < seconds:
+            warm.append(self.one())
+            if trace:
+                traced.append(self.one(traced=True))
             # walls still falling: the first warm pass is warm-up
             if (len(warm) == 2 and discarded < MAX_WARMUP
                     and warm[0].wall > (1 + LEVEL) * warm[1].wall):

@@ -53,6 +53,6 @@ def test_fails_without_the_program(tmp_path):
     shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), tmp_path)
     shutil.copytree(HERE, tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__"))
-    proc = run(str(tmp_path), "--workload", "kg_build", "--trace", "0")
+    proc = run(str(tmp_path), "--workload", "kg_dedup", "--trace", "0")
     assert proc.returncode != 0
     assert proc.stdout.strip() == ""

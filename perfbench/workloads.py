@@ -69,7 +69,6 @@ class Output:
 class Workload:
     name = ""
     sizes: dict[str, dict] = {}
-    min_warm = 2
 
     def __init__(self, size: str, work: str):
         self.size = size
@@ -205,18 +204,16 @@ class CanonGiant(Workload):
     name = "canon_giant"
     # the graph is scaled far below production giants; the per-task row
     # threshold of the auto route is scaled with it, so auto still sends
-    # the graph to the loop as it would a real giant graph
-    sizes = {"full": {"n_orders": 600, "n_chains": 200, "chain_len": 4,
-                      "hub_leaves": 4000, "kernel_graph_rows": 1000},
-             "smoke": {"n_orders": 100, "n_chains": 50, "chain_len": 4,
-                       "hub_leaves": 500, "kernel_graph_rows": 1000}}
-    min_warm = 2
+    # the graph to the loop as it would a real giant graph.  The loop's
+    # cost is per job, not per row, so the smoke size is the full size.
+    FULL = {"n_orders": 100, "n_chains": 50, "chain_len": 4,
+            "hub_leaves": 500, "kernel_graph_rows": 1000}
+    sizes = {"full": FULL, "smoke": FULL}
 
     def stage(self, spark, seed):
         p = self.p
-        g = inputs.giant_graph(spark, os.path.join(self.work, "tpch"),
-                               p["n_orders"], p["n_chains"], p["chain_len"],
-                               p["hub_leaves"])
+        g = inputs.giant_graph(spark, p["n_orders"], p["n_chains"],
+                               p["chain_len"], p["hub_leaves"])
         g = inputs.rename_and_shuffle(g, seed).localCheckpoint(True)
         return {"triples": g, "items": g.count()}
 
@@ -252,8 +249,7 @@ class CanonGiant(Workload):
         return out
 
     def check(self, spark, data, out):
-        return matches_expected(f"{self.name}/{self.size}",
-                                digest(out.frames["labelled"]))
+        return matches_expected(self.name, digest(out.frames["labelled"]))
 
     def verify(self, spark, data, out):
         """Parity with the per-graph kernel route on the same input."""
@@ -365,4 +361,42 @@ class DedupDocs(Workload):
         return True
 
 
-WORKLOADS = {w.name: w for w in (KgBuild, CanonGiant, DedupDocs)}
+class KgDedup(Workload):
+    """The two training-data jobs back to back in one pass: the KG build
+    over transcripts (``KgBuild``), then near-duplicate removal over a
+    document corpus (``DedupDocs``).  Each keeps its own input, checks and
+    layers; they share a workload so that the benchmark's runs fit its
+    time budget (NOTES.md)."""
+    name = "kg_dedup"
+
+    def __init__(self, size: str, work: str):
+        self.parts = (KgBuild(size, work), DedupDocs(size, work))
+
+    def stage(self, spark, seed):
+        data = {p.name: p.stage(spark, seed) for p in self.parts}
+        data["items"] = {k: d["items"] for k, d in data.items()}
+        return data
+
+    def unstage(self, data):
+        for p in self.parts:
+            p.unstage(data[p.name])
+
+    def run(self, spark, data, tr):
+        outs = [p.run(spark, data[p.name], tr) for p in self.parts]
+        return Output(frames={k: v for o in outs for k, v in o.frames.items()},
+                      extra={k: v for o in outs for k, v in o.extra.items()},
+                      cleanup=[f for o in outs for f in o.cleanup],
+                      path=outs[0].path)
+
+    def check(self, spark, data, out):
+        return all([p.check(spark, data[p.name], out) for p in self.parts])
+
+    def verify(self, spark, data, out):
+        return all([p.verify(spark, data[p.name], out) for p in self.parts])
+
+    def extras(self, spark, data, out):
+        return {k: v for p in self.parts
+                for k, v in p.extras(spark, data[p.name], out).items()}
+
+
+WORKLOADS = {w.name: w for w in (KgDedup, CanonGiant)}
