@@ -15,7 +15,12 @@ back (closed loop).  Protocol:
 3. warm passes run for ``--seconds`` and at least ``MIN_WARM`` of them;
    while the first warm pass is more than ``LEVEL`` slower than the next,
    it is warm-up and is discarded (at most ``MAX_WARMUP`` times);
-   ``warm_pass_s`` is the median of the rest.
+   the per-pass values are medians of the rest.
+
+Every pass is timed (wall and CPU) and counted (Spark jobs, tasks,
+shuffle bytes).  The end-to-end metrics of BENCHMARK.json are the set-up
+time, the counts and the peak memory; pass times are per-layer metrics,
+because the shared host moves them by more than any bound (NOTES.md).
 
 With ``--trace 1`` each warm pass of step 3 is followed by a traced one,
 Spark's event log is on for the whole process, and the per-layer metrics
@@ -38,8 +43,9 @@ import time
 import traceback
 from dataclasses import dataclass, field
 
-from tracing import (PeakRss, Tracer, alive, descendants, median_by_layer,
-                     parse_event_log, pass_tag, shuffle_write_bytes)
+from tracing import (CpuClock, PeakRss, Tracer, alive, descendants,
+                     executor_totals, median_by_layer, parse_event_log,
+                     pass_jobs, pass_tag)
 from workloads import WORKLOADS
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -72,7 +78,10 @@ def configure_env(trace: bool) -> None:
     os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
-    jvm_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    # compiler threads live as long as the JVM, so their CPU time can be
+    # read per thread
+    jvm_opts = (f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+                " -XX:-UseDynamicNumberOfCompilerThreads")
     os.environ["SPARK_LAUNCHER_OPTS"] = jvm_opts
     # a fixed-size heap keeps the driver's resident set from following
     # the collector's run-to-run heap-sizing decisions
@@ -90,8 +99,12 @@ class Pass:
     id: int
     traced: bool
     wall: float = 0.0
+    cpu: float = 0.0
+    jit_cpu: float = 0.0
     ok: bool = False
     shuffle_mb: float = 0.0
+    jobs: int = 0
+    tasks: int = 0
     walls: dict[str, float] = field(default_factory=dict)
     extra: dict[str, float] = field(default_factory=dict)
 
@@ -101,19 +114,24 @@ class Runner:
         self.spark, self.wl, self.data = spark, wl, data
         self.passes: list[Pass] = []
         self.rss = PeakRss(spark)
+        self.cpu = CpuClock(self.rss.jvm_pid)
 
     def one(self, traced: bool = False, verify: bool = False) -> Pass:
         p = Pass(len(self.passes) + 1, traced)
         self.passes.append(p)
         tr = Tracer(self.spark, traced)
         out = None
-        sw0 = shuffle_write_bytes(self.spark)
+        sw0, tk0 = executor_totals(self.spark)
         try:
-            t0 = time.perf_counter()
+            (c0, j0), t0 = self.cpu(), time.perf_counter()
             with pass_tag(self.spark, p.id):
                 out = self.wl.run(self.spark, self.data, tr)
             p.wall = time.perf_counter() - t0
-            p.shuffle_mb = (shuffle_write_bytes(self.spark) - sw0) / (1 << 20)
+            c1, j1 = self.cpu()
+            p.cpu, p.jit_cpu = c1 - c0, j1 - j0
+            sw1, tk1 = executor_totals(self.spark)
+            p.shuffle_mb, p.tasks = (sw1 - sw0) / (1 << 20), tk1 - tk0
+            p.jobs = pass_jobs(self.spark, p.id)
             p.ok = self.wl.check(self.spark, self.data, out)
             if verify:
                 p.ok = self.wl.verify(self.spark, self.data, out) and p.ok
@@ -152,7 +170,23 @@ def med(values, default=0.0) -> float:
     return statistics.median(values) if values else default
 
 
-def layer_metrics(runner: Runner, warm: list, traced: list,
+def pass_metrics(cold: Pass, warm: list) -> dict[str, float]:
+    """Whole-pass values: the cold pass, and the median warm pass."""
+    ok = [p for p in warm if p.ok]
+    return {
+        "jobs_per_pass": med(p.jobs for p in ok),
+        "tasks_per_pass": med(p.tasks for p in ok),
+        "shuffle_write_mb": med(p.shuffle_mb for p in ok),
+        "cold_pass_s": cold.wall,
+        "warm_pass_s": med(p.wall for p in ok),
+        "cold_pass_cpu_s": cold.cpu,
+        "warm_pass_cpu_s": med(p.cpu for p in ok),
+        "jvm.jit_cpu_cold_s": cold.jit_cpu,
+        "jvm.jit_cpu_warm_s": med(p.jit_cpu for p in ok),
+    }
+
+
+def layer_metrics(warm: list, traced: list,
                   session_s: float) -> dict[str, float]:
     """Per-layer values: span walls and workload extras from the traced
     passes, job/stage/task/shuffle/Python counters from the event log."""
@@ -172,8 +206,8 @@ def layer_metrics(runner: Runner, warm: list, traced: list,
         vals[k] = med(p.extra[k] for p in ok if k in p.extra)
     for name, span in SPAN_ALIASES.items():
         vals[name] = vals.get(span, 0.0)
-    t_warm = med(p.wall for p in warm if p.ok)
-    vals["tracing_overhead_s"] = med(p.wall for p in ok) - t_warm
+    vals["tracing_overhead_s"] = (med(p.wall for p in ok)
+                                  - med(p.wall for p in warm if p.ok))
     vals["layer_walls_ratio"] = med(sum(p.walls.values()) / p.wall
                                     for p in ok)
     return vals
@@ -238,24 +272,19 @@ def main(argv=None) -> int:
     passes = runner.passes
     failed = sum(not p.ok for p in passes)
     print("passes: " + " ".join(
-        f"{p.wall:.3f}{'t' if p.traced else ''}{'' if p.ok else '!'}"
+        f"{p.wall:.3f}/{p.cpu:.2f}/{p.jit_cpu:.2f}/{p.jobs}/{p.tasks}"
+        f"{'t' if p.traced else ''}{'' if p.ok else '!'}"
         for p in passes) + f"  staging: {' '.join(f'{s:.3f}' for s in stage_s)}"
           f"  session: {session_s:.3f}  items: {data['items']}"
           f"  rss: jvm {runner.rss.jvm_mb:.0f} MB"
           f" + worker {runner.rss.worker_mb:.0f} MB", file=sys.stderr)
+    vals = {"setup_s": session_s + statistics.median(stage_s),
+            "peak_rss_mb": runner.rss.total_mb, **pass_metrics(cold, warm)}
     if args.trace:
-        vals = layer_metrics(runner, warm, traced, session_s)
+        vals.update(layer_metrics(warm, traced, session_s))
         names = spec["per_layer"]
         print("layers: " + json.dumps(vals, sort_keys=True), file=sys.stderr)
     else:
-        t_warm = med(p.wall for p in warm if p.ok)
-        vals = {
-            "setup_s": session_s + statistics.median(stage_s),
-            "cold_pass_s": cold.wall,
-            "warm_pass_s": t_warm,
-            "peak_rss_mb": runner.rss.total_mb,
-            "shuffle_write_mb": med(p.shuffle_mb for p in warm if p.ok),
-        }
         names = spec["end_to_end"]
     print(json.dumps({
         "correct": failed == 0,

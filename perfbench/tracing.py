@@ -32,6 +32,7 @@ PY_ACCUMS = {
     "data returned from Python workers": "python_recv_mb",
 }
 MB = 1 << 20
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 class Tracer:
@@ -82,24 +83,41 @@ class Tracer:
         self.handles = []
 
 
+def _job_tag(pass_id: int) -> str:
+    return f"perfbench-pass-{pass_id}"
+
+
 @contextmanager
 def pass_tag(spark: SparkSession, pass_id: int):
+    """Tag every job of one pass: a local property for the event log and
+    a job tag for the live status tracker."""
     sc = spark.sparkContext
     sc.setLocalProperty(PASS_PROP, str(pass_id))
+    sc.addJobTag(_job_tag(pass_id))
     try:
         yield
     finally:
+        sc.removeJobTag(_job_tag(pass_id))
         sc.setLocalProperty(PASS_PROP, None)
 
 
-def shuffle_write_bytes(spark: SparkSession) -> int:
-    """Cumulative shuffle bytes written by the (local-mode) executor, from
-    the live status store once the listener bus has drained."""
+def pass_jobs(spark: SparkSession, pass_id: int) -> int:
+    """Spark jobs one pass ran, from the live status tracker."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    return len(jsc.statusTracker().getJobIdsForTag(_job_tag(pass_id)))
+
+
+def executor_totals(spark: SparkSession) -> tuple[int, int]:
+    """Cumulative shuffle bytes written and tasks run by the (local-mode)
+    executor, from the live status store once the listener bus has
+    drained."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty(30_000)
     execs = jsc.statusStore().executorList(True)
-    return sum(execs.apply(i).totalShuffleWrite()
-               for i in range(execs.size()))
+    summaries = [execs.apply(i) for i in range(execs.size())]
+    return (sum(e.totalShuffleWrite() for e in summaries),
+            sum(e.totalTasks() for e in summaries))
 
 
 def _hwm_mb(pid: int) -> float:
@@ -158,6 +176,55 @@ class PeakRss:
     @property
     def total_mb(self) -> float:
         return self.jvm_mb + self.worker_mb
+
+
+def _cpu_s(pid, reaped: bool) -> float:
+    """User + system CPU seconds of a process, plus those of its reaped
+    children if asked; 0 once it is gone."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            f = fh.read().rsplit(")", 1)[1].split()
+        ticks = int(f[11]) + int(f[12])
+        if reaped:
+            ticks += int(f[13]) + int(f[14])
+    except (OSError, IndexError, ValueError):
+        return 0.0
+    return ticks / CLK_TCK
+
+
+def _jit_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds of the JVM's JIT compiler threads."""
+    base = f"/proc/{jvm_pid}/task"
+    try:
+        tids = os.listdir(base)
+    except OSError:
+        return 0.0
+    total = 0.0
+    for tid in tids:
+        try:
+            with open(f"{base}/{tid}/comm") as fh:
+                if "CompilerThre" not in fh.read():
+                    continue
+        except OSError:
+            continue
+        total += _cpu_s(f"{jvm_pid}/task/{tid}", False)
+    return total
+
+
+class CpuClock:
+    """CPU seconds the whole program has used: this driver process, the
+    driver JVM (task threads, JIT compiler, GC) and the JVM's Python
+    workers, and the JIT compiler's part of it.  The kernel leaves out the
+    time the host runs other guests on our vCPUs (steal), which a wall
+    clock counts."""
+
+    def __init__(self, jvm_pid: int):
+        self.jvm_pid = jvm_pid
+
+    def __call__(self) -> tuple[float, float]:
+        total = (_cpu_s(os.getpid(), False) + _cpu_s(self.jvm_pid, True)
+                 + sum(_cpu_s(p, True) for p in descendants(self.jvm_pid)))
+        return total, _jit_cpu_s(self.jvm_pid)
 
 
 def _num(v) -> float:
