@@ -13,16 +13,15 @@ as ONE iterative join→groupBy loop over the whole corpus at once:
   computed once; only bnode→bnode edges join the colour table per round;
 * the A1 neighbourhood fold is repartition + sortWithinPartitions + one
   mapInPandas segmented-numpy fold (the previous colour is unioned in as a
-  message row and sorts into place);
+  message row and sorts into place); a bnode's messages fold batch by
+  batch with a carried accumulator, so per-key memory is O(Arrow batch),
+  not the key's message count — hub bnodes need no special path;
 * components that reach a fixpoint leave the loop (their colours freeze);
 * components whose fixpoint does not discriminate every bnode (automorphic
   residue) are finished by the branch-and-bound kernel from ``canon.local``
   inside one ``applyInPandas`` call per component;
 * order-insensitive hash folds (whole-graph hash, upg graph hash) are
-  per-byte sums mod 256: numpy partial sums per Arrow batch, JVM merge;
-* optional ``salt_buckets`` switches the fold to a range-bucketed
-  collect_list variant that splits a hub bnode's aggregation across
-  buckets (salted repartitioning for skewed hub entities).
+  per-byte sums mod 256, aggregated JVM-side as 16 lane sums.
 
 Scale notes (100 TB / 1000 executors): loop state and message tables
 shuffle on (graph_id, comp, bnode) — high-cardinality, uniform keys; AQE
@@ -40,12 +39,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from blabel_spark.hashing import MIN_LONG, enc_pair, get_hash_family
+from blabel_spark.hashing import enc_pair, get_hash_family
 from blabel_spark.pair_kernels import (
     combine2_pairs_sql,
     combine3_pairs_sql,
     fold_messages,
-    fold_pair_array_udf,
     hash_int_pair_udf_for,
     md5_pair,
     pair_hex,
@@ -427,46 +425,17 @@ def _iteration_messages(static_msgs: DataFrame, bb_edges: DataFrame,
 
 
 def _next_colors(msgs: DataFrame, lab: DataFrame,
-                 salt_buckets: int = 0,
                  lab_rows: int | None = None) -> DataFrame:
     """A1: sort(messages + own previous colour), combineOrdered-fold
     (GraphColouring.java:542-548).  Previous colours are unioned in as
-    message rows and sort into place.
-
-    Default path: repartition+sort + segmented numpy fold (fold_messages).
-    Salted path: range-bucket messages by their leading byte so a hub
-    bnode's collect happens in ``salt_buckets`` balanced groups whose
-    bucket-ordered arrays are re-sorted once per bnode and folded.
+    message rows and sort into place; repartition+sort + segmented numpy
+    fold (fold_messages).
     """
     key = ["ck0", "ck1", "bk0", "bk1"]
     prev_rows = lab.select(*key, F.col("h0").alias("m0"),
                            F.col("h1").alias("m1"),
                            F.lit(True).alias("is_prev"))
     all_msgs = msgs.withColumn("is_prev", F.lit(False)).union(prev_rows)
-    if salt_buckets and salt_buckets > 1:
-        bucket = (F.shiftrightunsigned(
-            F.col("m0").bitwiseXOR(F.lit(MIN_LONG)), 56)
-            * salt_buckets / 256).cast("int")
-        per_bucket = (
-            all_msgs.withColumn("bucket", bucket)
-            .groupBy(*key, "bucket")
-            .agg(F.sort_array(F.collect_list(
-                F.struct(F.col("m0").alias("h0"), F.col("m1").alias("h1"),
-                         F.col("is_prev"))))
-                .alias("arr"))
-        )
-        merged = (
-            per_bucket.groupBy(*key)
-            .agg(F.flatten(F.transform(
-                F.array_sort(F.collect_list(F.struct("bucket", "arr"))),
-                lambda x: x["arr"])).alias("msgs"))
-        )
-        folded = merged.select(
-            *key, fold_pair_array_udf(F.col("msgs")).alias("c"))
-        return folded.select(*key, F.col("c.h0").alias("h0"),
-                             F.col("c.h1").alias("h1"),
-                             F.col("c.oh0").alias("oh0"),
-                             F.col("c.oh1").alias("oh1"))
     # late rounds shrink to a few active components: size the fold's
     # exchange to the known active-bnode count so a small round pays a
     # handful of Python-worker roundtrips instead of the full default
@@ -532,7 +501,6 @@ def _kernel_colors(btri_kernel: DataFrame,
 # ---------------------------------------------------------------------------
 
 DEFAULT_MAX_ITERATIONS = 64
-DEFAULT_SALT_BUCKETS = "auto"
 
 
 def _lazy_checkpoint_ok(spark: SparkSession) -> bool:
@@ -551,21 +519,20 @@ def _lazy_checkpoint_ok(spark: SparkSession) -> bool:
         == "true")
 
 
-def _warn_by_graph_ignores(metrics: dict, checkpoint_dir, max_iterations,
-                           salt_buckets) -> None:
+def _warn_by_graph_ignores(metrics: dict, checkpoint_dir,
+                           max_iterations) -> None:
     """The per-graph kernel route has no mid-fixpoint state, so
     fixpoint-only knobs are inert there.  A run the user believes is
     resumable via ``checkpoint_dir`` is not — say so loudly and record it
     in metrics instead of silently dropping the options.  The non-default
-    tests reference the same DEFAULT_* constants as the canonicalize
-    signature, so a changed default cannot silently drift this check."""
+    test references the same DEFAULT_MAX_ITERATIONS constant as the
+    canonicalize signature, so a changed default cannot silently drift
+    this check."""
     ignored = []
     if checkpoint_dir:
         ignored.append("checkpoint_dir")
     if max_iterations != DEFAULT_MAX_ITERATIONS:
         ignored.append("max_iterations")
-    if salt_buckets not in (DEFAULT_SALT_BUCKETS, 0):
-        ignored.append("salt_buckets")
     if ignored:
         import warnings
         metrics["ignored_options"] = ignored
@@ -579,7 +546,6 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                  dip: bool = True, upg: bool = True,
                  hash_name: str = "md5",
                  max_iterations: int = DEFAULT_MAX_ITERATIONS,
-                 salt_buckets: int | str = DEFAULT_SALT_BUCKETS,
                  route: str = "auto",
                  kernel_graph_rows: int = 100_000,
                  broadcast_rows: int = 2_000_000,
@@ -622,8 +588,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     if hf.n_bytes != 16:
         res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
                                     dip=dip, upg=upg)
-        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations,
-                               salt_buckets)
+        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations)
         return res
     # ONE probe pass serves P6 validation (bnode predicates fail loudly,
     # as in the local oracle) and the routing decision
@@ -644,8 +609,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                                     dip=dip, upg=upg)
         res.metrics.update(metrics)
         res.metrics["t_total_s"] = round(_time.time() - _t0, 3)
-        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations,
-                               salt_buckets)
+        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations)
         return res
 
     tp = term_pair_exprs(hash_name)
@@ -720,29 +684,6 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     # loop-era checkpoints: dead once `leaf` (their last consumer)
     # materializes
     loop_handles = [_ckpt_rdd(static_msgs), _ckpt_rdd(bb_edges)]
-
-    if salt_buckets == "auto":
-        # hub probe: a bnode's per-round fold size == its message count,
-        # and degree ≤ 2 × its graph's rows — when even the biggest graph
-        # is below the salting threshold no bnode can be a hub and the
-        # probe is skipped outright.  Otherwise one aggregation over the
-        # checkpointed edge table decides whether the salted two-stage
-        # fold is worth its extra shuffle — degree-skewed hub entities
-        # are exactly the north_rule's "salted repartitioning" case, and
-        # the decision must not rely on a human noticing the skew.
-        if 2 * biggest < (1 << 17):
-            salt_buckets = 0
-            metrics["max_bnode_degree_bound"] = 2 * biggest
-        else:
-            deg = (static_msgs.select("bk0", "bk1")
-                   .union(bb_edges.select("bk0", "bk1"))
-                   .groupBy("bk0", "bk1")
-                   .agg(F.count("*").alias("n"))
-                   .agg(F.max("n").alias("m")).collect()[0]["m"]) or 0
-            metrics["max_bnode_degree"] = int(deg)
-            salt_buckets = 0 if deg < (1 << 17) else \
-                min(256, int(deg) >> 15)
-    metrics["salt_buckets"] = int(salt_buckets)
 
     CK = ["ck0", "ck1"]
     if restored is not None:
@@ -832,7 +773,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         # the marked convergence table would never truncate and per-round
         # plans double in size; on foreign sessions fall back to an eager
         # (own-job) colour checkpoint, i.e. two jobs per round.
-        new_lab = _next_colors(msgs, lab, salt_buckets, n_lab_rows) \
+        new_lab = _next_colors(msgs, lab, n_lab_rows) \
             .localCheckpoint(not _lazy_checkpoint_ok(spark))
 
         # convergence + refinement audit riding the fold output: the fold

@@ -75,21 +75,29 @@ def label_triples(triples: list[Triple], colors: dict[str, bytes]) -> tuple[Trip
     """Relabel bnodes as SK00<hex> and return the sorted distinct graph
     (GraphColouring.labelBlankNodes, GraphColouring.java:433-451).
 
-    ``colors`` holds exactly the blank nodes, so membership replaces the
-    per-term prefix test; rendered labels are memoized per colour (one
-    .hex() + concat per distinct bnode instead of per occurrence)."""
+    ``colors`` must hold every blank node of ``triples``: a blank node
+    without a colour raises ``KeyError`` instead of passing through
+    unrelabelled.  Labels are rendered once per distinct term (one
+    .hex() + concat per bnode instead of per occurrence)."""
     rendered: dict[str, str] = {}
     pfx = "_:" + BNODE_LABEL_PREFIX
+
+    def relabel(term: str) -> str:
+        c = colors.get(term)
+        if c is not None:
+            return pfx + c.hex()
+        if is_bnode(term):
+            raise KeyError(f"blank node {term} has no colour")
+        return term
+
     out = set()
     for s, p, o in triples:
         ns = rendered.get(s)
         if ns is None:
-            cs = colors.get(s)
-            rendered[s] = ns = s if cs is None else pfx + cs.hex()
+            rendered[s] = ns = relabel(s)
         no = rendered.get(o)
         if no is None:
-            co = colors.get(o)
-            rendered[o] = no = o if co is None else pfx + co.hex()
+            rendered[o] = no = relabel(o)
         out.add((ns, p, no))
     return tuple(sorted(out))
 

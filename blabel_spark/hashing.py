@@ -278,34 +278,6 @@ def combine_ordered_vec(cols: Sequence[np.ndarray]) -> np.ndarray:
     return r
 
 
-def fold_sorted_lists_ordered(lists: Sequence[Sequence[bytes]]) -> list[bytes]:
-    """combineOrdered-fold each (already sorted) list of 16-byte hashes.
-
-    Vectorized over rows: rows are LEFT-padded with zero hashes to the
-    batch max length — a zero prefix is a no-op because the accumulator
-    starts at zero and (0*37)^0 == 0 — then folded column-by-column with
-    uint8 wraparound.  This is the A1 aggregation kernel
-    (GraphColouring.java:542-548) used after Spark's ``sort_array``.
-    """
-    n = len(lists)
-    if n == 0:
-        return []
-    lens = np.fromiter((len(l) for l in lists), dtype=np.int64, count=n)
-    maxlen = int(lens.max()) if n else 0
-    if maxlen == 0:
-        raise ValueError("empty hash list in fold")
-    mat = np.zeros((n, maxlen, HASH_BYTES), dtype=np.uint8)
-    for j, l in enumerate(lists):
-        if len(l):
-            block = np.frombuffer(b"".join(bytes(h) for h in l), dtype=np.uint8)
-            mat[j, maxlen - len(l):, :] = block.reshape(len(l), HASH_BYTES)
-    r = np.zeros((n, HASH_BYTES), dtype=np.uint8)
-    thirty_seven = np.uint8(37)
-    for k in range(maxlen):
-        r = (r * thirty_seven) ^ mat[:, k, :]
-    return [r[j].tobytes() for j in range(n)]
-
-
 def md5_of_utf8_vec(strings: Sequence[str]) -> list[bytes]:
     """Batch md5(utf-8) — hashlib per row (C-speed), Arrow-batched upstream."""
     return [hashlib.md5(s.encode("utf-8")).digest() for s in strings]
@@ -372,24 +344,39 @@ def segmented_fold_ordered(seg_start: np.ndarray,
 
     seg_start: (n,) bool, True where a new segment begins.  Rows within a
     segment must already be in fold order.  Returns (n_segments, 16)
-    folded lanes.  Vectorized via the left-zero-pad trick: segments are
-    scattered into a (n_seg, maxlen, 16) matrix right-aligned, then folded
-    column-by-column with uint8 wraparound.
+    folded lanes.
+
+    Vectorized over segments WITHOUT padding, in jagged-diagonal order:
+    segments are ranked longest first and right-aligned, so at fold step
+    k the segments still folding are exactly ranks [0, c_k) and their
+    rows at that step form one contiguous block.  The Python loop runs
+    once per row of the longest segment and each step touches only real
+    rows — a short segment beside a hub costs its own length, not the
+    hub's.
     """
     n = lanes.shape[0]
-    seg_id = np.cumsum(seg_start) - 1
-    n_seg = int(seg_id[-1]) + 1 if n else 0
     if n == 0:
         return np.zeros((0, HASH_BYTES), dtype=np.uint8)
     starts = np.flatnonzero(seg_start)
-    lens = np.diff(np.append(starts, n))
+    n_seg = len(starts)
+    lens = np.diff(starts, append=n)
     maxlen = int(lens.max())
-    pos = np.arange(n) - starts[seg_id]          # position within segment
-    slot = maxlen - lens[seg_id] + pos           # right-aligned slot
-    mat = np.zeros((n_seg, maxlen, HASH_BYTES), dtype=np.uint8)
-    mat[seg_id, slot, :] = lanes
+    pad = maxlen - lens                          # right-alignment offset
+    order = np.argsort(pad, kind="stable")       # rank → segment
+    rank = np.empty(n_seg, dtype=np.int64)
+    rank[order] = np.arange(n_seg)
+    width = np.cumsum(np.bincount(pad, minlength=maxlen))[:maxlen]
+    off = np.concatenate(([0], np.cumsum(width)))
+    seg_id = np.cumsum(seg_start) - 1
+    step = np.arange(n) - starts[seg_id] + pad[seg_id]
+    packed = np.empty_like(lanes)
+    packed[off[step] + rank[seg_id]] = lanes
     r = np.zeros((n_seg, HASH_BYTES), dtype=np.uint8)
     t37 = np.uint8(37)
-    for k in range(maxlen):
-        r = (r * t37) ^ mat[:, k, :]
-    return r
+    for o, w in zip(off[:-1].tolist(), width.tolist()):
+        acc = r[:w]
+        acc *= t37
+        acc ^= packed[o:o + w]
+    out = np.empty_like(r)
+    out[order] = r
+    return out

@@ -64,12 +64,6 @@ def get_spark(app: str = "blabel-spark", cpus: int | None = None,
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app)
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    # companion JVM UDF jar (murmur3_128 via shaded Guava — see
-    # blabel_spark/jvm/); tiny, so always shipped when present
-    udf_jar = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "jvm", "blabel-udfs.jar")
-    if os.path.exists(udf_jar):
-        builder = builder.config("spark.jars", udf_jar)
     spark = (
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -84,9 +78,13 @@ def get_spark(app: str = "blabel-spark", cpus: int | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # joins: let the planner pick shuffled-hash over sort-merge when a
         # side fits a per-partition hash map (guide §3.1/§9) — removes the
-        # two sorts from every mid-size equi-join; the AQE local-map
-        # threshold bounds the runtime SMJ→SHJ rewrite so a mis-estimated
-        # build side cannot OOM a task (per-partition cap, scale-safe)
+        # two sorts from every mid-size equi-join.  This also enables
+        # STATIC shuffled-hash selection, which trusts the optimizer's size
+        # estimate (build side < autoBroadcastJoinThreshold × shuffle
+        # partitions and 3× smaller than the other side); the AQE
+        # local-map threshold below does not bound that choice — it only
+        # bounds the runtime SMJ→SHJ rewrite, which uses measured
+        # per-partition shuffle sizes
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"))

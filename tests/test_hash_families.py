@@ -36,30 +36,22 @@ def test_murmur3_matches_guava(spark):
             g.hashUnencodedChars(s).toString()
 
 
-def test_jvm_murmur_udf_matches_oracle(spark):
-    """The shaded-Guava Java UDF alternative (blabel_spark/jvm/, shipped
-    on the session classpath by get_spark) must equal the Python oracle
-    bit-exact for every stored pair, and the engine's Arrow path must
-    agree with it."""
+def test_arrow_murmur_pairs_match_oracle(spark):
+    """The engine's Arrow murmur3_128 term hashing must equal the Python
+    oracle bit-exact for every stored pair."""
     from pyspark.sql import functions as F
 
     from blabel_spark.hashing import enc_pair
-    from blabel_spark.pair_kernels import (
-        _try_register_jvm_murmur, murmur128_jvm_pair, term_pair_exprs)
-    assert _try_register_jvm_murmur(), \
-        "companion jar missing from the session classpath"
+    from blabel_spark.pair_kernels import term_pair_exprs
     terms = ["", "a", "_:b0", "<http://ex.org/x>", '"lit"@en',
              "x" * 100, "é世界"]
     df = spark.createDataFrame([(t,) for t in terms], "term string")
-    j0, j1 = murmur128_jvm_pair(F.col("term"))
     a0, a1 = term_pair_exprs("murmur3_128")(F.col("term"))
-    rows = df.select("term", j0.alias("j0"), j1.alias("j1"),
-                     a0.alias("a0"), a1.alias("a1")).collect()
+    rows = df.select("term", a0.alias("a0"), a1.alias("a1")).collect()
     hf = get_hash_family("murmur3_128")
     for r in rows:
-        want = enc_pair(hf.hash_string(r["term"]))
-        assert (r["j0"], r["j1"]) == want, r["term"]
-        assert (r["a0"], r["a1"]) == want, r["term"]
+        assert (r["a0"], r["a1"]) == enc_pair(hf.hash_string(r["term"])), \
+            r["term"]
 
 
 @pytest.mark.parametrize("family", FAMILIES)
@@ -85,10 +77,9 @@ def test_metamorphic_invariance_local(family):
 @pytest.mark.parametrize("family", ["murmur3_128", "sha256"])
 def test_distributed_matches_local(spark, family):
     """The distributed engine under a non-default family must equal the
-    local oracle bit-for-bit (murmur3_128 exercises the JVM-UDF static
-    hashing in the pair fixpoint — or its Arrow fallback when the jar is
-    absent; sha256 exercises the per-graph kernel route for wide
-    digests)."""
+    local oracle bit-for-bit (murmur3_128 exercises the Arrow static
+    hashing in the pair fixpoint; sha256 exercises the per-graph kernel
+    route for wide digests)."""
     from tests.test_distributed_canon import run_distributed
     graphs = {k: FIXTURES[k] for k in sorted(FIXTURES)[:6]}
     out = run_distributed(spark, graphs, hash_name=family)

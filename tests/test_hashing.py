@@ -16,11 +16,11 @@ from blabel_spark.hashing import (
     combine_ordered,
     combine_ordered_vec,
     combine_unordered,
-    fold_sorted_lists_ordered,
     hash_int,
     hash_string,
     hash_unencoded_chars,
     md5_of_utf8_vec,
+    segmented_fold_ordered,
 )
 
 
@@ -83,10 +83,14 @@ def test_vectorized_combine_matches_scalar():
     for j in range(len(rows)):
         assert vec[j].tobytes() == combine_ordered(
             [cols3[0][j], cols3[1][j], cols3[2][j]])
-    # ragged fold (left-zero-pad trick)
-    folded = fold_sorted_lists_ordered(rows)
+    # ragged segmented fold (jagged-diagonal packing)
+    lanes = np.frombuffer(b"".join(h for r in rows for h in r),
+                          dtype=np.uint8).reshape(-1, 16)
+    seg_start = np.zeros(len(lanes), dtype=bool)
+    seg_start[np.cumsum([0] + [len(r) for r in rows[:-1]])] = True
+    folded = segmented_fold_ordered(seg_start, lanes)
     for j, row in enumerate(rows):
-        assert folded[j] == combine_ordered(row)
+        assert folded[j].tobytes() == combine_ordered(row)
 
 
 def test_md5_vec():
@@ -96,19 +100,16 @@ def test_md5_vec():
     assert out[2] == hash_string("üñî")
 
 
-def test_sql_combine_kernels_match_arrow(spark):
+def test_sql_combine_kernels_match_scalar(spark):
     """The whole-stage-codegen combine/unordered kernels must be
-    bit-identical to the Arrow/numpy kernels on random stored pairs."""
+    bit-identical to the scalar references on random stored pairs:
+    combine_ordered per row, combine_unordered per group."""
     import random as _r
 
-    from pyspark.sql import functions as F
-
+    from blabel_spark.hashing import dec_pair, enc_pair
     from blabel_spark.pair_kernels import (
         combine2_pairs_sql,
-        combine2_pairs_udf,
         combine3_pairs_sql,
-        combine3_pairs_udf,
-        unordered_sum_pairs,
         unordered_sum_pairs_sql,
     )
     rng = _r.Random(99)
@@ -117,24 +118,103 @@ def test_sql_combine_kernels_match_arrow(spark):
     df = spark.createDataFrame(
         rows, "a0 long, a1 long, b0 long, b1 long, c0 long, c1 long, "
               "g int").localCheckpoint(True)
-    u3 = combine3_pairs_udf("a0", "a1", "b0", "b1", "c0", "c1")
     s30, s31 = combine3_pairs_sql("a0", "a1", "b0", "b1", "c0", "c1")
-    u2 = combine2_pairs_udf("a0", "a1", "b0", "b1")
     s20, s21 = combine2_pairs_sql("a0", "a1", "b0", "b1")
-    bad = df.select(
-        u3.getField("h0").alias("u0"), u3.getField("h1").alias("u1"),
-        s30.alias("s0"), s31.alias("s1"),
-        u2.getField("h0").alias("v0"), u2.getField("h1").alias("v1"),
-        s20.alias("t0"), s21.alias("t1")) \
-        .where("u0 != s0 or u1 != s1 or v0 != t0 or v1 != t1").count()
-    assert bad == 0
-    a = {tuple(r) for r in unordered_sum_pairs(
-        df, ["g"], "a0", "a1", "o0", "o1",
-        extra_init=(123, -456)).collect()}
-    b = {tuple(r) for r in unordered_sum_pairs_sql(
-        df, ["g"], "a0", "a1", "o0", "o1",
-        extra_init=(123, -456)).collect()}
-    assert a == b
+    got = df.select("*", s30.alias("s30"), s31.alias("s31"),
+                    s20.alias("s20"), s21.alias("s21")).collect()
+    for r in got:
+        a, b, c = (dec_pair(r[f"{x}0"], r[f"{x}1"]) for x in "abc")
+        assert (r["s30"], r["s31"]) == enc_pair(combine_ordered([a, b, c]))
+        assert (r["s20"], r["s21"]) == enc_pair(combine_ordered([a, b]))
+    seed = (123, -456)
+    want: dict[int, list[bytes]] = {}
+    for r in rows:
+        want.setdefault(r[6], [dec_pair(*seed)]).append(dec_pair(r[0], r[1]))
+    agg = unordered_sum_pairs_sql(df, ["g"], "a0", "a1", "o0", "o1",
+                                  extra_init=seed, count_col="n").collect()
+    assert {r["g"]: (r["o0"], r["o1"], r["n"]) for r in agg} == {
+        g: enc_pair(combine_unordered(hs)) + (len(hs) - 1,)
+        for g, hs in want.items()}
+
+
+def _sorted_messages(lens, rng):
+    """Sorted fold input: one segment (key) per entry of ``lens``, rows in
+    (key, m0, m1) order, exactly one is_prev row per segment."""
+    import pandas as pd
+    lens = np.asarray(lens, dtype=np.int64)
+    n = int(lens.sum())
+    seg = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
+    m0 = rng.integers(-2**63, 2**63 - 1, n, dtype=np.int64)
+    m1 = rng.integers(-2**63, 2**63 - 1, n, dtype=np.int64)
+    order = np.lexsort((m1, m0, seg))
+    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    prev = np.zeros(n, dtype=bool)
+    prev[starts + rng.integers(0, lens)] = True
+    return pd.DataFrame({"ck0": np.full(n, 7, dtype=np.int64),
+                         "ck1": seg // 3, "bk0": seg, "bk1": -seg,
+                         "m0": m0[order], "m1": m1[order], "is_prev": prev})
+
+
+def _batches(df, cuts):
+    edges = [0, *sorted(set(cuts)), len(df)]
+    return [df.iloc[a:b].reset_index(drop=True)
+            for a, b in zip(edges, edges[1:])]
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_fold_partition_matches_scalar(seed):
+    """_fold_partition on random segment-length mixes: every segment is
+    combine_ordered of its sorted messages and carries its is_prev row's
+    pair as oh — including a hub spanning ≥ 10 Arrow batches, a batch
+    boundary just after an is_prev row, and an empty batch."""
+    import pandas as pd
+
+    from blabel_spark.hashing import dec_pair, enc_pair
+    from blabel_spark.pair_kernels import _fold_partition
+    rng = np.random.default_rng(seed)
+    batch = 97
+    lens = rng.choice([1, 2, 3, 5, 40, 150], size=120).tolist()
+    lens.insert(int(rng.integers(0, len(lens))), 10 * batch + 13)
+    df = _sorted_messages(lens, rng)
+    n = len(df)
+    cuts = list(range(batch, n, batch))
+    # a boundary right after an is_prev row whose segment goes on
+    prev_rows = np.flatnonzero(df["is_prev"].to_numpy())
+    inner = [i for i in prev_rows[:-1] if df["bk0"][i] == df["bk0"][i + 1]]
+    cuts.append(int(inner[len(inner) // 2]) + 1)
+    parts = _batches(df, cuts)
+    parts.insert(len(parts) // 2, df.iloc[:0])
+    out = pd.concat(list(_fold_partition(iter(parts))), ignore_index=True)
+
+    assert out["bk0"].tolist() == list(range(len(lens)))
+    for r, (_, g) in zip(out.itertuples(), df.groupby("bk0", sort=True)):
+        assert (r.ck0, r.ck1, r.bk1) == (7, r.bk0 // 3, -r.bk0)
+        want = combine_ordered(dec_pair(a, b) for a, b in zip(g.m0, g.m1))
+        assert (r.h0, r.h1) == enc_pair(want)
+        p = g[g.is_prev]
+        assert (r.oh0, r.oh1) == (p.m0.iloc[0], p.m1.iloc[0])
+
+
+def test_fold_partition_memory_is_o_batch():
+    """Folding 20k degree-2 segments plus one 20k-message hub in 5k-row
+    batches peaks below 64x the input lane bytes: no padding to the hub's
+    length and no re-buffering of the hub's raw rows."""
+    import tracemalloc
+
+    from blabel_spark.pair_kernels import _fold_partition
+    lens = [2] * 20_000
+    lens.insert(10_000, 20_000)
+    df = _sorted_messages(lens, np.random.default_rng(0))
+    parts = _batches(df, range(5_000, len(df), 5_000))
+    lane_bytes = 16 * len(df)
+    tracemalloc.start()
+    try:
+        n_out = sum(len(o) for o in _fold_partition(iter(parts)))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert n_out == len(lens)
+    assert peak < 64 * lane_bytes, (peak, lane_bytes)
 
 
 def test_hash_int_pair_sql_matches_scalar(spark):

@@ -194,3 +194,15 @@ def test_components_split():
     assert len(comps) == 2
     assert sorted(comps) == ["_:a", "_:x"]
     assert all(len(v) == 3 for v in comps.values())
+
+
+def test_label_triples_raises_on_uncoloured_bnode():
+    """A blank node missing from the colour map must fail loudly, not
+    leak into the output under its input name."""
+    from blabel_spark.canon.local import label_triples
+    from blabel_spark.hashing import BLANK_HASH
+    trips = [("_:a", "<p>", "_:b"), ("_:a", "<q>", "<c>")]
+    out = label_triples(trips, {"_:a": BLANK_HASH, "_:b": BLANK_HASH})
+    assert all(not t[0].startswith("_:a") for t in out)
+    with pytest.raises(KeyError, match="_:b"):
+        label_triples(trips, {"_:a": BLANK_HASH})
