@@ -4,8 +4,13 @@ Re-expresses the reference's per-graph algorithm (GraphColouring.runColouring,
 GraphColouring.java:463-666 + GraphLabelling.call, GraphLabelling.java:61-192)
 as ONE iterative join→groupBy loop over the whole corpus at once:
 
-* state is a single ``(graph_id, comp, bnode, h0, h1)`` table — one Spark
-  job per iteration, all graphs/components refine simultaneously;
+* routing is per blank-node component, as the reference colours them
+  (HashGraph.blankNodePartition, GraphLabelling.java:155-168): on the
+  auto route a component whose bnode-touching rows fit a task goes
+  straight to the branch-and-bound kernel; only oversized components
+  enter the loop below (``route="fixpoint"`` loops every component);
+* loop state is a single ``(graph_id, comp, bnode, h0, h1)`` table — one
+  Spark job per iteration, all loop components refine simultaneously;
 * every 16-byte colour travels as TWO sign-flipped int64 columns (see
   hashing.py / pair_kernels.py): primitive types end-to-end, numpy kernels
   zero-copy, and signed ordering == the algorithm's hex ordering;
@@ -18,8 +23,8 @@ as ONE iterative join→groupBy loop over the whole corpus at once:
   not the key's message count — hub bnodes need no special path;
 * components that reach a fixpoint leave the loop (their colours freeze);
 * components whose fixpoint does not discriminate every bnode (automorphic
-  residue) are finished by the branch-and-bound kernel from ``canon.local``
-  inside one ``applyInPandas`` call per component;
+  residue) are finished by the same kernel (``canon.local`` inside
+  ``applyInPandas``, many components per group) from blank colours;
 * order-insensitive hash folds (whole-graph hash, upg graph hash) are
   per-byte sums mod 256, aggregated JVM-side as 16 lane sums.
 
@@ -454,11 +459,20 @@ def _next_colors(msgs: DataFrame, lab: DataFrame,
     return fold_messages(all_msgs, parts)
 
 
-def _kernel_colors(btri_kernel: DataFrame,
-                   hash_name: str = "md5") -> DataFrame:
-    """Finish automorphic components with the local branch-and-bound kernel
+def _kernel_colors(btri_kernel: DataFrame, hash_name: str,
+                   n_buckets: int) -> DataFrame:
+    """Colour whole components with the local branch-and-bound kernel
     (GraphColouring.traverse + minimum-leaf selection, GraphColouring.java:
-    137-141,180-253), one applyInPandas group per (graph_id, comp)."""
+    137-141,180-253) from blank colours: task-sized components routed here
+    directly, plus loop components that stalled (automorphic residue,
+    refinement-audit failure) or ran over the round budget.
+
+    Components are hashed into ``n_buckets`` applyInPandas groups and
+    coloured one after another inside each group.  A group per component
+    would pay the grouped-map per-group cost (pandas frames in and out,
+    ~3.5 ms) once per component: on the 1,472 components of a merged
+    sf0.001 graph that measured 5.5-7.3 s against 0.8-1.4 s with 1-64
+    buckets (4-core host)."""
     schema = ("graph_id string, comp string, bnode string, "
               "h0 long, h1 long")
 
@@ -468,32 +482,32 @@ def _kernel_colors(btri_kernel: DataFrame,
         from blabel_spark.hashing import enc_pair, get_hash_family
         hf = get_hash_family(hash_name)
         BH = hf.blank
-        graph_id = pdf["graph_id"].iloc[0]
-        comp = pdf["comp"].iloc[0]
-        triples = sorted(set(zip(pdf["subj"], pdf["pred"], pdf["obj"])))
-        static: dict[str, bytes] = {}
-        colors: dict[str, bytes] = {}
-        for t in triples:
-            for term in t:
-                if is_bnode(term):
-                    colors[term] = BH
-                elif term not in static:
-                    static[term] = hf.hash_string(term)
-        col = _Colouring(triples=triples, static=static, colors=colors,
-                         path=[], leaves={}, colour_iters=[], hf=hf)
-        col.execute()
-        best = min(col.leaves, key=graph_sort_key)
-        leaf = col.leaves[best][0]
-        pairs = [enc_pair(c) for c in leaf.colors.values()]
-        return pd.DataFrame({
-            "graph_id": graph_id, "comp": comp,
-            "bnode": list(leaf.colors.keys()),
-            "h0": [p[0] for p in pairs],
-            "h1": [p[1] for p in pairs],
-        })
+        rows = []
+        for (graph_id, comp), cpdf in pdf.groupby(["graph_id", "comp"],
+                                                  sort=False):
+            triples = sorted(set(zip(cpdf["subj"], cpdf["pred"],
+                                     cpdf["obj"])))
+            static: dict[str, bytes] = {}
+            colors: dict[str, bytes] = {}
+            for t in triples:
+                for term in t:
+                    if is_bnode(term):
+                        colors[term] = BH
+                    elif term not in static:
+                        static[term] = hf.hash_string(term)
+            col = _Colouring(triples=triples, static=static, colors=colors,
+                             path=[], leaves={}, colour_iters=[], hf=hf)
+            col.execute()
+            best = min(col.leaves, key=graph_sort_key)
+            rows.extend((graph_id, comp, b, *enc_pair(c))
+                        for b, c in col.leaves[best][0].colors.items())
+        return pd.DataFrame(rows, columns=["graph_id", "comp", "bnode",
+                                           "h0", "h1"])
 
     return (btri_kernel.select("graph_id", "comp", "subj", "pred", "obj")
-            .groupBy("graph_id", "comp").applyInPandas(run, schema))
+            .withColumn("_b", F.pmod(F.xxhash64("graph_id", "comp"),
+                                     F.lit(n_buckets)))
+            .groupBy("_b").applyInPandas(run, schema))
 
 
 # ---------------------------------------------------------------------------
@@ -566,11 +580,15 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     (≤ ``kernel_graph_rows`` rows — the per-document regime the reference
     always runs in, and the north-star transcript case where one graph is
     one conversation) the corpus is labelled by the per-graph kernel in a
-    single embarrassingly-parallel pass; the distributed pair fixpoint
-    below handles graphs too large for a task and any run that needs
-    mid-fixpoint checkpointing.  Both paths are bit-identical (parity
-    tests assert it); ``route="fixpoint"`` / ``route="by_graph"`` force a
-    path.
+    single embarrassingly-parallel pass.  Otherwise routing is per
+    blank-node component: components with ≤ ``kernel_graph_rows``
+    bnode-touching rows go straight to the component kernel, and only
+    larger ones enter the distributed pair fixpoint (none: no round
+    runs).  ``route="fixpoint"`` and any run with ``checkpoint_dir``
+    send every component through the fixpoint; ``route="by_graph"``
+    forces the per-graph kernel.  All paths are bit-identical (parity
+    tests assert it).  ``metrics`` records the split as
+    ``n_kernel_components`` / ``n_loop_components``.
 
     ``broadcast_rows``: per-component / per-bnode dimension tables whose
     exact counts are known (from actions the loop performs anyway) join
@@ -643,8 +661,41 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     # result (released only by CanonResult.unpersist) vs loop-era state
     # released the moment its last consumer materializes
     result_handles = [_ckpt_rdd(btri), _ckpt_rdd(node_comp)]
-    metrics["bnode_triples"] = btri.count()
+    loop_handles: list = []
     metrics["n_bnodes"] = n_bnodes
+
+    # component-granular routing: the reference colours every blank-node
+    # component on its own (HashGraph.blankNodePartition,
+    # GraphLabelling.java:155-168), so on route="auto" a component whose
+    # bnode-touching rows fit a task (the per-graph rule's ≤) goes straight
+    # to the leaf kernel and only oversized ones pay the per-round loop.
+    # route="fixpoint" and resumable runs loop every component (limit 0:
+    # each component has ≥ 1 row).  ONE size aggregation yields the
+    # bnode-triple count, the component count and the oversized count.
+    CK = ["ck0", "ck1"]
+    comp_rows = btri.groupBy(*CK).agg(F.count("*").alias("n"))
+    limit = (kernel_graph_rows if route == "auto" and checkpoint_dir is None
+             else 0)
+    big = F.col("n") > limit
+    sizes = comp_rows.agg(F.sum("n").alias("rows"),
+                          F.count("*").alias("comps"),
+                          F.count(F.when(big, 1)).alias("big")).collect()[0]
+    metrics["bnode_triples"] = int(sizes["rows"] or 0)
+    n_comps = metrics["n_components"] = int(sizes["comps"])
+    n_loop = metrics["n_loop_components"] = int(sizes["big"])
+    metrics["n_kernel_components"] = n_comps - n_loop
+    kernel_parts: list[DataFrame] = []
+    loop_btri = btri
+    if n_loop < n_comps:
+        if n_loop:
+            big_comps = comp_rows.where(big).select(*CK) \
+                .localCheckpoint(True)
+            loop_handles.append(_ckpt_rdd(big_comps))
+            big_comps = _mb(big_comps, n_loop, broadcast_rows)
+            loop_btri = btri.join(big_comps, CK, "left_semi")
+            kernel_parts.append(btri.join(big_comps, CK, "left_anti"))
+        else:
+            kernel_parts.append(btri)
     metrics["t_prep_s"] = round(_time.time() - _t0, 3)
     _t0 = _time.time()
 
@@ -667,25 +718,34 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     #   when the colour table outgrows broadcast_rows, each round's
     #   shuffle-hash join then exchanges only the (per-bnode, shrinking)
     #   colour table — never this (triple-scale) side.
-    edges_raw = _edge_views(btri, plus_pair, minus_pair)
-    sm0, sm1 = combine3_pairs_sql("ot0", "ot1", "p0", "p1", "mk0", "mk1")
-    static_msgs = (
-        edges_raw.where(F.col("ot0").isNotNull())
-        .drop("ok0", "ok1").dropDuplicates()
-        .select("ck0", "ck1", "bk0", "bk1",
-                sm0.alias("m0"), sm1.alias("m1"))
-    ).localCheckpoint(True)
-    bb_edges = (
-        edges_raw.where(F.col("ot0").isNull())
-        .drop("ot0", "ot1").dropDuplicates()
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                     "ok0", "ok1")
-    ).localCheckpoint(True)
-    # loop-era checkpoints: dead once `leaf` (their last consumer)
-    # materializes
-    loop_handles = [_ckpt_rdd(static_msgs), _ckpt_rdd(bb_edges)]
+    # Both are built from the loop components' rows only, and not at all
+    # when every component went to the kernel.
+    if n_loop:
+        edges_raw = _edge_views(loop_btri, plus_pair, minus_pair)
+        sm0, sm1 = combine3_pairs_sql("ot0", "ot1", "p0", "p1", "mk0", "mk1")
+        static_msgs = (
+            edges_raw.where(F.col("ot0").isNotNull())
+            .drop("ok0", "ok1").dropDuplicates()
+            .select("ck0", "ck1", "bk0", "bk1",
+                    sm0.alias("m0"), sm1.alias("m1"))
+        ).localCheckpoint(True)
+        bb_edges = (
+            edges_raw.where(F.col("ot0").isNull())
+            .drop("ot0", "ot1").dropDuplicates()
+            .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                         "ok0", "ok1")
+        ).localCheckpoint(True)
+        # loop-era checkpoints: dead once `leaf` (their last consumer)
+        # materializes
+        loop_handles += [_ckpt_rdd(static_msgs), _ckpt_rdd(bb_edges)]
 
-    CK = ["ck0", "ck1"]
+    resolved: list[DataFrame] = []
+    active = None  # None = every loop component is active
+    it = 0
+    prev_round = []
+    # round-1 bounds: every loop component starts active (exact); its
+    # colour rows are at most the bnode count (exact after round 1)
+    n_act, n_lab_rows = n_loop, n_bnodes
     if restored is not None:
         it, lab, conv_prev, res_df, kern_df = restored
         metrics["resumed_from_iteration"] = it
@@ -695,8 +755,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         loop_handles.append(_ckpt_rdd(active))
         n_act = conv_prev.count()
         n_lab_rows = lab.count()
-        prev_round = []
-    else:
+    elif n_loop:
         # node_comp already holds exactly one row per (graph, bnode): the
         # initial colour table is pure codegen over it — no distinct
         # exchange over the edge endpoints
@@ -707,22 +766,14 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                              lb0.alias("bk0"), lb1.alias("bk1"))
             .withColumn("h0", F.lit(blank_pair[0]))
             .withColumn("h1", F.lit(blank_pair[1]))
-        ).localCheckpoint(True)
-
+        )
+        if n_loop < n_comps:
+            lab = lab.join(big_comps, CK, "left_semi")
+        lab = lab.localCheckpoint(True)
         conv_prev = lab.groupBy(*CK).agg(F.lit(1).alias("prev_nc"))
         # round 1 is the initial colour table's only consumer: retire it
         # with that round like any other superseded round state
         prev_round = [(_ckpt_rdd(lab), False)]
-        # free upper bound for round-1 broadcast decisions (components ≤
-        # bnodes); the exact count lands in metrics after round 1
-        n_act = n_bnodes
-        n_lab_rows = n_bnodes
-
-        resolved: list[DataFrame] = []
-        kernel_parts: list[DataFrame] = []
-        active = None  # None = every component is active
-        it = 0
-    metrics["n_components"] = n_act
     # per-iteration observability: one entry per round with component
     # status counts and wall times (the "per-partition lineage + metrics"
     # north_rule line, at fixpoint granularity)
@@ -734,7 +785,8 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     # recorded job/stage counts for early rounds (prior runs all have a
     # round N, fewer reach round N+5 — the decaying-counts signature)
     _run_tag = next(_FIXPOINT_SEQ)
-    while True:
+    # n_act > 0 on every entry: a round with no active component breaks
+    while n_act:
         it += 1
         _it_t0 = _time.time()
         # every job this round fires (eager-fallback checkpoint + status
@@ -830,8 +882,6 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         _jinfos = [_st.getJobInfo(j) for j in _jids]
         counts = {r["status"]: int(r["n"]) for r in crows}
         bcounts = {r["status"]: int(r["b"]) for r in crows}
-        if it == 1 and restored is None:
-            metrics["n_components"] = sum(counts.values())
         iter_log.append({"iteration": it,
                          "t_round_s": round(_time.time() - _it_t0, 3),
                          "n_jobs": len(_jids),
@@ -913,7 +963,11 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         kb = kernel_parts[0]
         for p in kernel_parts[1:]:
             kb = kb.union(p)
-        kc = _kernel_colors(kb, hash_name)
+        # about one task-sized component's worth of rows per bucket, and
+        # no fewer buckets than the per-graph kernel route uses
+        kc = _kernel_colors(kb, hash_name, max(
+            4 * int(spark.conf.get("spark.sql.shuffle.partitions")),
+            metrics["bnode_triples"] // max(kernel_graph_rows, 1)))
         c0, c1 = _ikey("graph_id", "comp")
         b0, b1 = _ikey("graph_id", "bnode")
         parts.append(kc.select(c0.alias("ck0"), c1.alias("ck1"),
@@ -935,10 +989,6 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     # table: the edge tables, the initial colours and each round's
     # surviving new_lab/conv blocks all die here
     _release(loop_handles)
-    # per-component broadcast bound: exact after a fresh round 1; on a
-    # resumed run only the still-active count was seen, so fall back to
-    # the safe per-bnode upper bound (components ≤ bnodes)
-    n_comps = metrics["n_components"] if restored is None else n_leaf
     metrics["t_leaf_kernel_s"] = round(_time.time() - _t0, 3)
     _t0 = _time.time()
 

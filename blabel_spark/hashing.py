@@ -29,7 +29,7 @@ All mod-256 arithmetic matches Java's signed-byte overflow semantics
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable
 
 import numpy as np
 
@@ -253,34 +253,6 @@ def to_hex(h: bytes) -> str:
     strings unsigned-lexicographically, i.e. plain ``bytes`` comparison.
     """
     return h.hex()
-
-
-# ---------------------------------------------------------------------------
-# Vectorized kernels (numpy) — used from Arrow-batched pandas UDFs.
-# ---------------------------------------------------------------------------
-
-def _as_matrix(hashes: Sequence[bytes]) -> np.ndarray:
-    """Stack N 16-byte hashes into an (N, 16) uint8 matrix."""
-    return np.frombuffer(b"".join(hashes), dtype=np.uint8).reshape(-1, HASH_BYTES)
-
-
-def combine_ordered_vec(cols: Sequence[np.ndarray]) -> np.ndarray:
-    """Row-wise combineOrdered across K aligned (N,16) uint8 matrices.
-
-    Row j of the result is combine_ordered(cols[0][j], ..., cols[K-1][j]).
-    Used for the per-edge message hash combineOrdered(h_other, h_pred,
-    marker) — one vectorized pass instead of a Python loop per row.
-    """
-    r = np.zeros_like(cols[0])
-    thirty_seven = np.uint8(37)
-    for m in cols:
-        r = (r * thirty_seven) ^ m  # uint8 arithmetic wraps mod 256
-    return r
-
-
-def md5_of_utf8_vec(strings: Sequence[str]) -> list[bytes]:
-    """Batch md5(utf-8) — hashlib per row (C-speed), Arrow-batched upstream."""
-    return [hashlib.md5(s.encode("utf-8")).digest() for s in strings]
 
 
 # ---------------------------------------------------------------------------

@@ -196,11 +196,18 @@ def test_cc_kernel_and_iterative_paths_agree(spark):
     assert a == b
 
 
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_auto_route_matches_fixpoint(spark):
     """Size-based routing: a small-graph corpus goes through the
     per-graph kernel (reference per-document regime) and must be
-    bit-identical to the distributed fixpoint; over-threshold corpora
-    route to the fixpoint."""
+    bit-identical to the distributed fixpoint.  A tiny threshold sends
+    the graphs to component routing: components with at most 2 rows
+    (the duplicate pair of iso-partitions among them) go straight to the
+    component kernel, the rest loop (the automorphic ones then stall
+    into the same kernel), again bit-identical."""
     from blabel_spark.canon.distributed import canonicalize
     graphs = dict(FIXTURES)
     rows = [(g, s, p, o) for g, trips in graphs.items()
@@ -210,13 +217,70 @@ def test_auto_route_matches_fixpoint(spark):
     auto = canonicalize(spark, df)
     assert auto.metrics.get("mode") == "by_graph", auto.metrics
     fix = canonicalize(spark, df, route="fixpoint")
-    assert sorted(map(tuple, auto.labelled.collect())) == \
-        sorted(map(tuple, fix.labelled.collect()))
-    assert sorted(map(tuple, auto.labels.collect())) == \
-        sorted(map(tuple, fix.labels.collect()))
-    # forcing a tiny threshold routes to the fixpoint
+    m = fix.metrics
+    assert m["n_kernel_components"] == 0, m
+    assert m["n_loop_components"] == m["n_components"] > 0, m
+    want_labelled, want_labels = (_sorted_rows(fix.labelled),
+                                  _sorted_rows(fix.labels))
+    assert _sorted_rows(auto.labelled) == want_labelled
+    assert _sorted_rows(auto.labels) == want_labels
     small = canonicalize(spark, df, kernel_graph_rows=2)
-    assert "mode" not in small.metrics
+    m = small.metrics
+    assert "mode" not in m
+    assert m["n_kernel_components"] > 0 and m["n_loop_components"] > 0, m
+    assert m["n_kernel_components"] + m["n_loop_components"] \
+        == m["n_components"]
+    assert _sorted_rows(small.labelled) == want_labelled
+    assert _sorted_rows(small.labels) == want_labels
+
+
+def _giant_graph(spark, n_chains: int = 6):
+    """ONE graph of many small components and a few deep ones: the
+    sf0.001 derived triples (bnodes scoped by their source graph, so its
+    components keep at most 17 rows) plus ``n_chains`` 26-row bnode
+    chains, all under graph_id "giant"."""
+    from pyspark.sql import functions as F
+
+    from blabel_spark.canon.distributed import is_bnode_col
+    from blabel_spark.ops.triples_view import build_triples
+    from blabel_spark.synthetic import chain
+
+    def scoped(c):
+        return F.when(is_bnode_col(c), F.concat(
+            F.lit("_:"), F.col("graph_id"), F.lit("."),
+            F.expr(f"substring({c}, 3)"))).otherwise(F.col(c)).alias(c)
+    sf = build_triples(spark, "/root/testdata/sf0.001") \
+        .select(F.lit("giant").alias("graph_id"), scoped("subj"), "pred",
+                scoped("obj"))
+    chains = spark.createDataFrame(
+        [("giant", s, p, o) for i in range(n_chains)
+         for s, p, o in chain(26, tag=f"c{i}_")],
+        "graph_id string, subj string, pred string, obj string")
+    return sf.union(chains).localCheckpoint(True)
+
+
+def test_giant_graph_component_routing(spark):
+    """One giant graph of task-sized components plus a few deep chains:
+    with the threshold between them, exactly the chains enter the loop
+    and everything else goes straight to the component kernel.  Labels
+    and labelled triples are bit-exact against the per-graph kernel and
+    the loop-everything fixpoint."""
+    from blabel_spark.canon.distributed import canonicalize
+    n_chains = 6
+    df = _giant_graph(spark, n_chains)
+    res = canonicalize(spark, df, kernel_graph_rows=20)
+    m = res.metrics
+    assert "mode" not in m
+    assert m["n_loop_components"] == n_chains, m
+    assert m["n_kernel_components"] == m["n_components"] - n_chains > 0, m
+    first = m["iterations_log"][0]
+    assert sum(first.get(f"n_{k}", 0) for k in
+               ("active", "discrete", "stalled")) == n_chains, first
+    got = (_sorted_rows(res.labelled), _sorted_rows(res.labels))
+    for route in ("by_graph", "fixpoint"):
+        ref = canonicalize(spark, df, route=route)
+        assert got == (_sorted_rows(ref.labelled),
+                       _sorted_rows(ref.labels)), route
 
 
 def test_by_graph_pathological_graph_reported_not_fatal(spark):

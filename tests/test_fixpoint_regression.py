@@ -20,14 +20,16 @@ GraphColouring.java:463-666.
 from __future__ import annotations
 
 
-def _chain_corpus(spark, n_chains: int = 40, length: int = 12):
+def _chain_corpus(spark, n_chains: int = 40, length: int = 12,
+                  graph_id: str | None = None):
     """Directed bnode chains force ~length/2 refinement rounds with every
     component staying active until the simultaneous final round — rounds
-    2..N-1 are structurally identical, so any plan growth is the bug."""
+    2..N-1 are structurally identical, so any plan growth is the bug.
+    One graph per chain, or all chains in ``graph_id``."""
     from blabel_spark.synthetic import chain
     rows = []
     for i in range(n_chains):
-        rows.extend((f"c{i}", s, p, o)
+        rows.extend((graph_id or f"c{i}", s, p, o)
                     for s, p, o in chain(length, tag=f"c{i}_"))
     return spark.createDataFrame(
         rows, "graph_id string, subj string, pred string, obj string"
@@ -89,6 +91,43 @@ def test_loop_retains_o1_checkpoints_and_unpersist(spark):
     assert len(left) <= 1, (
         f"unpersist left {len(left)} RDDs behind")
     # the result is no longer usable after unpersist — that's documented
+
+
+def test_all_small_auto_route_builds_no_loop_state(spark, monkeypatch):
+    """Component routing with no oversized component: one graph above the
+    per-graph threshold whose chains each fit a task runs no round and
+    checkpoints no loop-era table (static messages, bnode→bnode edges,
+    initial colours, round state); the result rides on btri, the node
+    table and the final labels only, and ``unpersist`` releases them."""
+    from blabel_spark.canon import distributed as D
+    made = []
+
+    def ckpt_rdd(df):
+        made.append(df)
+        return real(df)
+    real = D._ckpt_rdd
+    monkeypatch.setattr(D, "_ckpt_rdd", ckpt_rdd)
+
+    def persistent_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    before = persistent_ids()
+    tri = _chain_corpus(spark, graph_id="g")
+    res = D.canonicalize(spark, tri, kernel_graph_rows=100)
+    m = res.metrics
+    assert "mode" not in m, m
+    assert (m["n_loop_components"], m["n_kernel_components"]) == (0, 40), m
+    assert m["colour_iterations"] == 0 and m["iterations_log"] == []
+    assert res.labels.count() == 40 * 13
+    # btri, node table, leaf colours, comp mux, final labels — the leaf
+    # and mux tables are released once the final labels materialize
+    assert len(made) == 5, made
+    ours = persistent_ids() - before
+    assert len(ours) <= 4, f"retained {len(ours)} RDDs (input + 3)"
+    res.unpersist(blocking=True)
+    left = persistent_ids() - before
+    assert len(left) <= 1, f"unpersist left {len(left)} RDDs behind"
 
 
 def test_eager_fallback_parity_and_flat_plans(spark, monkeypatch):

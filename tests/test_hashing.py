@@ -6,6 +6,8 @@ test_local_canon.py; here we pin the primitive kernels and the vectorized
 numpy variants against the scalar ones.
 """
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -14,12 +16,11 @@ from blabel_spark.hashing import (
     MINUS,
     PLUS,
     combine_ordered,
-    combine_ordered_vec,
     combine_unordered,
+    get_hash_family,
     hash_int,
     hash_string,
     hash_unencoded_chars,
-    md5_of_utf8_vec,
     segmented_fold_ordered,
 )
 
@@ -74,15 +75,6 @@ def test_vectorized_combine_matches_scalar():
     rng = np.random.RandomState(7)
     rows = [[bytes(rng.randint(0, 256, 16, dtype=np.uint8))
              for _ in range(rng.randint(1, 9))] for _ in range(200)]
-    # combine_ordered_vec: aligned columns
-    cols3 = [[r[0] for r in rows], [r[-1] for r in rows],
-             [r[len(r) // 2] for r in rows]]
-    mats = [np.frombuffer(b"".join(c), dtype=np.uint8).reshape(-1, 16)
-            for c in cols3]
-    vec = combine_ordered_vec(mats)
-    for j in range(len(rows)):
-        assert vec[j].tobytes() == combine_ordered(
-            [cols3[0][j], cols3[1][j], cols3[2][j]])
     # ragged segmented fold (jagged-diagonal packing)
     lanes = np.frombuffer(b"".join(h for r in rows for h in r),
                           dtype=np.uint8).reshape(-1, 16)
@@ -94,10 +86,11 @@ def test_vectorized_combine_matches_scalar():
 
 
 def test_md5_vec():
-    out = md5_of_utf8_vec(["", "abc", "üñî"])
-    assert out[0] == BLANK_HASH
-    assert out[1] == hash_string("abc")
-    assert out[2] == hash_string("üñî")
+    """The md5 family's term hash is md5 of the UTF-8 bytes."""
+    h = get_hash_family("md5").hash_string
+    assert h("") == BLANK_HASH
+    assert h("abc") == hash_string("abc")
+    assert h("üñî") == hashlib.md5("üñî".encode("utf-8")).digest()
 
 
 def test_sql_combine_kernels_match_scalar(spark):

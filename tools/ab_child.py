@@ -8,8 +8,14 @@ Classes:
             machinery benchmark; graphs are tiny so route must be forced)
   fixpoint  forced distributed fixpoint over the derived sf-dir corpus
             (prep + 1-2 rounds + mux tail; t_mux is the tail metric)
+  giant     ONE graph: the sf0.001 derived triples (bnodes scoped by source
+            graph, components of at most 17 rows) plus AB_CHAINS x 26-row
+            chains, route="auto" with kernel_graph_rows=20 — component
+            routing sends the chains to the loop and the rest to the
+            kernel (the test_giant_graph_component_routing fixture)
 
-Env: AB_CPUS (32), AB_CHAINS (4000), AB_SF_DIR (/root/testdata/sf0.1).
+Env: AB_CPUS (32), AB_CHAINS (4000 for deep, 6 for giant), AB_SF_DIR
+(/root/testdata/sf0.1).
 A smaller warm-up pass of the same class runs first so JIT/session warmup
 never lands in the timed window (the round-2 protocol).
 """
@@ -89,6 +95,46 @@ elif klass == "fixpoint":
            "t_leaf_kernel_s": res.metrics["t_leaf_kernel_s"],
            "t_comp_mux_s": res.metrics["t_comp_mux_s"],
            "t_mux_s": res.metrics["t_mux_s"],
+           "labels_md5": labels_md5(res)}
+elif klass == "giant":
+    from pyspark.sql import functions as F
+
+    from blabel_spark.ops.triples_view import build_triples
+    from blabel_spark.synthetic import chain
+
+    def scoped(c):
+        return F.when(F.col(c).startswith("_:"), F.concat(
+            F.lit("_:"), F.col("graph_id"), F.lit("."),
+            F.expr(f"substring({c}, 3)"))).otherwise(F.col(c)).alias(c)
+
+    def build(n_chains):
+        sf = build_triples(spark, "/root/testdata/sf0.001") \
+            .select(F.lit("giant").alias("graph_id"), scoped("subj"),
+                    "pred", scoped("obj"))
+        chains = spark.createDataFrame(
+            [("giant", s, p, o) for i in range(n_chains)
+             for s, p, o in chain(26, tag=f"c{i}_")],
+            "graph_id string, subj string, pred string, obj string")
+        df = sf.union(chains).localCheckpoint(True)
+        df.count()
+        return df
+
+    warm = build(2)
+    noop(canonicalize(spark, warm, kernel_graph_rows=20).labelled)
+
+    giant = build(int(os.environ.get("AB_CHAINS", "6")))
+    n = giant.count()
+    t0 = time.time()
+    res = canonicalize(spark, giant, kernel_graph_rows=20)
+    noop(res.labelled)
+    wall = round(time.time() - t0, 3)
+    out = {"class": "giant", "n_triples": n, "wall_s": wall,
+           "triples_per_sec": round(n / wall, 1),
+           "iters": res.metrics["colour_iterations"],
+           "n_loop_components": res.metrics.get("n_loop_components"),
+           "t_prep_s": res.metrics["t_prep_s"],
+           "t_loop_s": res.metrics["t_loop_s"],
+           "t_leaf_kernel_s": res.metrics["t_leaf_kernel_s"],
            "labels_md5": labels_md5(res)}
 else:
     raise SystemExit(f"unknown class {klass}")
