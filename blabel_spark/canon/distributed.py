@@ -37,6 +37,7 @@ component diameter, not corpus size.
 
 from __future__ import annotations
 
+import time as _time
 from dataclasses import dataclass, field
 from itertools import count as _itercount
 
@@ -44,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blabel_spark import ckpt_util
 from blabel_spark.hashing import enc_pair, get_hash_family
 from blabel_spark.pair_kernels import (
     combine2_pairs_sql,
@@ -80,21 +82,16 @@ def _mb(df: DataFrame, n_rows: int | None, limit: int) -> DataFrame:
     return df
 
 
-# checkpoint-release helpers live in blabel_spark.ckpt_util (shared with
-# ops.dedup's cluster loop — ADVICE r5); the private aliases remain the
-# names this module's call sites and tests use
-from blabel_spark.ckpt_util import ckpt_rdd as _ckpt_rdd  # noqa: E402
-from blabel_spark.ckpt_util import release as _release  # noqa: E402
-
-
 @dataclass
 class CanonResult:
+    """A canonicalization.  ``_retained`` holds the checkpoint handles the
+    run's ``ckpt_util`` scope kept because labelled/labels read them
+    (btri, the CC node table, the per-bnode labels; by_graph: its output
+    table); an enclosing scope also holds them and releases them on exit.
+    """
     labelled: DataFrame         # (graph_id, subj, pred, obj) canonical
     labels: DataFrame           # (graph_id, bnode, label)
     metrics: dict = field(default_factory=dict)
-    # checkpoint RDD handles still backing labelled/labels (btri, the CC
-    # node table, the per-bnode label table).  Intermediates superseded
-    # during the run are released before the result is returned.
     _retained: list = field(default_factory=list, repr=False)
 
     def unpersist(self, blocking: bool = False) -> None:
@@ -102,16 +99,10 @@ class CanonResult:
         Call once ``labelled``/``labels`` have been consumed (written or
         collected) — afterwards they can no longer be recomputed.  The
         session-hygiene hook for long-lived sessions running many
-        corpora: without it each finished canonicalize keeps
-        corpus-scale state in the block manager until a driver full-GC
-        lets the ContextCleaner collect it."""
-        for h in self._retained:
-            if h is None:
-                continue
-            try:
-                h.unpersist(blocking)
-            except Exception:  # pragma: no cover
-                pass
+        corpora outside a ``ckpt_util.scope()``: without it each finished
+        canonicalize keeps corpus-scale state in the block manager until
+        a driver full-GC lets the ContextCleaner collect it."""
+        ckpt_util.release(self._retained, blocking)
         self._retained = []
 
 
@@ -158,9 +149,9 @@ def _cc_kernel(btri: DataFrame) -> DataFrame:
             rows.extend((g, n, m) for n in members)
         return pd.DataFrame(rows, columns=["graph_id", "bnode", "comp"])
 
-    return (btri.select("graph_id", "subj", "obj")
-            .groupBy("graph_id").applyInPandas(run, schema)
-            .localCheckpoint(True))
+    return ckpt_util.checkpoint(
+        btri.select("graph_id", "subj", "obj")
+        .groupBy("graph_id").applyInPandas(run, schema))
 
 
 def bnode_components(btri: DataFrame, max_iter: int = 64,
@@ -213,20 +204,13 @@ def bnode_components(btri: DataFrame, max_iter: int = 64,
                 ko0.alias("b0"), ko1.alias("b1"))
         .distinct()
     )
-    sym = edges.union(edges.select(F.col("b0").alias("a0"),
-                                   F.col("b1").alias("a1"),
-                                   F.col("a0").alias("b0"),
-                                   F.col("a1").alias("b1")))
-    sym = sym.localCheckpoint(True)
-    sym_h = _ckpt_rdd(sym)
-
-    comp = nodes.withColumn("comp", F.col("bnode")).localCheckpoint(True)
-    # each round's state supersedes the previous round's checkpoint the
-    # moment the changed-count job materializes it — release superseded
-    # blocks immediately so the loop retains O(1) tables, not O(rounds)
-    prev_h = _ckpt_rdd(comp)
-    pk0, pk1 = _ikey("graph_id", "comp")
-    try:
+    with ckpt_util.scope() as held:
+        sym = ckpt_util.checkpoint(edges.union(edges.select(
+            F.col("b0").alias("a0"), F.col("b1").alias("a1"),
+            F.col("a0").alias("b0"), F.col("a1").alias("b1"))))
+        comp = ckpt_util.checkpoint(
+            nodes.withColumn("comp", F.col("bnode")))
+        pk0, pk1 = _ikey("graph_id", "comp")
         for _ in range(max_iter):
             # pointer doubling fused into the propagation join: besides the
             # real (symmetric) edges, every node contributes a virtual edge
@@ -246,7 +230,7 @@ def bnode_components(btri: DataFrame, max_iter: int = 64,
             # lazy checkpoint + one action: the changed-count job materializes
             # the round's state and truncates lineage — one job per round,
             # not an eager-checkpoint job plus a count job
-            new = (
+            new = ckpt_util.checkpoint(
                 comp.join(nbr_min, on=[comp.k0 == nbr_min.b0,
                                        comp.k1 == nbr_min.b1], how="left")
                 .select("graph_id", "bnode", "k0", "k1",
@@ -254,22 +238,15 @@ def bnode_components(btri: DataFrame, max_iter: int = 64,
                         .alias("comp"),
                         (F.col("comp") != F.least(
                             "comp", F.coalesce("nbr_comp", "comp")))
-                        .alias("changed"))
-            ).localCheckpoint(False)
+                        .alias("changed")), eager=False)
             n_changed = new.where("changed").count()
-            _release([prev_h])
-            prev_h = _ckpt_rdd(new)
+            # the count materialized `new`: the previous round's state is
+            # dead (O(1) retained tables, not O(rounds))
+            held.release(comp)
             comp = new.drop("changed")
             if n_changed == 0:
-                # the final comp table stays (it IS the return value); only
-                # the edge table dies with the loop
-                _release([sym_h])
+                held.keep(comp)   # the return value; sym dies with the scope
                 return comp.drop("k0", "k1")
-    except BaseException:
-        # non-convergence (or any mid-loop failure) must not leak the
-        # edge/round checkpoint blocks (ADVICE r5)
-        _release([sym_h, prev_h])
-        raise
     raise RuntimeError(
         f"bnode_components failed to converge in {max_iter} rounds — "
         "input graph pathologically deep or corrupted")
@@ -556,6 +533,7 @@ def _warn_by_graph_ignores(metrics: dict, checkpoint_dir,
             f"ignored (pass route='fixpoint' to force the resumable path)",
             stacklevel=3)
 
+
 def canonicalize(spark: SparkSession, triples: DataFrame, *,
                  dip: bool = True, upg: bool = True,
                  hash_name: str = "md5",
@@ -596,7 +574,6 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     falls back to the co-partitioned exchange.  2M rows ≈ 100-300 MB
     broadcast, safe for ordinary executors; tune down for small ones.
     """
-    import time as _time
     _t0 = _time.time()
     metrics: dict = {}
     # F2 hash-family selection (-s, LabelRDFGraph.java:150-161): any
@@ -632,8 +609,6 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
 
     tp = term_pair_exprs(hash_name)
     blank_pair = enc_pair(hf.blank)
-    plus_pair = enc_pair(hf.plus)
-    minus_pair = enc_pair(hf.minus)
     # duplicate-mux digest: pure codegen for md5 (hash_int_pair_sql),
     # Arrow UDF only for the non-default 16-byte families
     if hash_name == "md5":
@@ -654,16 +629,215 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     # the kernels normalize their groups to sets, and the labelled output
     # is dropDuplicates'd
     triples = triples.select(*TRIPLE_COLS)
-    btri, ground, node_comp, n_bnodes = _prepare_bnode_triples(
-        triples, tp, broadcast_rows, graph_rows_bound=biggest)
-    btri = btri.localCheckpoint(True)
-    # checkpoint-block bookkeeping: handles whose blocks back the FINAL
-    # result (released only by CanonResult.unpersist) vs loop-era state
-    # released the moment its last consumer materializes
-    result_handles = [_ckpt_rdd(btri), _ckpt_rdd(node_comp)]
-    loop_handles: list = []
-    metrics["n_bnodes"] = n_bnodes
+    with ckpt_util.scope() as run:
+        btri, ground, node_comp, n_bnodes = _prepare_bnode_triples(
+            triples, tp, broadcast_rows, graph_rows_bound=biggest)
+        btri = ckpt_util.checkpoint(btri)
+        metrics["n_bnodes"] = n_bnodes
+        # loop-era state dies once leaf, its last consumer, materializes
+        with ckpt_util.scope() as loop:
+            leaf, n_leaf = _leaf_colours(
+                loop, spark, btri, node_comp, n_bnodes, metrics, _t0,
+                hash_name, route, kernel_graph_rows, broadcast_rows,
+                checkpoint_dir, checkpoint_every, max_iterations)
+            if leaf is None:
+                # bnode-free corpus: the result reads none of our state
+                return CanonResult(
+                    triples.dropDuplicates(), spark.createDataFrame(
+                        [], "graph_id string, bnode string, label string"),
+                    metrics)
+            loop.keep(leaf)
+        n_comps = metrics["n_components"]
+        _t0 = _time.time()
 
+        # ---- per-component canonical hash + mux (GraphColouring.java:121-168,
+        # GraphLabelling.java:100-119) ----------------------------------------
+        # btrij: triple hash columns decorated with their endpoints' leaf
+        # colours, joined on interned long keys — all fixed-width longs, no
+        # strings; consumed once by the per-triple hash below.  leaf is
+        # per-bnode (≪ triples): broadcast when it fits so the decoration is
+        # map-side and btri is never re-exchanged — the distributed analogue
+        # of GraphColouring.labelBlankNodes's O(triples) single pass over an
+        # in-memory colour map (GraphColouring.java:433-451); above
+        # broadcast_rows both joins fall back to shuffles.
+        slab = _mb(
+            leaf.select(F.col("bk0").alias("_s0"), F.col("bk1").alias("_s1"),
+                        F.col("h0").alias("sc0"), F.col("h1").alias("sc1")),
+            n_leaf, broadcast_rows)
+        olab = _mb(
+            leaf.select(F.col("bk0").alias("_o0"), F.col("bk1").alias("_o1"),
+                        F.col("h0").alias("oc0"), F.col("h1").alias("oc1")),
+            n_leaf, broadcast_rows)
+        btrij = (
+            btri
+            .join(slab, on=[btri.ks0 == slab._s0, btri.ks1 == slab._s1],
+                  how="left").drop("_s0", "_s1")
+            .join(olab, on=[btri.ko0 == olab._o0, btri.ko1 == olab._o1],
+                  how="left").drop("_o0", "_o1")
+            .select("graph_id", "ck0", "ck1", "p0", "p1", "ss0", "ss1",
+                    "os0", "os1", "sc0", "sc1", "oc0", "oc1")
+        )
+
+        tm0, tm1 = combine3_pairs_sql(
+            F.coalesce("sc0", "ss0"), F.coalesce("sc1", "ss1"),
+            F.col("p0"), F.col("p1"),
+            F.coalesce("oc0", "os0"), F.coalesce("oc1", "os1"))
+        # per-triple hash rows, deduplicated (set semantics; distinct triples
+        # have distinct (t0, t1) because leaf colours are injective, so this
+        # 4-long dropDuplicates IS triple dedup, far narrower than shuffling
+        # the string triples).  This one exchange is the tail's structural
+        # minimum: a pre-keyed single-exchange variant (repartition on
+        # (ck0, ck1) feeding both the distinct and the fold) measured a
+        # consistent +13% REGRESSION in an interleaved A/B at sf0.1 — the
+        # fold's second exchange is already collapsed by partial aggregation
+        # (per-partition lane sums ≈ n_comps × n_partitions rows at any
+        # scale), so the explicit keying only forfeits map-side dedup and the
+        # balanced 4-key hash (BENCH.md round 5).
+        th = btrij.select("ck0", "ck1", tm0.alias("t0"), tm1.alias("t1")) \
+            .dropDuplicates()
+        cd0, cd1 = _ikey("graph_id", "comp")
+        # ONE aggregation over the per-bnode comp table yields BOTH the
+        # (graph_id, comp) decode dictionary AND the component's bnode count
+        # (the groupBy is the distinct) — replaces a distinct + a separate
+        # leaf-side sizes aggregation + their two broadcast joins with one
+        comp_sizes = (node_comp.groupBy("graph_id", "comp")
+                      .agg(F.count("*").alias("nb"))
+                      .withColumn("ck0", cd0).withColumn("ck1", cd1))
+        # the component hash fold also emits the component's triple count
+        # (nt) from the same two passes — no separate aggregation over th
+        ghc = unordered_sum_pairs_sql(th, ["ck0", "ck1"], "t0", "t1",
+                                      "g0", "g1", extra_init=blank_pair,
+                                      count_col="nt") \
+            .join(_mb(comp_sizes, n_comps, broadcast_rows), ["ck0", "ck1"])
+
+        # duplicate-component key: with set-semantic input (deduped above) and
+        # injective leaf colours, (g0, g1) is the unordered fold over the
+        # component's exact distinct labelled triple set — the distributed
+        # analogue of the oracle's graphs_seen TreeSet equality
+        # (GraphLabelling.java:100-119); (nt, nb) guard the astronomically
+        # rare md5 digest collision between non-isomorphic components
+        dup_w = Window.partitionBy("graph_id", "g0", "g1", "nt", "nb") \
+                      .orderBy("comp")
+        comp_mux = ckpt_util.checkpoint(
+            ghc
+            .withColumn("rank", F.row_number().over(dup_w))
+            # duplicate mux ints: first copy 0, then count+1 = 2, 3, ...
+            # (GraphLabelling.java:100-119 passing count+1 to
+            # getCanonicalGraph)
+            .withColumn("mux_i",
+                        F.when(F.col("rank") == 1, F.lit(0))
+                        .otherwise(F.col("rank")) if dip else F.lit(0))
+            .withColumn("contributes",
+                        F.lit(True) if dip else (F.col("rank") == 1))
+            .withColumns(dict(zip(("mx0", "mx1"), mx_exprs(F.col("mux_i")))))
+            .select("graph_id", "ck0", "ck1", "contributes",
+                    *(c.alias(n) for c, n in zip(combine2_pairs_sql(
+                        "g0", "g1", F.col("mx0"), F.col("mx1")),
+                        ("cb0", "cb1")))))
+        metrics["t_comp_mux_s"] = round(_time.time() - _t0, 3)
+        _t0 = _time.time()
+
+        # ---- upg: graph-level unique hash (GraphLabelling.java:137-150),
+        # merged into the per-component mux table so every downstream
+        # consumer needs ONE compact join + ONE combine3
+        # (combine2(combine2(h,cb),gh) == combine3(h,cb,gh), identical lane
+        # arithmetic) -------------------------------------------------------
+        if upg:
+            gs0, gs1 = tp(F.col("subj"))
+            gp0, gp1 = tp(F.col("pred"))
+            go0, go1 = tp(F.col("obj"))
+            gm0, gm1 = combine3_pairs_sql("a0", "a1", "b0", "b1", "c0", "c1")
+            ground_th = (ground.select(
+                "graph_id", gs0.alias("a0"), gs1.alias("a1"),
+                gp0.alias("b0"), gp1.alias("b1"),
+                go0.alias("c0"), go1.alias("c1"))
+                .select("graph_id", gm0.alias("t0"), gm1.alias("t1"))
+                .dropDuplicates())
+            comb_h = comp_mux.where("contributes").select(
+                "graph_id", F.col("cb0").alias("t0"), F.col("cb1").alias("t1"))
+            ghash = unordered_sum_pairs_sql(ground_th.union(comb_h),
+                                            ["graph_id"], "t0", "t1",
+                                            "gh0", "gh1",
+                                            extra_init=blank_pair)
+            # per-graph table, rows ≤ n_components
+            mux = comp_mux.join(_mb(ghash, n_comps, broadcast_rows),
+                                "graph_id") \
+                .select("ck0", "ck1", "cb0", "cb1", "gh0", "gh1")
+
+            def final_pair(h0, h1):
+                return combine3_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"),
+                                          F.col("gh0"), F.col("gh1"))
+        else:
+            mux = comp_mux.select("ck0", "ck1", "cb0", "cb1")
+
+            def final_pair(h0, h1):
+                return combine2_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"))
+
+        # final per-bnode label: ONE final_pair fold over the per-bnode leaf
+        # table — the final colour is a pure function of (leaf colour,
+        # component mux row), so computing it per triple occurrence (as a
+        # fused in-row relabel would) repeats the same fold once per edge
+        fc0, fc1 = final_pair(F.col("h0"), F.col("h1"))
+        leaf_final = ckpt_util.checkpoint(
+            leaf.join(_mb(mux, n_comps, broadcast_rows), ["ck0", "ck1"])
+            .select("bk0", "bk1",
+                    F.concat(F.lit("_:SK00"), pair_hex(fc0, fc1))
+                    .alias("label")))
+        # leaf_final (just materialized) supersedes both the raw leaf
+        # colours and the per-component mux table — release them; the
+        # result now rides on exactly three checkpoints: btri, node_comp,
+        # leaf_final
+        run.release(leaf, comp_mux)
+        # bnode decode dictionary: the CC node table already holds one row
+        # per distinct (graph, bnode) and is checkpointed — attach keys by
+        # codegen, no extra distinct shuffle
+        dk0, dk1 = _ikey("graph_id", "bnode")
+        bnode_dict = node_comp.select("graph_id", "bnode",
+                                      dk0.alias("bk0"), dk1.alias("bk1"))
+        labels = (leaf_final
+                  .join(_mb(bnode_dict, n_bnodes, broadcast_rows),
+                        ["bk0", "bk1"])
+                  .select("graph_id", "bnode", "label"))
+        metrics["t_mux_s"] = round(_time.time() - _t0, 3)
+
+        # ---- relabel (GraphColouring.labelBlankNodes): two map-side joins
+        # of the original triples against the per-bnode label dictionary on
+        # interned long keys — no per-triple hash folds, no string-keyed
+        # joins
+        sl = _mb(leaf_final.select(F.col("bk0").alias("_s0"),
+                                   F.col("bk1").alias("_s1"),
+                                   F.col("label").alias("_slab")),
+                 n_leaf, broadcast_rows)
+        ol = _mb(leaf_final.select(F.col("bk0").alias("_o0"),
+                                   F.col("bk1").alias("_o1"),
+                                   F.col("label").alias("_olab")),
+                 n_leaf, broadcast_rows)
+        labelled = (
+            btri
+            .join(sl, on=[btri.ks0 == sl._s0, btri.ks1 == sl._s1], how="left")
+            .join(ol, on=[btri.ko0 == ol._o0, btri.ko1 == ol._o1], how="left")
+            .select("graph_id",
+                    F.coalesce("_slab", "subj").alias("subj"),
+                    "pred",
+                    F.coalesce("_olab", "obj").alias("obj"))
+            .union(ground)
+            .dropDuplicates()
+        )
+        return CanonResult(labelled, labels, metrics,
+                           _retained=run.keep(btri, node_comp, leaf_final))
+
+
+def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
+                  hash_name, route, kernel_graph_rows, broadcast_rows,
+                  checkpoint_dir, checkpoint_every, max_iterations):
+    """Materialized leaf colours (ck0, ck1, bk0, bk1, h0, h1) of every
+    blank node and their row count — kernel and fixpoint-loop components
+    — or (None, 0) for a bnode-free corpus.  Loop-era tables register with
+    ``loop``, the caller's scope, which is open until leaf materializes."""
+    hf = get_hash_family(hash_name)
+    blank_pair = enc_pair(hf.blank)
+    plus_pair = enc_pair(hf.plus)
+    minus_pair = enc_pair(hf.minus)
     # component-granular routing: the reference colours every blank-node
     # component on its own (HashGraph.blankNodePartition,
     # GraphLabelling.java:155-168), so on route="auto" a component whose
@@ -688,15 +862,14 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     loop_btri = btri
     if n_loop < n_comps:
         if n_loop:
-            big_comps = comp_rows.where(big).select(*CK) \
-                .localCheckpoint(True)
-            loop_handles.append(_ckpt_rdd(big_comps))
+            big_comps = ckpt_util.checkpoint(
+                comp_rows.where(big).select(*CK))
             big_comps = _mb(big_comps, n_loop, broadcast_rows)
             loop_btri = btri.join(big_comps, CK, "left_semi")
             kernel_parts.append(btri.join(big_comps, CK, "left_anti"))
         else:
             kernel_parts.append(btri)
-    metrics["t_prep_s"] = round(_time.time() - _t0, 3)
+    metrics["t_prep_s"] = round(_time.time() - t0, 3)
     _t0 = _time.time()
 
     ckpt = None
@@ -723,26 +896,21 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     if n_loop:
         edges_raw = _edge_views(loop_btri, plus_pair, minus_pair)
         sm0, sm1 = combine3_pairs_sql("ot0", "ot1", "p0", "p1", "mk0", "mk1")
-        static_msgs = (
+        static_msgs = ckpt_util.checkpoint(
             edges_raw.where(F.col("ot0").isNotNull())
             .drop("ok0", "ok1").dropDuplicates()
             .select("ck0", "ck1", "bk0", "bk1",
-                    sm0.alias("m0"), sm1.alias("m1"))
-        ).localCheckpoint(True)
-        bb_edges = (
+                    sm0.alias("m0"), sm1.alias("m1")))
+        bb_edges = ckpt_util.checkpoint(
             edges_raw.where(F.col("ot0").isNull())
             .drop("ot0", "ot1").dropDuplicates()
             .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                         "ok0", "ok1")
-        ).localCheckpoint(True)
-        # loop-era checkpoints: dead once `leaf` (their last consumer)
-        # materializes
-        loop_handles += [_ckpt_rdd(static_msgs), _ckpt_rdd(bb_edges)]
+                         "ok0", "ok1"))
 
     resolved: list[DataFrame] = []
     active = None  # None = every loop component is active
     it = 0
-    prev_round = []
+    superseded: list[DataFrame] = []   # released after the next collect
     # round-1 bounds: every loop component starts active (exact); its
     # colour rows are at most the bnode count (exact after round 1)
     n_act, n_lab_rows = n_loop, n_bnodes
@@ -751,8 +919,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         metrics["resumed_from_iteration"] = it
         resolved = [res_df] if res_df is not None else []
         kernel_parts = [kern_df] if kern_df is not None else []
-        active = conv_prev.select(*CK).localCheckpoint(True)
-        loop_handles.append(_ckpt_rdd(active))
+        active = ckpt_util.checkpoint(conv_prev.select(*CK))
         n_act = conv_prev.count()
         n_lab_rows = lab.count()
     elif n_loop:
@@ -769,11 +936,11 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         )
         if n_loop < n_comps:
             lab = lab.join(big_comps, CK, "left_semi")
-        lab = lab.localCheckpoint(True)
+        lab = ckpt_util.checkpoint(lab)
         conv_prev = lab.groupBy(*CK).agg(F.lit(1).alias("prev_nc"))
         # round 1 is the initial colour table's only consumer: retire it
         # with that round like any other superseded round state
-        prev_round = [(_ckpt_rdd(lab), False)]
+        superseded = [lab]
     # per-iteration observability: one entry per round with component
     # status counts and wall times (the "per-partition lineage + metrics"
     # north_rule line, at fixpoint granularity)
@@ -825,8 +992,9 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         # the marked convergence table would never truncate and per-round
         # plans double in size; on foreign sessions fall back to an eager
         # (own-job) colour checkpoint, i.e. two jobs per round.
-        new_lab = _next_colors(msgs, lab, n_lab_rows) \
-            .localCheckpoint(not _lazy_checkpoint_ok(spark))
+        new_lab = ckpt_util.checkpoint(
+            _next_colors(msgs, lab, n_lab_rows),
+            eager=not _lazy_checkpoint_ok(spark))
 
         # convergence + refinement audit riding the fold output: the fold
         # passes each bnode's previous colour through (oh columns), so we
@@ -854,7 +1022,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
         # real colour-class rows — one fewer broadcast build per round,
         # same status arithmetic.
         nul = F.lit(None).cast("long")
-        conv = (
+        conv = ckpt_util.checkpoint(
             newc.select(*CK, "nb_h", "n_old", nul.alias("prev_nc"))
             .union(conv_prev.select(
                 *CK, nul.alias("nb_h"), nul.alias("n_old"),
@@ -867,8 +1035,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                         F.when(F.col("ncross") != F.col("nc"), "stalled")
                         .when(F.col("nc") == F.col("nb"), "discrete")
                         .when(F.col("nc") <= F.col("prev_nc"), "stalled")
-                        .otherwise("active"))
-        ).localCheckpoint(False)
+                        .otherwise("active")), eager=False)
 
         try:
             crows = conv.groupBy("status") \
@@ -900,20 +1067,15 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                 _mb(stall_comps, counts["stalled"], broadcast_rows),
                 CK, "left_semi"))
 
-        # the previous round's checkpoints are superseded the moment this
-        # round's status collect materializes the new pair: release them
-        # NOW unless a resolved/kernel view still reads them (those are
-        # consumed when `leaf` materializes) — the loop then retains O(1)
-        # round tables instead of O(rounds), which at corpus scale is the
-        # difference between a bounded block-manager footprint and
-        # memory-squeezing dead state for the rest of the session
-        for h, contributed in prev_round:
-            (loop_handles.append(h) if contributed else _release([h]))
-        prev_round = [(_ckpt_rdd(new_lab),
-                       bool(counts.get("discrete"))),
-                      (_ckpt_rdd(conv),
-                       bool(counts.get("discrete"))
-                       or bool(counts.get("stalled")))]
+        # this round's collect materialized the new pair: the previous
+        # round's tables are dead unless a resolved/kernel view reads them
+        # (those die with the loop scope) — the loop retains O(1) round
+        # tables, not O(rounds) of dead corpus-scale state
+        loop.release(*superseded)
+        superseded = [t for t, read in (
+            (new_lab, counts.get("discrete")),
+            (conv, counts.get("discrete") or counts.get("stalled")))
+            if not read]
 
         n_active = counts.get("active", 0)
         if n_active == 0 or it >= max_iterations:
@@ -952,10 +1114,6 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     metrics["iterations_log"] = iter_log
     metrics["t_loop_s"] = round(_time.time() - _t0, 3)
     _t0 = _time.time()
-    # final-round tables feed the resolved/kernel views consumed by leaf
-    # below (incl. the over-budget path's conv reference) — release them
-    # with the rest of the loop-era state once leaf has materialized
-    loop_handles.extend(h for h, _ in prev_round)
 
     # leaf colours: distributed-discrete ∪ kernel output (interned schema)
     parts = list(resolved)
@@ -974,199 +1132,14 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                                b0.alias("bk0"), b1.alias("bk1"),
                                "h0", "h1"))
     if not parts:
-        # bnode-free corpus: the result references none of our state
-        empty = spark.createDataFrame(
-            [], "graph_id string, bnode string, label string")
-        _release(loop_handles + result_handles)
-        return CanonResult(triples.select(*TRIPLE_COLS).dropDuplicates(),
-                           empty, metrics)
+        return None, 0
     leaf = parts[0]
     for p in parts[1:]:
         leaf = leaf.union(p)
-    leaf = leaf.localCheckpoint(True)
+    leaf = ckpt_util.checkpoint(leaf)
     n_leaf = leaf.count()
-    # leaf (just materialized) was the last consumer of every loop-era
-    # table: the edge tables, the initial colours and each round's
-    # surviving new_lab/conv blocks all die here
-    _release(loop_handles)
     metrics["t_leaf_kernel_s"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
-
-    # ---- per-component canonical hash + mux (GraphColouring.java:121-168,
-    # GraphLabelling.java:100-119) ----------------------------------------
-    # btrij: triple hash columns decorated with their endpoints' leaf
-    # colours, joined on interned long keys — all fixed-width longs, no
-    # strings; consumed once by the per-triple hash below.  leaf is
-    # per-bnode (≪ triples): broadcast when it fits so the decoration is
-    # map-side and btri is never re-exchanged — the distributed analogue
-    # of GraphColouring.labelBlankNodes's O(triples) single pass over an
-    # in-memory colour map (GraphColouring.java:433-451); above
-    # broadcast_rows both joins fall back to shuffles.
-    slab = _mb(
-        leaf.select(F.col("bk0").alias("_s0"), F.col("bk1").alias("_s1"),
-                    F.col("h0").alias("sc0"), F.col("h1").alias("sc1")),
-        n_leaf, broadcast_rows)
-    olab = _mb(
-        leaf.select(F.col("bk0").alias("_o0"), F.col("bk1").alias("_o1"),
-                    F.col("h0").alias("oc0"), F.col("h1").alias("oc1")),
-        n_leaf, broadcast_rows)
-    btrij = (
-        btri
-        .join(slab, on=[btri.ks0 == slab._s0, btri.ks1 == slab._s1],
-              how="left").drop("_s0", "_s1")
-        .join(olab, on=[btri.ko0 == olab._o0, btri.ko1 == olab._o1],
-              how="left").drop("_o0", "_o1")
-        .select("graph_id", "ck0", "ck1", "p0", "p1", "ss0", "ss1",
-                "os0", "os1", "sc0", "sc1", "oc0", "oc1")
-    )
-
-    tm0, tm1 = combine3_pairs_sql(
-        F.coalesce("sc0", "ss0"), F.coalesce("sc1", "ss1"),
-        F.col("p0"), F.col("p1"),
-        F.coalesce("oc0", "os0"), F.coalesce("oc1", "os1"))
-    # per-triple hash rows, deduplicated (set semantics; distinct triples
-    # have distinct (t0, t1) because leaf colours are injective, so this
-    # 4-long dropDuplicates IS triple dedup, far narrower than shuffling
-    # the string triples).  This one exchange is the tail's structural
-    # minimum: a pre-keyed single-exchange variant (repartition on
-    # (ck0, ck1) feeding both the distinct and the fold) measured a
-    # consistent +13% REGRESSION in an interleaved A/B at sf0.1 — the
-    # fold's second exchange is already collapsed by partial aggregation
-    # (per-partition lane sums ≈ n_comps × n_partitions rows at any
-    # scale), so the explicit keying only forfeits map-side dedup and the
-    # balanced 4-key hash (BENCH.md round 5).
-    th = btrij.select("ck0", "ck1", tm0.alias("t0"), tm1.alias("t1")) \
-        .dropDuplicates()
-    cd0, cd1 = _ikey("graph_id", "comp")
-    # ONE aggregation over the per-bnode comp table yields BOTH the
-    # (graph_id, comp) decode dictionary AND the component's bnode count
-    # (the groupBy is the distinct) — replaces a distinct + a separate
-    # leaf-side sizes aggregation + their two broadcast joins with one
-    comp_sizes = (node_comp.groupBy("graph_id", "comp")
-                  .agg(F.count("*").alias("nb"))
-                  .withColumn("ck0", cd0).withColumn("ck1", cd1))
-    # the component hash fold also emits the component's triple count
-    # (nt) from the same two passes — no separate aggregation over th
-    ghc = unordered_sum_pairs_sql(th, ["ck0", "ck1"], "t0", "t1",
-                                  "g0", "g1", extra_init=blank_pair,
-                                  count_col="nt") \
-        .join(_mb(comp_sizes, n_comps, broadcast_rows), ["ck0", "ck1"])
-
-    # duplicate-component key: with set-semantic input (deduped above) and
-    # injective leaf colours, (g0, g1) is the unordered fold over the
-    # component's exact distinct labelled triple set — the distributed
-    # analogue of the oracle's graphs_seen TreeSet equality
-    # (GraphLabelling.java:100-119); (nt, nb) guard the astronomically
-    # rare md5 digest collision between non-isomorphic components
-    dup_w = Window.partitionBy("graph_id", "g0", "g1", "nt", "nb") \
-                  .orderBy("comp")
-    comp_mux = (
-        ghc
-        .withColumn("rank", F.row_number().over(dup_w))
-        # duplicate mux ints: first copy 0, then count+1 = 2, 3, ...
-        # (GraphLabelling.java:100-119 passing count+1 to getCanonicalGraph)
-        .withColumn("mux_i",
-                    F.when(F.col("rank") == 1, F.lit(0))
-                    .otherwise(F.col("rank")) if dip else F.lit(0))
-        .withColumn("contributes",
-                    F.lit(True) if dip else (F.col("rank") == 1))
-        .withColumns(dict(zip(("mx0", "mx1"), mx_exprs(F.col("mux_i")))))
-        .select("graph_id", "ck0", "ck1", "contributes",
-                *(c.alias(n) for c, n in zip(combine2_pairs_sql(
-                    "g0", "g1", F.col("mx0"), F.col("mx1")),
-                    ("cb0", "cb1"))))
-    ).localCheckpoint(True)
-    comp_mux_h = _ckpt_rdd(comp_mux)
-    metrics["t_comp_mux_s"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
-
-    # ---- upg: graph-level unique hash (GraphLabelling.java:137-150),
-    # merged into the per-component mux table so every downstream consumer
-    # needs ONE compact join + ONE combine3 (combine2(combine2(h,cb),gh)
-    # == combine3(h,cb,gh), identical lane arithmetic) ---------------------
-    if upg:
-        gs0, gs1 = tp(F.col("subj"))
-        gp0, gp1 = tp(F.col("pred"))
-        go0, go1 = tp(F.col("obj"))
-        gm0, gm1 = combine3_pairs_sql("a0", "a1", "b0", "b1", "c0", "c1")
-        ground_th = (ground.select(
-            "graph_id", gs0.alias("a0"), gs1.alias("a1"),
-            gp0.alias("b0"), gp1.alias("b1"),
-            go0.alias("c0"), go1.alias("c1"))
-            .select("graph_id", gm0.alias("t0"), gm1.alias("t1"))
-            .dropDuplicates())
-        comb_h = comp_mux.where("contributes").select(
-            "graph_id", F.col("cb0").alias("t0"), F.col("cb1").alias("t1"))
-        ghash = unordered_sum_pairs_sql(ground_th.union(comb_h),
-                                        ["graph_id"], "t0", "t1",
-                                        "gh0", "gh1",
-                                        extra_init=blank_pair)
-        # per-graph table, rows ≤ n_components
-        mux = comp_mux.join(_mb(ghash, n_comps, broadcast_rows),
-                            "graph_id") \
-            .select("ck0", "ck1", "cb0", "cb1", "gh0", "gh1")
-
-        def final_pair(h0, h1):
-            return combine3_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"),
-                                      F.col("gh0"), F.col("gh1"))
-    else:
-        mux = comp_mux.select("ck0", "ck1", "cb0", "cb1")
-
-        def final_pair(h0, h1):
-            return combine2_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"))
-
-    # final per-bnode label: ONE final_pair fold over the per-bnode leaf
-    # table — the final colour is a pure function of (leaf colour,
-    # component mux row), so computing it per triple occurrence (as a
-    # fused in-row relabel would) repeats the same fold once per edge
-    fc0, fc1 = final_pair(F.col("h0"), F.col("h1"))
-    leaf_final = (
-        leaf.join(_mb(mux, n_comps, broadcast_rows), ["ck0", "ck1"])
-        .select("bk0", "bk1",
-                F.concat(F.lit("_:SK00"), pair_hex(fc0, fc1))
-                .alias("label"))
-    ).localCheckpoint(True)
-    # leaf_final (just materialized) supersedes both the raw leaf colours
-    # and the per-component mux table — release them; the result now rides
-    # on exactly three checkpoints: btri, node_comp, leaf_final
-    _release([_ckpt_rdd(leaf), comp_mux_h])
-    result_handles.append(_ckpt_rdd(leaf_final))
-    # bnode decode dictionary: the CC node table already holds one row per
-    # distinct (graph, bnode) and is checkpointed — attach keys by codegen,
-    # no extra distinct shuffle
-    dk0, dk1 = _ikey("graph_id", "bnode")
-    bnode_dict = node_comp.select("graph_id", "bnode",
-                                  dk0.alias("bk0"), dk1.alias("bk1"))
-    labels = (leaf_final
-              .join(_mb(bnode_dict, n_bnodes, broadcast_rows),
-                    ["bk0", "bk1"])
-              .select("graph_id", "bnode", "label"))
-    metrics["t_mux_s"] = round(_time.time() - _t0, 3)
-
-    # ---- relabel (GraphColouring.labelBlankNodes): two map-side joins of
-    # the original triples against the per-bnode label dictionary on
-    # interned long keys — no per-triple hash folds, no string-keyed joins
-    sl = _mb(leaf_final.select(F.col("bk0").alias("_s0"),
-                               F.col("bk1").alias("_s1"),
-                               F.col("label").alias("_slab")),
-             n_leaf, broadcast_rows)
-    ol = _mb(leaf_final.select(F.col("bk0").alias("_o0"),
-                               F.col("bk1").alias("_o1"),
-                               F.col("label").alias("_olab")),
-             n_leaf, broadcast_rows)
-    labelled = (
-        btri
-        .join(sl, on=[btri.ks0 == sl._s0, btri.ks1 == sl._s1], how="left")
-        .join(ol, on=[btri.ko0 == ol._o0, btri.ko1 == ol._o1], how="left")
-        .select("graph_id",
-                F.coalesce("_slab", "subj").alias("subj"),
-                "pred",
-                F.coalesce("_olab", "obj").alias("obj"))
-        .union(ground)
-        .dropDuplicates()
-    )
-    return CanonResult(labelled, labels, metrics,
-                       _retained=result_handles)
+    return leaf, n_leaf
 
 
 # ---------------------------------------------------------------------------
@@ -1216,24 +1189,26 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
 
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions")) * 4
-    # no input dedupe needed: label_graph normalizes its group to a set
-    out = (triples.select(*TRIPLE_COLS)
-           .withColumn("_b", F.pmod(F.xxhash64("graph_id"),
-                                    F.lit(n_buckets)))
-           .groupBy("_b").applyInPandas(run, out_schema)
-           ).localCheckpoint(True)
-    labelled = (out.where(F.col("kind") == "t")
-                .select("graph_id", F.col("a").alias("subj"),
-                        F.col("b").alias("pred"), F.col("c").alias("obj")))
-    labels = (out.where(F.col("kind") == "l")
-              .select("graph_id", F.col("a").alias("bnode"),
-                      F.col("b").alias("label")))
-    metrics = {"mode": "by_graph", "hash_name": hash_name}
-    n_failed = out.where(F.col("kind") == "e").count()
-    if n_failed:
-        metrics["failed_graphs"] = n_failed
-        metrics["failed_sample"] = [
-            (r["graph_id"], r["a"])
-            for r in out.where(F.col("kind") == "e").limit(5).collect()]
-    return CanonResult(labelled, labels, metrics,
-                       _retained=[_ckpt_rdd(out)])
+    with ckpt_util.scope() as held:
+        # no input dedupe needed: label_graph normalizes its group to a set
+        out = ckpt_util.checkpoint(
+            triples.select(*TRIPLE_COLS)
+            .withColumn("_b", F.pmod(F.xxhash64("graph_id"),
+                                     F.lit(n_buckets)))
+            .groupBy("_b").applyInPandas(run, out_schema))
+        labelled = (out.where(F.col("kind") == "t")
+                    .select("graph_id", F.col("a").alias("subj"),
+                            F.col("b").alias("pred"),
+                            F.col("c").alias("obj")))
+        labels = (out.where(F.col("kind") == "l")
+                  .select("graph_id", F.col("a").alias("bnode"),
+                          F.col("b").alias("label")))
+        metrics = {"mode": "by_graph", "hash_name": hash_name}
+        n_failed = out.where(F.col("kind") == "e").count()
+        if n_failed:
+            metrics["failed_graphs"] = n_failed
+            metrics["failed_sample"] = [
+                (r["graph_id"], r["a"])
+                for r in out.where(F.col("kind") == "e").limit(5).collect()]
+        return CanonResult(labelled, labels, metrics,
+                           _retained=held.keep(out))

@@ -1,17 +1,21 @@
-"""Checkpoint-block bookkeeping shared by the iterative engines.
+"""Checkpoint blocks and their lifetime.
 
-A loop that localCheckpoints per-round state retains O(rounds)
-corpus-scale tables in the block manager unless superseded blocks are
-released the moment their last consumer has materialized (the
-ContextCleaner only frees them after a driver full-GC, which a large heap
-may not run for hours).  ``ckpt_rdd`` fetches the JVM handle backing a
-checkpointed DataFrame; ``release`` unpersists tracked handles.
-
-Previously private helpers of canon.distributed; ops.dedup's cluster loop
-uses the same discipline, so they live in a neutral module (ADVICE r5).
+``localCheckpoint`` pins a table's blocks until its RDD is unpersisted
+(the ContextCleaner only frees them after a driver full-GC).  Every
+checkpoint goes through ``checkpoint``, which registers the blocks with
+the innermost open ``scope()``.  Nothing checkpointed inside a scope
+outlives it unless it was kept: exit, also by exception, releases the
+rest.  ``Scope.release`` retires a table once every consumer has
+materialized (lineage is truncated: a late consumer could not recompute
+it); ``Scope.keep`` hands tables to the enclosing scope, or with none
+open to the caller, and returns their handles.  With no scope open
+``checkpoint`` only checkpoints.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 
@@ -34,15 +38,63 @@ def ckpt_rdd(df: DataFrame):
         return None
 
 
-def release(handles) -> None:
-    """Non-blocking unpersist of tracked checkpoint RDD handles.  Only
-    sound once every downstream consumer of the blocks has materialized
-    (checkpoint lineage is truncated — a late consumer could not
-    recompute them)."""
+def release(handles, blocking: bool = False) -> None:
+    """Unpersist checkpoint RDD handles (None entries are skipped)."""
     for h in handles:
         if h is None:
             continue
         try:
-            h.unpersist(False)
+            h.unpersist(blocking)
         except Exception:  # pragma: no cover — context already stopped
             pass
+
+
+class Scope:
+    """The checkpoint handles one open scope holds, by RDD id."""
+
+    def __init__(self, parent: Scope | None):
+        self.parent = parent
+        self.held: dict[int, object] = {}
+
+    def _take(self, dfs) -> list:
+        handles = [h for h in map(ckpt_rdd, dfs) if h is not None]
+        return [h for h in (self.held.pop(h.id(), None) for h in handles)
+                if h is not None]
+
+    def release(self, *dfs: DataFrame) -> None:
+        """Unpersist now the blocks of ``dfs`` that this scope holds."""
+        release(self._take(dfs))
+
+    def keep(self, *dfs: DataFrame) -> list:
+        """Hand the blocks of ``dfs`` to the enclosing scope, if any, and
+        return their handles."""
+        handles = self._take(dfs)
+        if self.parent is not None:
+            self.parent.held.update((h.id(), h) for h in handles)
+        return handles
+
+
+_SCOPE: ContextVar[Scope | None] = ContextVar("ckpt_scope", default=None)
+
+
+@contextmanager
+def scope():
+    """Open a scope nested in the current one; yields the ``Scope``."""
+    s = Scope(_SCOPE.get())
+    token = _SCOPE.set(s)
+    try:
+        yield s
+    finally:
+        _SCOPE.reset(token)
+        release(s.held.values())
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, its blocks registered with the
+    innermost open scope."""
+    out = df.localCheckpoint(eager)
+    s = _SCOPE.get()
+    h = ckpt_rdd(out) if s is not None else None
+    if h is not None:
+        s.held[h.id()] = h
+    return out

@@ -89,6 +89,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "test":
         from pyspark.sql import functions as F
 
+        from blabel_spark import ckpt_util
         from blabel_spark.sources.ntriples import read_ntriples
         from blabel_spark.spark_util import get_spark
         from blabel_spark.testing import metamorphic_report, to_test_tsv
@@ -96,9 +97,9 @@ def main(argv: list[str] | None = None) -> int:
         triples = read_ntriples(spark, args.input)
         # checkpoint: the report tail (dual-route labelling + joins) would
         # otherwise re-run for the status-count collect after the TSV write
-        rep = metamorphic_report(spark, triples, shuffles=args.shuffles,
-                                 lean=not args.no_lean,
-                                 seed=args.seed).localCheckpoint(True)
+        rep = ckpt_util.checkpoint(metamorphic_report(
+            spark, triples, shuffles=args.shuffles, lean=not args.no_lean,
+            seed=args.seed))
         to_test_tsv(rep).coalesce(1).write.mode("overwrite") \
             .text(args.output)
         counts = {r["s"]: r["n"] for r in

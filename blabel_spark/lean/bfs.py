@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blabel_spark import ckpt_util
 from blabel_spark.canon.local import is_bnode
 
 
@@ -61,9 +62,12 @@ def _order_patterns(patterns: list[tuple[str, str, str]]
 
 
 def _solutions(gtriples: DataFrame, patterns: list[tuple[str, str, str]],
-               max_rows: int) -> tuple[DataFrame, list[str], list[str]]:
+               max_rows: int, held: ckpt_util.Scope
+               ) -> tuple[DataFrame, list[str], list[str]]:
     """Chained-join evaluation: returns (solution table with one column
-    per blank node, column aliases, bnode names — both sorted by bnode)."""
+    per blank node, column aliases, bnode names — both sorted by bnode).
+    Each pattern's table lives in ``held`` until the next one has
+    materialized."""
     spark = gtriples.sparkSession
     sols = spark.range(1).select(F.lit(1).alias("_one"))
     cols: dict[str, str] = {}   # bnode → solution column name
@@ -98,9 +102,11 @@ def _solutions(gtriples: DataFrame, patterns: list[tuple[str, str, str]],
             alias = f"v{len(cols)}"
             cols[bnode] = alias
             joined = joined.withColumn(alias, F.col(src))
-        sols = joined.drop("_cs", "_co") \
-                     .dropDuplicates().localCheckpoint(True)
-        n = sols.count()
+        nxt = ckpt_util.checkpoint(
+            joined.drop("_cs", "_co").dropDuplicates())
+        n = nxt.count()
+        held.release(sols)
+        sols = nxt
         if n == 0:
             # should never happen: identity is always a solution
             raise BFSBudgetExceeded("no solution — inconsistent input")
@@ -128,54 +134,57 @@ def bfs_lean_graph(spark: SparkSession, gtriples: DataFrame,
     not this solver's.  The bound makes the driver-side collect loud
     and O(max_patterns) instead of O(graph).
     """
-    core: dict[str, str] = {}
-    current = gtriples.select("subj", "pred", "obj").dropDuplicates() \
-                      .localCheckpoint(True)
-    while True:
-        prows = (current.where(F.col("subj").startswith("_:")
-                               | F.col("obj").startswith("_:"))
-                 .limit(max_patterns + 1).collect())
-        if len(prows) > max_patterns:
-            raise BFSBudgetExceeded(
-                f"graph has > {max_patterns} blank-node triples — too "
-                "large for the BFS pattern-join solver (route it through "
-                "trivial_prepass / pass-through instead)")
-        patterns = [(r["subj"], r["pred"], r["obj"]) for r in prows]
-        if not patterns:
-            break
-        bnodes = sorted({t for s, _, o in patterns for t in (s, o)
-                         if is_bnode(t)})
-        for b in bnodes:
-            core.setdefault(b, b)
-        sols, sol_cols, sol_bnodes = _solutions(
-            current, _order_patterns(patterns), max_rows)
-        # fewest distinct bnode bindings, and strictly proper
-        # (BFSGraphLeaning.getCore:36-60); deterministic tie-break by the
-        # full binding tuple
-        arr = F.array(*[F.col(c) for c in sol_cols])
-        nb = F.size(F.array_distinct(
-            F.filter(arr, lambda x: x.startswith("_:"))))
-        best = (sols.withColumn("_nb", nb)
-                .where(F.col("_nb") < len(sol_cols))
-                .orderBy("_nb", *sol_cols)
-                .limit(1).collect())
-        if not best:
-            break   # no proper endomorphism → lean
-        sol = best[0]
-        mapping = {b: sol[c] for b, c in zip(sol_bnodes, sol_cols)}
-        for k in core:
-            core[k] = mapping.get(core[k], core[k])
-        # apply the mapping (mapData, BFSGraphLeaning.java:51-53)
-        m_df = spark.createDataFrame(
-            sorted(mapping.items()), "b string, t string")
-        sm = m_df.select(F.col("b").alias("_sb"), F.col("t").alias("_st"))
-        om = m_df.select(F.col("b").alias("_ob"), F.col("t").alias("_ot"))
-        current = (
-            current
-            .join(F.broadcast(sm), current.subj == F.col("_sb"), "left")
-            .join(F.broadcast(om), current.obj == F.col("_ob"), "left")
-            .select(F.coalesce("_st", "subj").alias("subj"), "pred",
-                    F.coalesce("_ot", "obj").alias("obj"))
-            .dropDuplicates()
-        ).localCheckpoint(True)
-    return current, core
+    with ckpt_util.scope() as held:
+        core: dict[str, str] = {}
+        current = ckpt_util.checkpoint(
+            gtriples.select("subj", "pred", "obj").dropDuplicates())
+        while True:
+            prows = (current.where(F.col("subj").startswith("_:")
+                                   | F.col("obj").startswith("_:"))
+                     .limit(max_patterns + 1).collect())
+            if len(prows) > max_patterns:
+                raise BFSBudgetExceeded(
+                    f"graph has > {max_patterns} blank-node triples — too "
+                    "large for the BFS pattern-join solver (route it through "
+                    "trivial_prepass / pass-through instead)")
+            patterns = [(r["subj"], r["pred"], r["obj"]) for r in prows]
+            if not patterns:
+                break
+            bnodes = sorted({t for s, _, o in patterns for t in (s, o)
+                             if is_bnode(t)})
+            for b in bnodes:
+                core.setdefault(b, b)
+            sols, sol_cols, sol_bnodes = _solutions(
+                current, _order_patterns(patterns), max_rows, held)
+            # fewest distinct bnode bindings, and strictly proper
+            # (BFSGraphLeaning.getCore:36-60); deterministic tie-break by the
+            # full binding tuple
+            arr = F.array(*[F.col(c) for c in sol_cols])
+            nb = F.size(F.array_distinct(
+                F.filter(arr, lambda x: x.startswith("_:"))))
+            best = (sols.withColumn("_nb", nb)
+                    .where(F.col("_nb") < len(sol_cols))
+                    .orderBy("_nb", *sol_cols)
+                    .limit(1).collect())
+            if not best:
+                break   # no proper endomorphism → lean
+            sol = best[0]
+            mapping = {b: sol[c] for b, c in zip(sol_bnodes, sol_cols)}
+            for k in core:
+                core[k] = mapping.get(core[k], core[k])
+            # apply the mapping (mapData, BFSGraphLeaning.java:51-53)
+            m_df = spark.createDataFrame(
+                sorted(mapping.items()), "b string, t string")
+            sm = m_df.select(F.col("b").alias("_sb"), F.col("t").alias("_st"))
+            om = m_df.select(F.col("b").alias("_ob"), F.col("t").alias("_ot"))
+            nxt = ckpt_util.checkpoint(
+                current
+                .join(F.broadcast(sm), current.subj == F.col("_sb"), "left")
+                .join(F.broadcast(om), current.obj == F.col("_ob"), "left")
+                .select(F.coalesce("_st", "subj").alias("subj"), "pred",
+                        F.coalesce("_ot", "obj").alias("obj"))
+                .dropDuplicates())
+            held.release(sols, current)   # superseded by the mapped graph
+            current = nxt
+        held.keep(current)
+        return current, core

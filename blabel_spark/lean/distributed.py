@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blabel_spark import ckpt_util
+
 _OUT_SCHEMA = ("graph_id string, kind string, a string, b string, c string")
 
 
@@ -44,127 +46,137 @@ def trivial_prepass(spark: SparkSession, triples: DataFrame,
     kernel's sequential guard, lean/local.py:96-124).
 
     Returns (reduced triples, witness (graph_id, bnode, target))."""
-    cur = triples.select("graph_id", "subj", "pred", "obj") \
-                 .dropDuplicates().localCheckpoint(True)
-    wit_parts: list[DataFrame] = []
-    for _ in range(max_passes):
-        # edge identity interned to a 128-bit xxhash64 long pair (the S4
-        # flyweight trick, same budget as canon.distributed._ikey): the
-        # containment joins/groupBys below run up to ``max_passes`` times
-        # over THE OVERSIZED-GRAPH PATH, so their shuffle keys must be
-        # fixed-width longs, not "±|pred|term" concat strings (reference
-        # anchor: GraphLeaning.indexAllEdges interns Edge hashcodes,
-        # GraphLeaning.java:485-514).  Node/val stay strings — they are
-        # short bnode labels needed for the witness decode.
-        def _ekey(sign: int, pred: str, other: str) -> tuple:
-            return (F.xxhash64(F.lit(1), "graph_id", F.lit(sign),
-                               F.col(pred), F.col(other)),
-                    F.xxhash64(F.lit(2), "graph_id", F.lit(sign),
-                               F.col(pred), F.col(other)))
-        sp0, sp1 = _ekey(1, "pred", "obj")
-        so0, so1 = _ekey(-1, "pred", "subj")
-        edges = (
-            cur.select("graph_id", F.col("subj").alias("node"),
-                       sp0.alias("e0"), sp1.alias("e1"),
-                       F.col("obj").alias("val"))
-            .union(cur.select("graph_id", F.col("obj").alias("node"),
-                              so0.alias("e0"), so1.alias("e1"),
-                              F.col("subj").alias("val")))
-            .distinct()
-        ).localCheckpoint(True)
-        E = ["e0", "e1"]
-        cnt = edges.groupBy("graph_id", "node").agg(F.count("*").alias("n"))
-        bedges = edges.where(F.col("node").startswith("_:"))
-        freq = edges.groupBy("graph_id", *E).agg(F.count("*").alias("f"))
-        rare = (bedges.join(freq, ["graph_id", *E])
-                .groupBy("graph_id", "node")
-                .agg(F.min_by(F.struct(*E), F.struct("f", *E)).alias("e"))
-                .select("graph_id", F.col("node").alias("x"),
-                        F.col("e.e0").alias("e0"), F.col("e.e1").alias("e1")))
-        cand = (rare.join(edges.select("graph_id",
-                                       F.col("node").alias("y"), *E),
-                          ["graph_id", *E])
-                .where(F.col("x") != F.col("y"))
-                .select("graph_id", "x", "y"))
-        xe = bedges.select("graph_id", F.col("node").alias("x"), *E)
-        ye = edges.select("graph_id", F.col("node").alias("y"), *E)
-        matched = (cand.join(xe, ["graph_id", "x"])
-                   .join(ye, ["graph_id", "y", *E], "left_semi")
-                   .groupBy("graph_id", "x", "y")
-                   .agg(F.count("*").alias("n_match")))
-        cx = cnt.select("graph_id", F.col("node").alias("x"),
-                        F.col("n").alias("n_x"))
-        # identical-twin rule: equal edge sets keep the smaller name
-        cy = cnt.select("graph_id", F.col("node").alias("y"),
-                        F.col("n").alias("n_y"))
-        dom_pairs = (matched.join(cx, ["graph_id", "x"])
-                     .join(cy, ["graph_id", "y"])
-                     .where((F.col("n_match") == F.col("n_x"))
-                            & (~((F.col("n_x") == F.col("n_y"))
-                                 & F.col("y").startswith("_:")
-                                 & (F.col("y") > F.col("x"))))))
-        dominated = dom_pairs.select("graph_id", F.col("x").alias("b")) \
-                             .distinct().localCheckpoint(True)
-        if dominated.limit(1).count() == 0:
-            break
-        # simultaneity guard: drop (b→y) when y is dominated or any edge
-        # value of b is dominated
-        dset_y = dominated.select("graph_id", F.col("b").alias("y"))
-        safe = dom_pairs.join(dset_y, ["graph_id", "y"], "left_anti")
-        bad_vals = (bedges.select("graph_id", F.col("node").alias("x"),
-                                  "val")
-                    .join(dominated.select("graph_id",
-                                           F.col("b").alias("val")),
-                          ["graph_id", "val"], "left_semi")
-                    .select("graph_id", "x").distinct())
-        safe = safe.join(bad_vals, ["graph_id", "x"], "left_anti")
-        accepted = (safe.groupBy("graph_id", "x")
-                    .agg(F.min("y").alias("y"))).localCheckpoint(True)
-        if accepted.limit(1).count() == 0:
-            break
-        wit_parts.append(accepted.select(
-            "graph_id", F.col("x").alias("bnode"),
-            F.col("y").alias("target")))
-        # accepted shares lineage (and therefore attribute ids) with cur,
-        # so the mapping application renames its join keys outright —
-        # df.col-based self-join disambiguation is not reliable here
-        sm = accepted.select(F.col("graph_id").alias("_sg"),
-                             F.col("x").alias("_sb"),
-                             F.col("y").alias("_st"))
-        om = accepted.select(F.col("graph_id").alias("_og"),
-                             F.col("x").alias("_ob"),
-                             F.col("y").alias("_ot"))
-        cur = (cur.join(sm, on=[F.col("graph_id") == F.col("_sg"),
-                                F.col("subj") == F.col("_sb")], how="left")
-               .drop("_sg", "_sb")
-               .join(om, on=[F.col("graph_id") == F.col("_og"),
-                             F.col("obj") == F.col("_ob")], how="left")
-               .drop("_og", "_ob")
-               .select("graph_id",
-                       F.coalesce("_st", "subj").alias("subj"), "pred",
-                       F.coalesce("_ot", "obj").alias("obj"))
-               .dropDuplicates()).localCheckpoint(True)
-    if wit_parts:
-        wit = wit_parts[0]
-        for p in wit_parts[1:]:
-            wit = wit.union(p)
-        # transitive composition (GraphLeaning.transitiveClosure:448-483):
-        # a pass-k target may itself be remapped in a later pass; chain
-        # length is bounded by the pass count
-        m = wit.select(F.col("graph_id").alias("_mg"),
-                       F.col("bnode").alias("_b"),
-                       F.col("target").alias("_t")).localCheckpoint(True)
-        for _ in range(len(wit_parts)):
-            wit = (wit.join(m, on=[F.col("graph_id") == F.col("_mg"),
-                                   F.col("target") == F.col("_b")],
-                            how="left")
-                   .drop("_mg", "_b")
-                   .select("graph_id", "bnode",
-                           F.coalesce("_t", "target").alias("target")))
-    else:
-        wit = spark.createDataFrame(
-            [], "graph_id string, bnode string, target string")
-    return cur, wit
+    with ckpt_util.scope() as held:
+        cur = ckpt_util.checkpoint(
+            triples.select("graph_id", "subj", "pred", "obj")
+            .dropDuplicates())
+        wit_parts: list[DataFrame] = []
+        for _ in range(max_passes):
+            # edge identity interned to a 128-bit xxhash64 long pair (the S4
+            # flyweight trick, same budget as canon.distributed._ikey): the
+            # containment joins/groupBys below run up to ``max_passes`` times
+            # over THE OVERSIZED-GRAPH PATH, so their shuffle keys must be
+            # fixed-width longs, not "±|pred|term" concat strings (reference
+            # anchor: GraphLeaning.indexAllEdges interns Edge hashcodes,
+            # GraphLeaning.java:485-514).  Node/val stay strings — they are
+            # short bnode labels needed for the witness decode.
+            def _ekey(sign: int, pred: str, other: str) -> tuple:
+                return (F.xxhash64(F.lit(1), "graph_id", F.lit(sign),
+                                   F.col(pred), F.col(other)),
+                        F.xxhash64(F.lit(2), "graph_id", F.lit(sign),
+                                   F.col(pred), F.col(other)))
+            sp0, sp1 = _ekey(1, "pred", "obj")
+            so0, so1 = _ekey(-1, "pred", "subj")
+            edges = ckpt_util.checkpoint(
+                cur.select("graph_id", F.col("subj").alias("node"),
+                           sp0.alias("e0"), sp1.alias("e1"),
+                           F.col("obj").alias("val"))
+                .union(cur.select("graph_id", F.col("obj").alias("node"),
+                                  so0.alias("e0"), so1.alias("e1"),
+                                  F.col("subj").alias("val")))
+                .distinct())
+            E = ["e0", "e1"]
+            cnt = edges.groupBy("graph_id", "node") \
+                .agg(F.count("*").alias("n"))
+            bedges = edges.where(F.col("node").startswith("_:"))
+            freq = edges.groupBy("graph_id", *E).agg(F.count("*").alias("f"))
+            rare = (bedges.join(freq, ["graph_id", *E])
+                    .groupBy("graph_id", "node")
+                    .agg(F.min_by(F.struct(*E), F.struct("f", *E)).alias("e"))
+                    .select("graph_id", F.col("node").alias("x"),
+                            F.col("e.e0").alias("e0"),
+                            F.col("e.e1").alias("e1")))
+            cand = (rare.join(edges.select("graph_id",
+                                           F.col("node").alias("y"), *E),
+                              ["graph_id", *E])
+                    .where(F.col("x") != F.col("y"))
+                    .select("graph_id", "x", "y"))
+            xe = bedges.select("graph_id", F.col("node").alias("x"), *E)
+            ye = edges.select("graph_id", F.col("node").alias("y"), *E)
+            matched = (cand.join(xe, ["graph_id", "x"])
+                       .join(ye, ["graph_id", "y", *E], "left_semi")
+                       .groupBy("graph_id", "x", "y")
+                       .agg(F.count("*").alias("n_match")))
+            cx = cnt.select("graph_id", F.col("node").alias("x"),
+                            F.col("n").alias("n_x"))
+            # identical-twin rule: equal edge sets keep the smaller name
+            cy = cnt.select("graph_id", F.col("node").alias("y"),
+                            F.col("n").alias("n_y"))
+            dom_pairs = (matched.join(cx, ["graph_id", "x"])
+                         .join(cy, ["graph_id", "y"])
+                         .where((F.col("n_match") == F.col("n_x"))
+                                & (~((F.col("n_x") == F.col("n_y"))
+                                     & F.col("y").startswith("_:")
+                                     & (F.col("y") > F.col("x"))))))
+            dominated = ckpt_util.checkpoint(
+                dom_pairs.select("graph_id", F.col("x").alias("b"))
+                .distinct())
+            if dominated.limit(1).count() == 0:
+                break
+            # simultaneity guard: drop (b→y) when y is dominated or any edge
+            # value of b is dominated
+            dset_y = dominated.select("graph_id", F.col("b").alias("y"))
+            safe = dom_pairs.join(dset_y, ["graph_id", "y"], "left_anti")
+            bad_vals = (bedges.select("graph_id", F.col("node").alias("x"),
+                                      "val")
+                        .join(dominated.select("graph_id",
+                                               F.col("b").alias("val")),
+                              ["graph_id", "val"], "left_semi")
+                        .select("graph_id", "x").distinct())
+            safe = safe.join(bad_vals, ["graph_id", "x"], "left_anti")
+            accepted = ckpt_util.checkpoint(
+                safe.groupBy("graph_id", "x").agg(F.min("y").alias("y")))
+            if accepted.limit(1).count() == 0:
+                break
+            wit_parts.append(accepted.select(
+                "graph_id", F.col("x").alias("bnode"),
+                F.col("y").alias("target")))
+            # accepted shares lineage (and therefore attribute ids) with cur,
+            # so the mapping application renames its join keys outright —
+            # df.col-based self-join disambiguation is not reliable here
+            sm = accepted.select(F.col("graph_id").alias("_sg"),
+                                 F.col("x").alias("_sb"),
+                                 F.col("y").alias("_st"))
+            om = accepted.select(F.col("graph_id").alias("_og"),
+                                 F.col("x").alias("_ob"),
+                                 F.col("y").alias("_ot"))
+            nxt = ckpt_util.checkpoint(
+                cur.join(sm, on=[F.col("graph_id") == F.col("_sg"),
+                                 F.col("subj") == F.col("_sb")], how="left")
+                .drop("_sg", "_sb")
+                .join(om, on=[F.col("graph_id") == F.col("_og"),
+                              F.col("obj") == F.col("_ob")], how="left")
+                .drop("_og", "_ob")
+                .select("graph_id",
+                        F.coalesce("_st", "subj").alias("subj"), "pred",
+                        F.coalesce("_ot", "obj").alias("obj"))
+                .dropDuplicates())
+            # dead once nxt has materialized; the witness reads accepted
+            held.release(edges, dominated, cur)
+            cur = nxt
+        if wit_parts:
+            wit = wit_parts[0]
+            for p in wit_parts[1:]:
+                wit = wit.union(p)
+            # transitive composition (GraphLeaning.transitiveClosure:448-483):
+            # a pass-k target may itself be remapped in a later pass; chain
+            # length is bounded by the pass count
+            m = ckpt_util.checkpoint(wit.select(
+                F.col("graph_id").alias("_mg"), F.col("bnode").alias("_b"),
+                F.col("target").alias("_t")))
+            held.keep(m)   # the returned witness reads m
+            for _ in range(len(wit_parts)):
+                wit = (wit.join(m, on=[F.col("graph_id") == F.col("_mg"),
+                                       F.col("target") == F.col("_b")],
+                                how="left")
+                       .drop("_mg", "_b")
+                       .select("graph_id", "bnode",
+                               F.coalesce("_t", "target").alias("target")))
+        else:
+            wit = spark.createDataFrame(
+                [], "graph_id string, bnode string, target string")
+        held.keep(cur, *wit_parts)
+        return cur, wit
 
 
 def _kernel_fn(budget: int):
@@ -246,18 +258,18 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
 
     # graphs still too large for one task bypass the kernel entirely
     if run_pre or biggest is None or biggest > kernel_graph_rows:
-        big_ids = (tri.groupBy("graph_id").agg(F.count("*").alias("n"))
-                   .where(F.col("n") > kernel_graph_rows)
-                   .select("graph_id").localCheckpoint(True))
+        big_ids = ckpt_util.checkpoint(
+            tri.groupBy("graph_id").agg(F.count("*").alias("n"))
+            .where(F.col("n") > kernel_graph_rows).select("graph_id"))
         n_big = big_ids.count()
     else:
         big_ids, n_big = None, 0
 
     small = tri if not n_big else \
         tri.join(F.broadcast(big_ids), "graph_id", "left_anti")
-    out = (small.groupBy("graph_id")
-           .applyInPandas(_kernel_fn(kernel_budget), _OUT_SCHEMA)
-           ).localCheckpoint(True)
+    out = ckpt_util.checkpoint(
+        small.groupBy("graph_id")
+        .applyInPandas(_kernel_fn(kernel_budget), _OUT_SCHEMA))
     lean = (out.where(F.col("kind") == "t")
             .select("graph_id", F.col("a").alias("subj"),
                     F.col("b").alias("pred"), F.col("c").alias("obj")))

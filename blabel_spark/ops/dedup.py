@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from blabel_spark import ckpt_util
+
 HEX = "0123456789abcdef"
 
 
@@ -79,7 +81,12 @@ def lsh_candidate_pairs(docs: DataFrame, n_hashes: int = 4, k: int = 5,
     Pass ``signatures`` (a minhash_signatures() result) to reuse one
     signature computation across banding and downstream verification —
     signature hashing dominates the cost, so consumers should compute it
-    once."""
+    once.
+
+    The band table is checkpointed eagerly: calling this runs one job.
+    The returned pairs read its blocks, which the caller's enclosing
+    ``ckpt_util.scope()`` releases on exit (with no scope open the
+    blocks stay until the session's ContextCleaner frees them)."""
     sig = signatures if signatures is not None \
         else minhash_signatures(docs, n_hashes, k, unit=unit)
     # one posexplode pass — a union of per-band selects would re-evaluate
@@ -89,12 +96,11 @@ def lsh_candidate_pairs(docs: DataFrame, n_hashes: int = 4, k: int = 5,
     # whole shingle+md5 plan on BOTH sides (the round-6 before-plan showed
     # two full signature subtrees).  The table is (doc_id, band_id,
     # band_key) — n_hashes rows per doc, far narrower than the corpus.
-    bands = sig.select(
+    bands = ckpt_util.checkpoint(sig.select(
         "doc_id",
         F.posexplode(F.array(
             *[F.substring(F.col(f"h{s}"), 1, band_chars)
-              for s in range(n_hashes)])).alias("band_id", "band_key")) \
-        .localCheckpoint(True)
+              for s in range(n_hashes)])).alias("band_id", "band_key")))
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -125,11 +131,12 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame, k: int = 5,
     # materialized once: the shingle relation feeds the per-doc counts AND
     # both sides of the intersection join.  Restricted to pair members
     # BEFORE the explode — shingling the full corpus to verify a small
-    # candidate set is a linear-but-needless k× materialization.
-    shingles = shingle_input_docs(docs, pairs).select(
+    # candidate set is a linear-but-needless k× materialization.  Its
+    # blocks belong to the caller's enclosing ckpt_util scope.
+    shingles = ckpt_util.checkpoint(shingle_input_docs(docs, pairs).select(
         "doc_id",
         F.explode(F.array_distinct(_shingles(text_col, k, unit)))
-        .alias("sh")).localCheckpoint(True)
+        .alias("sh")))
     counts = shingles.groupBy("doc_id").agg(F.count("*").alias("n"))
     sa = shingles.select(F.col("doc_id").alias("doc_a"), "sh")
     sb = shingles.select(F.col("doc_id").alias("_docb"),
@@ -286,22 +293,20 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 32,
     at least one pair; docs without a match keep themselves by
     construction and are not emitted.
     """
-    from blabel_spark.ckpt_util import ckpt_rdd as _ckpt_rdd
-    from blabel_spark.ckpt_util import release as _release
-    edges = pairs.select(F.col("doc_a").alias("a"),
-                         F.col("doc_b").alias("b")).distinct() \
-        .localCheckpoint(True)
-    edges_h = _ckpt_rdd(edges)
-    if edges.count() <= kernel_max_pairs:
-        return _cluster_kernel(edges)
-    sym = edges.union(edges.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b")))
-    comp = (sym.select(F.col("a").alias("doc_id")).distinct()
-            .withColumn("comp", F.col("doc_id")).localCheckpoint(True))
-    # release each round's superseded checkpoint immediately (same O(1)
-    # retained-state discipline as canon.distributed.bnode_components)
-    prev_h = _ckpt_rdd(comp)
-    try:
+    with ckpt_util.scope() as held:
+        # lazy checkpoint + one action: the routing count materializes the
+        # distinct edge table, so no separate checkpoint job runs
+        edges = ckpt_util.checkpoint(
+            pairs.select(F.col("doc_a").alias("a"),
+                         F.col("doc_b").alias("b")).distinct(), eager=False)
+        if edges.count() <= kernel_max_pairs:
+            held.keep(edges)   # the kernel's lazy output reads it
+            return _cluster_kernel(edges)
+        sym = edges.union(edges.select(F.col("b").alias("a"),
+                                       F.col("a").alias("b")))
+        comp = ckpt_util.checkpoint(
+            sym.select(F.col("a").alias("doc_id")).distinct()
+            .withColumn("comp", F.col("doc_id")))
         for _ in range(max_iter):
             pointer = comp.select(F.col("comp").alias("a"),
                                   F.col("doc_id").alias("b"))
@@ -313,28 +318,22 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 32,
                        .agg(F.min("nbr_comp").alias("nbr_comp")))
             # lazy checkpoint + one action per round (the changed-count
             # job materializes the state and truncates lineage)
-            new = (comp.join(nbr_min, on=[comp.doc_id == nbr_min.b],
-                             how="left")
-                   .select("doc_id",
-                           F.least("comp", F.coalesce("nbr_comp", "comp"))
-                           .alias("comp"),
-                           (F.col("comp") != F.least(
-                               "comp", F.coalesce("nbr_comp", "comp")))
-                           .alias("changed"))).localCheckpoint(False)
+            new = ckpt_util.checkpoint(
+                comp.join(nbr_min, on=[comp.doc_id == nbr_min.b],
+                          how="left")
+                .select("doc_id",
+                        F.least("comp", F.coalesce("nbr_comp", "comp"))
+                        .alias("comp"),
+                        (F.col("comp") != F.least(
+                            "comp", F.coalesce("nbr_comp", "comp")))
+                        .alias("changed")), eager=False)
             n_changed = new.where("changed").count()
-            _release([prev_h])
-            prev_h = _ckpt_rdd(new)
+            held.release(comp)   # superseded: O(1) retained tables
             comp = new.drop("changed")
             if n_changed == 0:
-                _release([edges_h])
+                held.keep(comp)
                 return comp.select("doc_id",
                                    F.col("comp").alias("keeper_doc_id"))
-    except BaseException:
-        # a mid-loop failure must not leak the edge/round checkpoints
-        # (ADVICE r5)
-        _release([edges_h, prev_h])
-        raise
-    _release([edges_h, prev_h])
     raise RuntimeError(
         f"dedup_clusters failed to converge in {max_iter} rounds — "
         "pathologically deep pair graph")

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blabel_spark import ckpt_util
 from blabel_spark import flagship_oracles as _fo
 from blabel_spark.ops.triples_view import TRIPLES_CTE, build_triples, load
 
@@ -307,9 +308,9 @@ def q_trivial_nonlean(spark, sf):
             F.xxhash64(F.lit(1), "graph_id", e).alias("e0"),
             F.xxhash64(F.lit(2), "graph_id", e).alias("e1"))
 
-    edges = (side("subj", "+|", "obj")
-             .union(side("obj", "-|", "subj"))
-             .distinct()).localCheckpoint(True)
+    edges = ckpt_util.checkpoint(side("subj", "+|", "obj")
+                                 .union(side("obj", "-|", "subj"))
+                                 .distinct())
     bedges = edges.where(F.col("is_b"))
     # per-edge frequency → each bnode's rarest edge (deterministic
     # (f, e-key) tie-break; completeness is preserved for EVERY

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blabel_spark import ckpt_util
+
 SEPV = "\x01v"  # composite graph id separator: <doc>\x01v<variant>
 _LANE_MOD = 1 << 40  # lane sums over <2^20 triples stay far from overflow
 
@@ -114,8 +116,8 @@ def metamorphic_report(spark: SparkSession, triples: DataFrame, *,
     from blabel_spark.canon.distributed import canonicalize
 
     tri = triples.select("graph_id", "subj", "pred", "obj")
-    var = (corpus_variants(tri, shuffles, seed) if variants is None
-           else variants).localCheckpoint(True)
+    var = ckpt_util.checkpoint(corpus_variants(tri, shuffles, seed)
+                               if variants is None else variants)
 
     # per-document size stats from the originals
     isb = lambda c: F.col(c).startswith("_:")  # noqa: E731
@@ -140,7 +142,7 @@ def metamorphic_report(spark: SparkSession, triples: DataFrame, *,
     if lean:
         from blabel_spark.lean.distributed import lean_graphs
         lean1, wit1 = lean_graphs(spark, var)
-        lean1 = lean1.localCheckpoint(True)
+        lean1 = ckpt_util.checkpoint(lean1)
         lean2, wit2 = lean_graphs(spark, lean1)
         lean_forms = _form_hashes(
             canonicalize(spark, lean1).labelled).union(

@@ -1,0 +1,63 @@
+"""Checkpoint ownership: every ``localCheckpoint`` goes through
+``ckpt_util.checkpoint``, and nothing checkpointed inside a
+``ckpt_util.scope()`` outlives it unless it was kept."""
+
+import pathlib
+
+import pytest
+
+from blabel_spark import ckpt_util
+from blabel_spark.queries import QUERIES
+from tests.test_queries_oracle import SF
+
+PKG = pathlib.Path(ckpt_util.__file__).parent
+
+
+def _persistent_ids(spark):
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+def test_local_checkpoint_only_in_ckpt_util():
+    users = sorted(str(p.relative_to(PKG)) for p in PKG.rglob("*.py")
+                   if p.name != "ckpt_util.py"
+                   and "localCheckpoint(" in p.read_text())
+    assert users == [], f"localCheckpoint outside ckpt_util: {users}"
+
+
+def test_scope_keep_release_and_exit(spark):
+    """keep hands blocks to the enclosing scope, release unpersists only
+    blocks the scope holds, and exit — also by exception — releases the
+    rest."""
+    outside = spark.range(5).localCheckpoint(True)
+    before = _persistent_ids(spark)
+    with ckpt_util.scope() as outer:
+        with ckpt_util.scope() as inner:
+            kept = ckpt_util.checkpoint(spark.range(7))
+            dropped = ckpt_util.checkpoint(spark.range(9), eager=False)
+            assert len(inner.keep(kept)) == 1
+            inner.release(outside)   # not held here: untouched
+        assert kept.count() == 7
+        assert ckpt_util.ckpt_rdd(dropped).id() not in \
+            _persistent_ids(spark)
+        assert len(_persistent_ids(spark) - before) == 1
+        outer.release(kept)
+        assert _persistent_ids(spark) - before == set()
+    with pytest.raises(ValueError):
+        with ckpt_util.scope():
+            ckpt_util.checkpoint(spark.range(3))
+            raise ValueError
+    assert _persistent_ids(spark) - before == set()
+    assert ckpt_util.ckpt_rdd(outside).id() in _persistent_ids(spark)
+    ckpt_util.release([ckpt_util.ckpt_rdd(outside)])
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_query_leaves_no_blocks_after_scope(spark, name):
+    """Only ids new since ``before`` are checked: the ContextCleaner may
+    drop older RDDs while the query runs."""
+    before = _persistent_ids(spark)
+    with ckpt_util.scope():
+        QUERIES[name](spark, SF).collect()
+    left = _persistent_ids(spark) - before
+    assert not left, f"{name} left {len(left)} persistent RDDs"

@@ -135,6 +135,26 @@ def test_dedup_clusters_kernel_loop_parity(spark):
                       ("x", "x"), ("y", "x")}
 
 
+def test_dedup_clusters_kernel_route_scope_releases_edges(spark):
+    """The kernel route's lazy output reads the checkpointed edge table:
+    it is kept for the caller, and the caller's scope releases it."""
+    from blabel_spark import ckpt_util
+    from blabel_spark.ops.dedup import dedup_clusters
+
+    def persistent_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(20)],
+                                  "doc_a long, doc_b long")
+    before = persistent_ids()
+    with ckpt_util.scope():
+        rows = dedup_clusters(pairs).collect()
+        assert persistent_ids() - before, "edge table not checkpointed"
+    assert {r["keeper_doc_id"] for r in rows} == {0} and len(rows) == 21
+    assert persistent_ids() - before == set()
+
+
 def test_embedding_near_dups_scale_operating_point(spark):
     """The 16-bit x 12-table default on a 5k-vector corpus: planted
     cosine-0.95 pairs are recovered at the banded-LSH recall the

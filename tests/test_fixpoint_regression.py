@@ -99,14 +99,15 @@ def test_all_small_auto_route_builds_no_loop_state(spark, monkeypatch):
     checkpoints no loop-era table (static messages, bnode→bnode edges,
     initial colours, round state); the result rides on btri, the node
     table and the final labels only, and ``unpersist`` releases them."""
+    from blabel_spark import ckpt_util
     from blabel_spark.canon import distributed as D
     made = []
 
-    def ckpt_rdd(df):
+    def checkpoint(df, eager=True):
         made.append(df)
-        return real(df)
-    real = D._ckpt_rdd
-    monkeypatch.setattr(D, "_ckpt_rdd", ckpt_rdd)
+        return real(df, eager)
+    real = ckpt_util.checkpoint
+    monkeypatch.setattr(ckpt_util, "checkpoint", checkpoint)
 
     def persistent_ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -128,6 +129,47 @@ def test_all_small_auto_route_builds_no_loop_state(spark, monkeypatch):
     res.unpersist(blocking=True)
     left = persistent_ids() - before
     assert len(left) <= 1, f"unpersist left {len(left)} RDDs behind"
+
+
+def test_mid_loop_failure_releases_every_block(spark, monkeypatch):
+    """A failure inside the fixpoint loop propagates and leaves no
+    checkpoint block of the call behind: the loop-era and run scopes
+    release btri, the node table, the edge tables and every round's
+    state on the way out."""
+    import pytest
+
+    from blabel_spark.canon import distributed as D
+    real = D._next_colors
+    rounds = []
+
+    def next_colors(*args, **kwargs):
+        rounds.append(1)
+        if len(rounds) == 3:
+            raise RuntimeError("injected round-3 failure")
+        return real(*args, **kwargs)
+    monkeypatch.setattr(D, "_next_colors", next_colors)
+
+    def persistent_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    sc = spark.sparkContext
+    # the round's job group is set when the failure hits: restore the
+    # thread's properties for the tests that follow
+    props = {p: sc.getLocalProperty(p) for p in (
+        "spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel")}
+    tri = _chain_corpus(spark)
+    before = persistent_ids()
+    try:
+        with pytest.raises(RuntimeError, match="injected round-3"):
+            D.canonicalize(spark, tri, route="fixpoint")
+    finally:
+        for p, v in props.items():
+            sc.setLocalProperty(p, v)
+    assert len(rounds) == 3
+    left = persistent_ids() - before
+    assert not left, f"failed canonicalize left {len(left)} RDDs behind"
 
 
 def test_eager_fallback_parity_and_flat_plans(spark, monkeypatch):

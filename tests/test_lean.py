@@ -236,6 +236,36 @@ def test_trivial_prepass_matches_kernel_only(spark):
         assert all((not is_bnode(t)) or t in surv for t in w.values()), g
 
 
+def test_trivial_prepass_retains_only_its_outputs(spark):
+    """A prepass that accepts mappings in two passes (_:c is only
+    dominated once _:a has been mapped) keeps just the returned triples,
+    the two accepted tables and the witness map m; each pass's edge and
+    dominated tables and the superseded triples are released.  Inside a
+    scope, exiting it releases the rest."""
+    from blabel_spark import ckpt_util
+    from blabel_spark.lean.distributed import trivial_prepass
+
+    def persistent_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    rows = [("g", "_:a", "<p>", "<u>"), ("g", "<v>", "<p>", "<u>"),
+            ("g", "_:c", "<q>", "_:a"), ("g", "_:c", "<q>", "<v>"),
+            ("g", "<w>", "<q>", "<v>")]
+    df = spark.createDataFrame(rows, "graph_id string, subj string, "
+                                     "pred string, obj string")
+    before = persistent_ids()
+    with ckpt_util.scope():
+        cur, wit = trivial_prepass(spark, df)
+        assert {(r.bnode, r.target) for r in wit.collect()} == \
+            {("_:a", "<v>"), ("_:c", "<w>")}
+        assert {(r.subj, r.obj) for r in cur.collect()} == \
+            {("<v>", "<u>"), ("<w>", "<v>")}
+        kept = persistent_ids() - before
+        assert len(kept) == 4, f"prepass retained {len(kept)} RDDs"
+    assert persistent_ids() - before == set()
+
+
 def test_auto_route_big_graph_never_enters_kernel(spark):
     """Scale routing: a graph over ``kernel_graph_rows`` is shrunk by the
     trivial pre-pass and finished by the BFS solver — the whole-graph

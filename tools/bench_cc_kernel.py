@@ -16,8 +16,8 @@ import time
 import pandas as pd
 from pyspark.sql import functions as F
 
-from blabel_spark.canon.distributed import (
-    _cc_kernel, _ckpt_rdd, _release, is_bnode_col)
+from blabel_spark.canon.distributed import _cc_kernel, is_bnode_col
+from blabel_spark.ckpt_util import ckpt_rdd, release
 from blabel_spark.ops.triples_view import build_triples
 from blabel_spark.spark_util import get_spark
 
@@ -83,7 +83,7 @@ def measure(fn):
     chk = df.agg(F.sum(F.xxhash64("graph_id", "bnode", "comp")
                        .cast("decimal(38,0)")).alias("c")).collect()[0]["c"]
     chk = int(chk)
-    _release([_ckpt_rdd(df)])
+    release([ckpt_rdd(df)])
     return wall, n, chk
 
 

@@ -22,7 +22,8 @@ import time
 from pyspark.sql import functions as F
 
 from blabel_spark.canon.distributed import (
-    _ckpt_rdd, _ikey, _release, bnode_components, is_bnode_col)
+    _ikey, bnode_components, is_bnode_col)
+from blabel_spark.ckpt_util import ckpt_rdd, release
 from blabel_spark.pair_kernels import term_pair_exprs
 from blabel_spark.ops.triples_view import build_triples
 from blabel_spark.spark_util import get_spark
@@ -96,7 +97,7 @@ def measure(fn):
         F.xxhash64("graph_id", "ck0", "ck1", "p0", "p1",
                    F.coalesce("ks0", "ss0"), F.coalesce("ko0", "os0"))
         .cast("decimal(38,0)")).alias("c")).collect()[0]["c"])
-    _release([_ckpt_rdd(df)])
+    release([ckpt_rdd(df)])
     return wall, n, chk
 
 
