@@ -28,40 +28,42 @@ as ONE iterative join→groupBy loop over the whole corpus at once:
 * order-insensitive hash folds (whole-graph hash, upg graph hash) are
   per-byte sums mod 256, aggregated JVM-side as 16 lane sums.
 
+``canonicalize`` runs as five ``obs.phase`` scopes, each owning the Spark
+jobs it fires: ``prep`` (probe, routing, components), ``loop`` (one
+nested ``round`` phase per round), ``leaf_kernel``, ``comp_mux`` and
+``mux``; the per-graph route is ``prep`` plus ``by_graph``.
+
 Scale notes (100 TB / 1000 executors): loop state and message tables
 shuffle on (graph_id, comp, bnode) — high-cardinality, uniform keys; AQE
-handles stragglers; per-iteration ``localCheckpoint`` truncates lineage so
+handles stragglers; per-iteration lazy ``localCheckpoint``s truncate
+lineage (the phases set the marked-ancestors property, see obs.py) so
 plans stay constant-size; iteration count is driven by the largest
 component diameter, not corpus size.
 """
 
 from __future__ import annotations
 
-import time as _time
 from dataclasses import dataclass, field
-from itertools import count as _itercount
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from blabel_spark import ckpt_util
+from blabel_spark import ckpt_util, obs
 from blabel_spark.hashing import enc_pair, get_hash_family
 from blabel_spark.pair_kernels import (
     combine2_pairs_sql,
     combine3_pairs_sql,
     fold_messages,
-    hash_int_pair_udf_for,
-    md5_pair,
+    int_pair_exprs,
     pair_hex,
     term_pair_exprs,
     unordered_sum_pairs_sql,
 )
 
 TRIPLE_COLS = ("graph_id", "subj", "pred", "obj")
-
-# per-call sequence for fixpoint job-group names (see the loop)
-_FIXPOINT_SEQ = _itercount()
+CK = ["ck0", "ck1"]   # interned component key
 
 
 def is_bnode_col(c):
@@ -256,9 +258,6 @@ def bnode_components(btri: DataFrame, max_iter: int = 64,
 # preparation
 # ---------------------------------------------------------------------------
 
-SEP = "\x01"  # cannot occur inside an N3 term
-
-
 def _ikey(*cols) -> tuple:
     """Flyweight term interning (S4, LabelRDFGraph.java:220-221 analogue):
     a deterministic 128-bit key for a (graph, term) or (graph, comp) tuple
@@ -272,28 +271,47 @@ def _ikey(*cols) -> tuple:
             F.xxhash64(F.lit(2), *[F.col(c) for c in cols]))
 
 
-
-def _prepare_bnode_triples(triples: DataFrame, tp=md5_pair,
-                           broadcast_rows: int = 0,
-                           graph_rows_bound: int | None = None
-                           ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-    """Split into (bnode-touching triples with comp, static hash pairs and
-    interned key columns, ground triples, bnode→comp table, n_bnodes).
+def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
+          broadcast_rows, checkpoint_dir):
+    """The prep phase: None on the per-graph kernel route, else (btri,
+    ground, node_comp, loop_comps, kernel_parts) — ``loop_comps`` keys
+    the components that enter the loop (None: all), ``kernel_parts``
+    holds the bnode triples the leaf kernel colours directly.
 
     btri columns beyond the triple: comp, (ck0, ck1) interned component
     key, (p0, p1) pred hash, (ss0, ss1)/(os0, os1) static term hashes when
     subj/obj is ground (null otherwise), (ks0, ks1)/(ko0, ko1) interned
     bnode keys when subj/obj is blank (null otherwise)."""
-    tri = triples.select(*TRIPLE_COLS)
+    # F2 hash-family selection (-s, LabelRDFGraph.java:150-161): any
+    # 16-byte family rides the int64-pair engine; wider families (sha1/
+    # sha256/sha512) go through the per-graph kernel path instead
+    if get_hash_family(hash_name).n_bytes != 16:
+        return None
+    # ONE probe pass serves P6 validation (bnode predicates fail loudly,
+    # as in the local oracle) and the routing decision
+    probe = (triples.groupBy("graph_id")
+             .agg(F.count("*").alias("n"),
+                  F.max(F.when(is_bnode_col("pred"), 1).otherwise(0))
+                  .alias("badp"))
+             .agg(F.max("n").alias("maxn"), F.max("badp").alias("badp"))
+             .collect()[0])
+    if probe["badp"]:
+        raise ValueError("blank node in predicate position")
+    biggest = probe["maxn"] or 0
+    metrics["max_graph_rows"] = int(biggest)
+    if route == "by_graph" or (
+            route == "auto" and checkpoint_dir is None
+            and biggest <= kernel_graph_rows):
+        return None
     has_b = is_bnode_col("subj") | is_bnode_col("obj")
-    ground = tri.where(~has_b)
-    btri = tri.where(has_b)
-
-    comp = bnode_components(btri, graph_rows_bound=graph_rows_bound)
+    ground = triples.where(~has_b)
+    btri = triples.where(has_b)
+    node_comp = bnode_components(btri, graph_rows_bound=biggest)
     # the bnode→comp table has one row per blank node (≪ triples): its
     # count is the n_bnodes metric AND the broadcast decision for the
     # decoration join below, which otherwise exchanges the whole btri set
-    n_bnodes = comp.count()
+    n_bnodes = metrics["n_bnodes"] = node_comp.count()
+    tp = term_pair_exprs(hash_name)
     p0, p1 = tp(F.col("pred"))
     s0, s1 = tp(F.col("subj"))
     o0, o1 = tp(F.col("obj"))
@@ -326,10 +344,10 @@ def _prepare_bnode_triples(triples: DataFrame, tp=md5_pair,
     # subject when blank, else its (then necessarily blank) object, so the
     # key reuses the k_s/k_o interning exprs computed for btri anyway.
     ca0, ca1 = _ikey("graph_id", "bnode")
-    comp_keyed = comp.select(ca0.alias("_a0"), ca1.alias("_a1"), "comp")
+    comp_keyed = node_comp.select(ca0.alias("_a0"), ca1.alias("_a1"), "comp")
     ak0 = F.when(is_bnode_col("subj"), k_s0).otherwise(k_o0)
     ak1 = F.when(is_bnode_col("subj"), k_s1).otherwise(k_o1)
-    btri = (
+    btri = ckpt_util.checkpoint(
         btri.withColumn("_a0", ak0).withColumn("_a1", ak1)
         .join(_mb(comp_keyed, n_bnodes, broadcast_rows), ["_a0", "_a1"])
         .drop("_a0", "_a1")
@@ -344,7 +362,33 @@ def _prepare_bnode_triples(triples: DataFrame, tp=md5_pair,
         .withColumn("ko0", F.when(is_bnode_col("obj"), k_o0))
         .withColumn("ko1", F.when(is_bnode_col("obj"), k_o1))
     )
-    return btri, ground, comp, n_bnodes
+    # component-granular routing: the reference colours every blank-node
+    # component on its own (HashGraph.blankNodePartition,
+    # GraphLabelling.java:155-168), so on route="auto" a component whose
+    # bnode-touching rows fit a task (the per-graph rule's ≤) goes straight
+    # to the leaf kernel and only oversized ones pay the per-round loop.
+    # route="fixpoint" and resumable runs loop every component (limit 0:
+    # each component has ≥ 1 row).  ONE size aggregation yields the
+    # bnode-triple count, the component count and the oversized count.
+    comp_rows = btri.groupBy(*CK).agg(F.count("*").alias("n"))
+    limit = (kernel_graph_rows if route == "auto" and checkpoint_dir is None
+             else 0)
+    big = F.col("n") > limit
+    sizes = comp_rows.agg(F.sum("n").alias("rows"),
+                          F.count("*").alias("comps"),
+                          F.count(F.when(big, 1)).alias("big")).collect()[0]
+    metrics["bnode_triples"] = int(sizes["rows"] or 0)
+    n_comps = metrics["n_components"] = int(sizes["comps"])
+    n_loop = metrics["n_loop_components"] = int(sizes["big"])
+    metrics["n_kernel_components"] = n_comps - n_loop
+    if n_loop == n_comps:
+        return btri, ground, node_comp, None, []
+    if not n_loop:
+        return btri, ground, node_comp, None, [btri]
+    loop_comps = _mb(ckpt_util.checkpoint(comp_rows.where(big).select(*CK)),
+                     n_loop, broadcast_rows)
+    return (btri, ground, node_comp, loop_comps,
+            [btri.join(loop_comps, CK, "left_anti")])
 
 
 def _edge_views(btri: DataFrame, plus_pair=None,
@@ -436,6 +480,11 @@ def _next_colors(msgs: DataFrame, lab: DataFrame,
     return fold_messages(all_msgs, parts)
 
 
+def _kernel_buckets(spark: SparkSession) -> int:
+    """applyInPandas groups of a kernel route: four per shuffle partition."""
+    return 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def _kernel_colors(btri_kernel: DataFrame, hash_name: str,
                    n_buckets: int) -> DataFrame:
     """Colour whole components with the local branch-and-bound kernel
@@ -454,30 +503,18 @@ def _kernel_colors(btri_kernel: DataFrame, hash_name: str,
               "h0 long, h1 long")
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from blabel_spark.canon.local import (
-            _Colouring, graph_sort_key, is_bnode)
+        from blabel_spark.canon.local import colour_component
         from blabel_spark.hashing import enc_pair, get_hash_family
         hf = get_hash_family(hash_name)
-        BH = hf.blank
+        static: dict[str, bytes] = {}
         rows = []
         for (graph_id, comp), cpdf in pdf.groupby(["graph_id", "comp"],
                                                   sort=False):
-            triples = sorted(set(zip(cpdf["subj"], cpdf["pred"],
-                                     cpdf["obj"])))
-            static: dict[str, bytes] = {}
-            colors: dict[str, bytes] = {}
-            for t in triples:
-                for term in t:
-                    if is_bnode(term):
-                        colors[term] = BH
-                    elif term not in static:
-                        static[term] = hf.hash_string(term)
-            col = _Colouring(triples=triples, static=static, colors=colors,
-                             path=[], leaves={}, colour_iters=[], hf=hf)
-            col.execute()
-            best = min(col.leaves, key=graph_sort_key)
+            _, leaf = colour_component(
+                sorted(set(zip(cpdf["subj"], cpdf["pred"], cpdf["obj"]))),
+                static, hf)
             rows.extend((graph_id, comp, b, *enc_pair(c))
-                        for b, c in col.leaves[best][0].colors.items())
+                        for b, c in leaf.colors.items())
         return pd.DataFrame(rows, columns=["graph_id", "comp", "bnode",
                                            "h0", "h1"])
 
@@ -488,26 +525,10 @@ def _kernel_colors(btri_kernel: DataFrame, hash_name: str,
 
 
 # ---------------------------------------------------------------------------
-# the driver loop
+# canonicalize and its phases
 # ---------------------------------------------------------------------------
 
 DEFAULT_MAX_ITERATIONS = 64
-
-
-def _lazy_checkpoint_ok(spark: SparkSession) -> bool:
-    """Whether per-round LAZY localCheckpoints are sound on this session.
-
-    ``RDD.doCheckpoint`` recursion stops at the first checkpoint-marked
-    RDD unless ``spark.checkpoint.checkpointAllMarkedAncestors`` is set
-    (a static conf — ``spark_util.get_spark`` sets it): with two stacked
-    lazy checkpoints (colours under the convergence table) the inner one
-    would never truncate and per-round plans DOUBLE (diagnosed from event
-    logs in round 4: job stage counts growing ~3/round, "Broadcasting
-    large task binary" warnings).  On foreign sessions the loop falls
-    back to an eager (own-job) colour checkpoint — two jobs per round."""
-    return (spark.sparkContext.getConf().get(
-        "spark.checkpoint.checkpointAllMarkedAncestors", "false")
-        == "true")
 
 
 def _warn_by_graph_ignores(metrics: dict, checkpoint_dir,
@@ -573,53 +594,13 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     via broadcast when at most this many rows — above it every such join
     falls back to the co-partitioned exchange.  2M rows ≈ 100-300 MB
     broadcast, safe for ordinary executors; tune down for small ones.
+
+    ``metrics["phases"]`` holds a record (wall, jobs, stages; see
+    ``obs.phase``) for each phase, which between them run every Spark job
+    of the call; each loop round's record is its ``iterations_log``
+    entry.  The relabel stays lazy and runs in the caller's sink.
     """
-    _t0 = _time.time()
     metrics: dict = {}
-    # F2 hash-family selection (-s, LabelRDFGraph.java:150-161): any
-    # 16-byte family rides the int64-pair engine; wider families (sha1/
-    # sha256/sha512) go through the per-graph kernel path instead
-    hf = get_hash_family(hash_name)
-    if hf.n_bytes != 16:
-        res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
-                                    dip=dip, upg=upg)
-        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations)
-        return res
-    # ONE probe pass serves P6 validation (bnode predicates fail loudly,
-    # as in the local oracle) and the routing decision
-    probe = (triples.groupBy("graph_id")
-             .agg(F.count("*").alias("n"),
-                  F.max(F.when(is_bnode_col("pred"), 1).otherwise(0))
-                  .alias("badp"))
-             .agg(F.max("n").alias("maxn"), F.max("badp").alias("badp"))
-             .collect()[0])
-    if probe["badp"]:
-        raise ValueError("blank node in predicate position")
-    biggest = probe["maxn"] or 0
-    metrics["max_graph_rows"] = int(biggest)
-    if route == "by_graph" or (
-            route == "auto" and checkpoint_dir is None
-            and biggest <= kernel_graph_rows):
-        res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
-                                    dip=dip, upg=upg)
-        res.metrics.update(metrics)
-        res.metrics["t_total_s"] = round(_time.time() - _t0, 3)
-        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations)
-        return res
-
-    tp = term_pair_exprs(hash_name)
-    blank_pair = enc_pair(hf.blank)
-    # duplicate-mux digest: pure codegen for md5 (hash_int_pair_sql),
-    # Arrow UDF only for the non-default 16-byte families
-    if hash_name == "md5":
-        from blabel_spark.pair_kernels import hash_int_pair_sql
-        mx_exprs = hash_int_pair_sql
-    else:
-        _udf = hash_int_pair_udf_for(hash_name)
-
-        def mx_exprs(c):
-            p = _udf(c)
-            return p.getField("h0"), p.getField("h1")
     # RDF graphs are triple SETS (the reference loads into HashGraph /
     # TreeSet structures), but a whole-corpus dropDuplicates here would
     # cost an extra full-input shuffle.  Set semantics are instead
@@ -630,248 +611,66 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     # is dropDuplicates'd
     triples = triples.select(*TRIPLE_COLS)
     with ckpt_util.scope() as run:
-        btri, ground, node_comp, n_bnodes = _prepare_bnode_triples(
-            triples, tp, broadcast_rows, graph_rows_bound=biggest)
-        btri = ckpt_util.checkpoint(btri)
-        metrics["n_bnodes"] = n_bnodes
-        # loop-era state dies once leaf, its last consumer, materializes
-        with ckpt_util.scope() as loop:
-            leaf, n_leaf = _leaf_colours(
-                loop, spark, btri, node_comp, n_bnodes, metrics, _t0,
-                hash_name, route, kernel_graph_rows, broadcast_rows,
-                checkpoint_dir, checkpoint_every, max_iterations)
-            if leaf is None:
-                # bnode-free corpus: the result reads none of our state
-                return CanonResult(
-                    triples.dropDuplicates(), spark.createDataFrame(
-                        [], "graph_id string, bnode string, label string"),
-                    metrics)
-            loop.keep(leaf)
-        n_comps = metrics["n_components"]
-        _t0 = _time.time()
-
-        # ---- per-component canonical hash + mux (GraphColouring.java:121-168,
-        # GraphLabelling.java:100-119) ----------------------------------------
-        # btrij: triple hash columns decorated with their endpoints' leaf
-        # colours, joined on interned long keys — all fixed-width longs, no
-        # strings; consumed once by the per-triple hash below.  leaf is
-        # per-bnode (≪ triples): broadcast when it fits so the decoration is
-        # map-side and btri is never re-exchanged — the distributed analogue
-        # of GraphColouring.labelBlankNodes's O(triples) single pass over an
-        # in-memory colour map (GraphColouring.java:433-451); above
-        # broadcast_rows both joins fall back to shuffles.
-        slab = _mb(
-            leaf.select(F.col("bk0").alias("_s0"), F.col("bk1").alias("_s1"),
-                        F.col("h0").alias("sc0"), F.col("h1").alias("sc1")),
-            n_leaf, broadcast_rows)
-        olab = _mb(
-            leaf.select(F.col("bk0").alias("_o0"), F.col("bk1").alias("_o1"),
-                        F.col("h0").alias("oc0"), F.col("h1").alias("oc1")),
-            n_leaf, broadcast_rows)
-        btrij = (
-            btri
-            .join(slab, on=[btri.ks0 == slab._s0, btri.ks1 == slab._s1],
-                  how="left").drop("_s0", "_s1")
-            .join(olab, on=[btri.ko0 == olab._o0, btri.ko1 == olab._o1],
-                  how="left").drop("_o0", "_o1")
-            .select("graph_id", "ck0", "ck1", "p0", "p1", "ss0", "ss1",
-                    "os0", "os1", "sc0", "sc1", "oc0", "oc1")
-        )
-
-        tm0, tm1 = combine3_pairs_sql(
-            F.coalesce("sc0", "ss0"), F.coalesce("sc1", "ss1"),
-            F.col("p0"), F.col("p1"),
-            F.coalesce("oc0", "os0"), F.coalesce("oc1", "os1"))
-        # per-triple hash rows, deduplicated (set semantics; distinct triples
-        # have distinct (t0, t1) because leaf colours are injective, so this
-        # 4-long dropDuplicates IS triple dedup, far narrower than shuffling
-        # the string triples).  This one exchange is the tail's structural
-        # minimum: a pre-keyed single-exchange variant (repartition on
-        # (ck0, ck1) feeding both the distinct and the fold) measured a
-        # consistent +13% REGRESSION in an interleaved A/B at sf0.1 — the
-        # fold's second exchange is already collapsed by partial aggregation
-        # (per-partition lane sums ≈ n_comps × n_partitions rows at any
-        # scale), so the explicit keying only forfeits map-side dedup and the
-        # balanced 4-key hash (BENCH.md round 5).
-        th = btrij.select("ck0", "ck1", tm0.alias("t0"), tm1.alias("t1")) \
-            .dropDuplicates()
-        cd0, cd1 = _ikey("graph_id", "comp")
-        # ONE aggregation over the per-bnode comp table yields BOTH the
-        # (graph_id, comp) decode dictionary AND the component's bnode count
-        # (the groupBy is the distinct) — replaces a distinct + a separate
-        # leaf-side sizes aggregation + their two broadcast joins with one
-        comp_sizes = (node_comp.groupBy("graph_id", "comp")
-                      .agg(F.count("*").alias("nb"))
-                      .withColumn("ck0", cd0).withColumn("ck1", cd1))
-        # the component hash fold also emits the component's triple count
-        # (nt) from the same two passes — no separate aggregation over th
-        ghc = unordered_sum_pairs_sql(th, ["ck0", "ck1"], "t0", "t1",
-                                      "g0", "g1", extra_init=blank_pair,
-                                      count_col="nt") \
-            .join(_mb(comp_sizes, n_comps, broadcast_rows), ["ck0", "ck1"])
-
-        # duplicate-component key: with set-semantic input (deduped above) and
-        # injective leaf colours, (g0, g1) is the unordered fold over the
-        # component's exact distinct labelled triple set — the distributed
-        # analogue of the oracle's graphs_seen TreeSet equality
-        # (GraphLabelling.java:100-119); (nt, nb) guard the astronomically
-        # rare md5 digest collision between non-isomorphic components
-        dup_w = Window.partitionBy("graph_id", "g0", "g1", "nt", "nb") \
-                      .orderBy("comp")
-        comp_mux = ckpt_util.checkpoint(
-            ghc
-            .withColumn("rank", F.row_number().over(dup_w))
-            # duplicate mux ints: first copy 0, then count+1 = 2, 3, ...
-            # (GraphLabelling.java:100-119 passing count+1 to
-            # getCanonicalGraph)
-            .withColumn("mux_i",
-                        F.when(F.col("rank") == 1, F.lit(0))
-                        .otherwise(F.col("rank")) if dip else F.lit(0))
-            .withColumn("contributes",
-                        F.lit(True) if dip else (F.col("rank") == 1))
-            .withColumns(dict(zip(("mx0", "mx1"), mx_exprs(F.col("mux_i")))))
-            .select("graph_id", "ck0", "ck1", "contributes",
-                    *(c.alias(n) for c, n in zip(combine2_pairs_sql(
-                        "g0", "g1", F.col("mx0"), F.col("mx1")),
-                        ("cb0", "cb1")))))
-        metrics["t_comp_mux_s"] = round(_time.time() - _t0, 3)
-        _t0 = _time.time()
-
-        # ---- upg: graph-level unique hash (GraphLabelling.java:137-150),
-        # merged into the per-component mux table so every downstream
-        # consumer needs ONE compact join + ONE combine3
-        # (combine2(combine2(h,cb),gh) == combine3(h,cb,gh), identical lane
-        # arithmetic) -------------------------------------------------------
-        if upg:
-            gs0, gs1 = tp(F.col("subj"))
-            gp0, gp1 = tp(F.col("pred"))
-            go0, go1 = tp(F.col("obj"))
-            gm0, gm1 = combine3_pairs_sql("a0", "a1", "b0", "b1", "c0", "c1")
-            ground_th = (ground.select(
-                "graph_id", gs0.alias("a0"), gs1.alias("a1"),
-                gp0.alias("b0"), gp1.alias("b1"),
-                go0.alias("c0"), go1.alias("c1"))
-                .select("graph_id", gm0.alias("t0"), gm1.alias("t1"))
-                .dropDuplicates())
-            comb_h = comp_mux.where("contributes").select(
-                "graph_id", F.col("cb0").alias("t0"), F.col("cb1").alias("t1"))
-            ghash = unordered_sum_pairs_sql(ground_th.union(comb_h),
-                                            ["graph_id"], "t0", "t1",
-                                            "gh0", "gh1",
-                                            extra_init=blank_pair)
-            # per-graph table, rows ≤ n_components
-            mux = comp_mux.join(_mb(ghash, n_comps, broadcast_rows),
-                                "graph_id") \
-                .select("ck0", "ck1", "cb0", "cb1", "gh0", "gh1")
-
-            def final_pair(h0, h1):
-                return combine3_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"),
-                                          F.col("gh0"), F.col("gh1"))
-        else:
-            mux = comp_mux.select("ck0", "ck1", "cb0", "cb1")
-
-            def final_pair(h0, h1):
-                return combine2_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"))
-
-        # final per-bnode label: ONE final_pair fold over the per-bnode leaf
-        # table — the final colour is a pure function of (leaf colour,
-        # component mux row), so computing it per triple occurrence (as a
-        # fused in-row relabel would) repeats the same fold once per edge
-        fc0, fc1 = final_pair(F.col("h0"), F.col("h1"))
-        leaf_final = ckpt_util.checkpoint(
-            leaf.join(_mb(mux, n_comps, broadcast_rows), ["ck0", "ck1"])
-            .select("bk0", "bk1",
-                    F.concat(F.lit("_:SK00"), pair_hex(fc0, fc1))
-                    .alias("label")))
-        # leaf_final (just materialized) supersedes both the raw leaf
-        # colours and the per-component mux table — release them; the
-        # result now rides on exactly three checkpoints: btri, node_comp,
-        # leaf_final
-        run.release(leaf, comp_mux)
-        # bnode decode dictionary: the CC node table already holds one row
-        # per distinct (graph, bnode) and is checkpointed — attach keys by
-        # codegen, no extra distinct shuffle
-        dk0, dk1 = _ikey("graph_id", "bnode")
-        bnode_dict = node_comp.select("graph_id", "bnode",
-                                      dk0.alias("bk0"), dk1.alias("bk1"))
-        labels = (leaf_final
-                  .join(_mb(bnode_dict, n_bnodes, broadcast_rows),
-                        ["bk0", "bk1"])
-                  .select("graph_id", "bnode", "label"))
-        metrics["t_mux_s"] = round(_time.time() - _t0, 3)
-
-        # ---- relabel (GraphColouring.labelBlankNodes): two map-side joins
-        # of the original triples against the per-bnode label dictionary on
-        # interned long keys — no per-triple hash folds, no string-keyed
-        # joins
-        sl = _mb(leaf_final.select(F.col("bk0").alias("_s0"),
-                                   F.col("bk1").alias("_s1"),
-                                   F.col("label").alias("_slab")),
-                 n_leaf, broadcast_rows)
-        ol = _mb(leaf_final.select(F.col("bk0").alias("_o0"),
-                                   F.col("bk1").alias("_o1"),
-                                   F.col("label").alias("_olab")),
-                 n_leaf, broadcast_rows)
-        labelled = (
-            btri
-            .join(sl, on=[btri.ks0 == sl._s0, btri.ks1 == sl._s1], how="left")
-            .join(ol, on=[btri.ko0 == ol._o0, btri.ko1 == ol._o1], how="left")
-            .select("graph_id",
-                    F.coalesce("_slab", "subj").alias("subj"),
-                    "pred",
-                    F.coalesce("_olab", "obj").alias("obj"))
-            .union(ground)
-            .dropDuplicates()
-        )
-        return CanonResult(labelled, labels, metrics,
-                           _retained=run.keep(btri, node_comp, leaf_final))
+        with obs.phase("prep", metrics):
+            prep = _prep(triples, metrics, hash_name, route,
+                         kernel_graph_rows, broadcast_rows, checkpoint_dir)
+        if prep is not None:
+            btri, ground, node_comp, loop_comps, kernel_parts = prep
+            # loop-era state dies once leaf, its last consumer, materializes
+            with ckpt_util.scope() as loop:
+                with obs.phase("loop", metrics):
+                    resolved, kernel_parts = _fixpoint(
+                        loop, spark, btri, node_comp, loop_comps,
+                        kernel_parts, metrics, hash_name, broadcast_rows,
+                        checkpoint_dir, checkpoint_every, max_iterations)
+                with obs.phase("leaf_kernel", metrics):
+                    leaf, n_leaf = _leaf_colours(
+                        spark, resolved, kernel_parts, hash_name,
+                        metrics["bnode_triples"] // max(kernel_graph_rows, 1))
+                if leaf is None:
+                    # bnode-free corpus: the result reads none of our state
+                    return CanonResult(
+                        triples.dropDuplicates(), spark.createDataFrame(
+                            [], "graph_id string, bnode string, label string"),
+                        metrics)
+                loop.keep(leaf)
+            with obs.phase("comp_mux", metrics):
+                comp_mux = _comp_mux(btri, node_comp, leaf, n_leaf,
+                                     metrics["n_components"], dip, hash_name,
+                                     broadcast_rows)
+            with obs.phase("mux", metrics):
+                leaf_final, labels = _mux(
+                    comp_mux, leaf, ground, node_comp,
+                    metrics["n_components"], metrics["n_bnodes"], upg,
+                    hash_name, broadcast_rows)
+            # leaf_final (just materialized) supersedes both the raw leaf
+            # colours and the per-component mux table — release them; the
+            # result now rides on exactly three checkpoints: btri,
+            # node_comp, leaf_final
+            run.release(leaf, comp_mux)
+            return CanonResult(
+                _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows),
+                labels, metrics,
+                _retained=run.keep(btri, node_comp, leaf_final))
+    res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
+                                dip=dip, upg=upg)
+    res.metrics["phases"] = {**metrics.pop("phases"),
+                             **res.metrics["phases"]}
+    res.metrics.update(metrics)
+    _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations)
+    return res
 
 
-def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
-                  hash_name, route, kernel_graph_rows, broadcast_rows,
-                  checkpoint_dir, checkpoint_every, max_iterations):
-    """Materialized leaf colours (ck0, ck1, bk0, bk1, h0, h1) of every
-    blank node and their row count — kernel and fixpoint-loop components
-    — or (None, 0) for a bnode-free corpus.  Loop-era tables register with
-    ``loop``, the caller's scope, which is open until leaf materializes."""
+def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
+              metrics, hash_name, broadcast_rows, checkpoint_dir,
+              checkpoint_every, max_iterations):
+    """The loop phase: the colour views (ck0, ck1, bk0, bk1, h0, h1) of
+    components that turned discrete, and ``kernel_parts`` plus those the
+    leaf kernel must finish.  Loop-era tables register with ``loop``, the
+    caller's scope, open until the leaf colours materialize."""
     hf = get_hash_family(hash_name)
     blank_pair = enc_pair(hf.blank)
-    plus_pair = enc_pair(hf.plus)
-    minus_pair = enc_pair(hf.minus)
-    # component-granular routing: the reference colours every blank-node
-    # component on its own (HashGraph.blankNodePartition,
-    # GraphLabelling.java:155-168), so on route="auto" a component whose
-    # bnode-touching rows fit a task (the per-graph rule's ≤) goes straight
-    # to the leaf kernel and only oversized ones pay the per-round loop.
-    # route="fixpoint" and resumable runs loop every component (limit 0:
-    # each component has ≥ 1 row).  ONE size aggregation yields the
-    # bnode-triple count, the component count and the oversized count.
-    CK = ["ck0", "ck1"]
-    comp_rows = btri.groupBy(*CK).agg(F.count("*").alias("n"))
-    limit = (kernel_graph_rows if route == "auto" and checkpoint_dir is None
-             else 0)
-    big = F.col("n") > limit
-    sizes = comp_rows.agg(F.sum("n").alias("rows"),
-                          F.count("*").alias("comps"),
-                          F.count(F.when(big, 1)).alias("big")).collect()[0]
-    metrics["bnode_triples"] = int(sizes["rows"] or 0)
-    n_comps = metrics["n_components"] = int(sizes["comps"])
-    n_loop = metrics["n_loop_components"] = int(sizes["big"])
-    metrics["n_kernel_components"] = n_comps - n_loop
-    kernel_parts: list[DataFrame] = []
-    loop_btri = btri
-    if n_loop < n_comps:
-        if n_loop:
-            big_comps = ckpt_util.checkpoint(
-                comp_rows.where(big).select(*CK))
-            big_comps = _mb(big_comps, n_loop, broadcast_rows)
-            loop_btri = btri.join(big_comps, CK, "left_semi")
-            kernel_parts.append(btri.join(big_comps, CK, "left_anti"))
-        else:
-            kernel_parts.append(btri)
-    metrics["t_prep_s"] = round(_time.time() - t0, 3)
-    _t0 = _time.time()
-
+    n_loop = metrics["n_loop_components"]
     ckpt = None
     restored = None
     if checkpoint_dir:
@@ -886,7 +685,7 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
     # * static messages are pre-combined to (ck, bk, m) — their value is
     #   constant across rounds, and materializing the combine here keeps
     #   the ~200-node combine3 lane tree OUT of every round's plan
-    #   analysis and map stage (round 5 recomputed it per round);
+    #   analysis and map stage;
     # * bnode→bnode edges are pre-partitioned on the colour lookup key:
     #   when the colour table outgrows broadcast_rows, each round's
     #   shuffle-hash join then exchanges only the (per-bnode, shrinking)
@@ -894,7 +693,10 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
     # Both are built from the loop components' rows only, and not at all
     # when every component went to the kernel.
     if n_loop:
-        edges_raw = _edge_views(loop_btri, plus_pair, minus_pair)
+        loop_btri = btri if loop_comps is None else \
+            btri.join(loop_comps, CK, "left_semi")
+        edges_raw = _edge_views(loop_btri, enc_pair(hf.plus),
+                                enc_pair(hf.minus))
         sm0, sm1 = combine3_pairs_sql("ot0", "ot1", "p0", "p1", "mk0", "mk1")
         static_msgs = ckpt_util.checkpoint(
             edges_raw.where(F.col("ot0").isNotNull())
@@ -913,7 +715,7 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
     superseded: list[DataFrame] = []   # released after the next collect
     # round-1 bounds: every loop component starts active (exact); its
     # colour rows are at most the bnode count (exact after round 1)
-    n_act, n_lab_rows = n_loop, n_bnodes
+    n_act, n_lab_rows = n_loop, metrics["n_bnodes"]
     if restored is not None:
         it, lab, conv_prev, res_df, kern_df = restored
         metrics["resumed_from_iteration"] = it
@@ -934,138 +736,101 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
             .withColumn("h0", F.lit(blank_pair[0]))
             .withColumn("h1", F.lit(blank_pair[1]))
         )
-        if n_loop < n_comps:
-            lab = lab.join(big_comps, CK, "left_semi")
+        if loop_comps is not None:
+            lab = lab.join(loop_comps, CK, "left_semi")
         lab = ckpt_util.checkpoint(lab)
         conv_prev = lab.groupBy(*CK).agg(F.lit(1).alias("prev_nc"))
         # round 1 is the initial colour table's only consumer: retire it
         # with that round like any other superseded round state
         superseded = [lab]
     # per-iteration observability: one entry per round with component
-    # status counts and wall times (the "per-partition lineage + metrics"
-    # north_rule line, at fixpoint granularity)
+    # status counts, wall, jobs and stages (the "per-partition lineage +
+    # metrics" north_rule line, at fixpoint granularity).  The job and
+    # stage counts MUST stay flat across rounds — growth is lineage
+    # leaking through the lazy checkpoints, and the regression tests pin
+    # exactly this invariant.
     iter_log: list[dict] = []
-    _sc = spark.sparkContext
-    # per-CALL nonce in the job-group name: statusTracker matches groups
-    # by string over the whole application, so a bare "it{N}" collides
-    # with every earlier canonicalize in the session and inflates the
-    # recorded job/stage counts for early rounds (prior runs all have a
-    # round N, fewer reach round N+5 — the decaying-counts signature)
-    _run_tag = next(_FIXPOINT_SEQ)
     # n_act > 0 on every entry: a round with no active component breaks
     while n_act:
         it += 1
-        _it_t0 = _time.time()
-        # every job this round fires (eager-fallback checkpoint + status
-        # collect, or just the collect on the lazy path) runs under a
-        # per-round job group: iterations_log records the round's job and
-        # stage counts, which MUST stay flat across rounds — growth is the
-        # lazy-checkpoint lineage bug (see _lazy_checkpoint_ok), and the
-        # regression test pins exactly this invariant.
-        _grp = f"blabel-fixpoint-r{_run_tag}-it{it}"
-        # setJobGroup clobbers three thread-local properties — snapshot
-        # and restore ALL of them, not just the group id, so a caller's
-        # job description / interruptOnCancel survive the loop (ADVICE r5)
-        _prev_props = {p: _sc.getLocalProperty(p) for p in (
-            "spark.jobGroup.id", "spark.job.description",
-            "spark.job.interruptOnCancel")}
-        _sc.setJobGroup(_grp, "colour-refinement round")
-        sm = static_msgs if active is None else \
-            static_msgs.join(_mb(active, n_act, broadcast_rows),
-                             CK, "left_semi")
-        msgs = _iteration_messages(sm, bb_edges, lab, n_lab_rows,
-                                   broadcast_rows)
-        # ONE driver-sequenced job per round (was three: eager fold
-        # checkpoint + eager convergence checkpoint + status collect).
-        # Both checkpoints are LAZY: the single status collect below runs
-        # fold → audit → status as one job, materializing both tables'
-        # cached blocks for every later consumer; lineage still truncates
-        # at materialization, so plans stay constant-size across rounds.
-        # The reference's loop likewise does colouring + partition rebuild
-        # + termination test in one in-memory pass per round
-        # (GraphColouring.java:463-666) — this is its driver-barrier
-        # analogue: iteration count scales with component diameter, so
-        # per-round fixed latency is the loop's only serial section.
-        # CAUTION: lazy is only sound when doCheckpoint recurses past the
-        # first marked RDD (spark.checkpoint.checkpointAllMarkedAncestors,
-        # set by spark_util.get_spark) — otherwise the colour table under
-        # the marked convergence table would never truncate and per-round
-        # plans double in size; on foreign sessions fall back to an eager
-        # (own-job) colour checkpoint, i.e. two jobs per round.
-        new_lab = ckpt_util.checkpoint(
-            _next_colors(msgs, lab, n_lab_rows),
-            eager=not _lazy_checkpoint_ok(spark))
+        with obs.phase("round") as rec:
+            rec["iteration"] = it
+            sm = static_msgs if active is None else \
+                static_msgs.join(_mb(active, n_act, broadcast_rows),
+                                 CK, "left_semi")
+            msgs = _iteration_messages(sm, bb_edges, lab, n_lab_rows,
+                                       broadcast_rows)
+            # ONE driver-sequenced job per round: both checkpoints are
+            # LAZY, and the status collect below runs fold → audit →
+            # status as one job, materializing both tables for every later
+            # consumer.  Lineage still truncates at materialization (the
+            # phase sets the marked-ancestors property, see obs.py), so
+            # plans stay constant-size across rounds.  The reference's loop
+            # likewise colours, rebuilds the partition and tests
+            # termination in one pass per round (GraphColouring.java:
+            # 463-666); per-round latency is the loop's only serial section.
+            new_lab = ckpt_util.checkpoint(
+                _next_colors(msgs, lab, n_lab_rows), eager=False)
 
-        # convergence + refinement audit riding the fold output: the fold
-        # passes each bnode's previous colour through (oh columns), so we
-        # verify every round strictly REFINES the partition (each new
-        # class lies inside one old class ⇔ #distinct(old,new) pairs ==
-        # #distinct new) with no extra join against the previous state.
-        # An md5 collision that merges classes while the component still
-        # grows would otherwise keep status 'active' and silently diverge
-        # from the oracle (GraphColouring.java:563-635 recovers
-        # deterministically — here violating components route to the
-        # kernel, which has that recovery).  Staged two-level aggregation
-        # instead of multi-countDistinct: Spark plans the latter as an
-        # Expand that triples the bnode rows before the exchange, while
-        # these stages collapse rows map-side at every step.
-        pair_cnt = (new_lab.groupBy(*CK, "oh0", "oh1", "h0", "h1")
-                    .agg(F.count("*").alias("npair")))
-        newc = (pair_cnt.groupBy(*CK, "h0", "h1")
-                .agg(F.sum("npair").alias("nb_h"),
-                     F.count("*").alias("n_old")))
-        # the previous round's class count rides the SAME aggregation as
-        # tagged union rows instead of a per-round broadcast join: every
-        # active component contributes exactly one prev row (conv_prev is
-        # derived from the previous conv, or the round-1 seed), so
-        # max(prev_nc) recovers it and count(nb_h) still counts only the
-        # real colour-class rows — one fewer broadcast build per round,
-        # same status arithmetic.
-        nul = F.lit(None).cast("long")
-        conv = ckpt_util.checkpoint(
-            newc.select(*CK, "nb_h", "n_old", nul.alias("prev_nc"))
-            .union(conv_prev.select(
-                *CK, nul.alias("nb_h"), nul.alias("n_old"),
-                F.col("prev_nc").cast("long")))
-            .groupBy(*CK)
-            .agg(F.count("nb_h").alias("nc"), F.sum("nb_h").alias("nb"),
-                 F.sum("n_old").alias("ncross"),
-                 F.max("prev_nc").alias("prev_nc"))
-            .withColumn("status",
-                        F.when(F.col("ncross") != F.col("nc"), "stalled")
-                        .when(F.col("nc") == F.col("nb"), "discrete")
-                        .when(F.col("nc") <= F.col("prev_nc"), "stalled")
-                        .otherwise("active")), eager=False)
-
-        try:
+            # convergence + refinement audit riding the fold output: the
+            # fold passes each bnode's previous colour through (oh
+            # columns), so we verify every round strictly REFINES the
+            # partition (each new class lies inside one old class ⇔
+            # #distinct(old,new) pairs == #distinct new) with no extra
+            # join against the previous state.  An md5 collision that
+            # merges classes while the component still grows would
+            # otherwise keep status 'active' and silently diverge from the
+            # oracle (GraphColouring.java:563-635 recovers
+            # deterministically — here violating components route to the
+            # kernel, which has that recovery).  Staged two-level
+            # aggregation instead of multi-countDistinct: Spark plans the
+            # latter as an Expand that triples the bnode rows before the
+            # exchange, while these stages collapse rows map-side at every
+            # step.
+            pair_cnt = (new_lab.groupBy(*CK, "oh0", "oh1", "h0", "h1")
+                        .agg(F.count("*").alias("npair")))
+            newc = (pair_cnt.groupBy(*CK, "h0", "h1")
+                    .agg(F.sum("npair").alias("nb_h"),
+                         F.count("*").alias("n_old")))
+            # the previous round's class count rides the SAME aggregation
+            # as tagged union rows instead of a per-round broadcast join:
+            # every active component contributes exactly one prev row
+            # (conv_prev is derived from the previous conv, or the round-1
+            # seed), so max(prev_nc) recovers it and count(nb_h) still
+            # counts only the real colour-class rows — one fewer broadcast
+            # build per round, same status arithmetic.
+            nul = F.lit(None).cast("long")
+            conv = ckpt_util.checkpoint(
+                newc.select(*CK, "nb_h", "n_old", nul.alias("prev_nc"))
+                .union(conv_prev.select(
+                    *CK, nul.alias("nb_h"), nul.alias("n_old"),
+                    F.col("prev_nc").cast("long")))
+                .groupBy(*CK)
+                .agg(F.count("nb_h").alias("nc"), F.sum("nb_h").alias("nb"),
+                     F.sum("n_old").alias("ncross"),
+                     F.max("prev_nc").alias("prev_nc"))
+                .withColumn("status",
+                            F.when(F.col("ncross") != F.col("nc"), "stalled")
+                            .when(F.col("nc") == F.col("nb"), "discrete")
+                            .when(F.col("nc") <= F.col("prev_nc"), "stalled")
+                            .otherwise("active")), eager=False)
             crows = conv.groupBy("status") \
                 .agg(F.count("*").alias("n"),
                      F.sum("nb").alias("b")).collect()
-        finally:
-            for _p, _v in _prev_props.items():
-                _sc.setLocalProperty(_p, _v)
-        _st = _sc.statusTracker()
-        _jids = _st.getJobIdsForGroup(_grp)
-        _jinfos = [_st.getJobInfo(j) for j in _jids]
-        counts = {r["status"]: int(r["n"]) for r in crows}
-        bcounts = {r["status"]: int(r["b"]) for r in crows}
-        iter_log.append({"iteration": it,
-                         "t_round_s": round(_time.time() - _it_t0, 3),
-                         "n_jobs": len(_jids),
-                         "n_stages": sum(len(i.stageIds) for i in _jinfos
-                                         if i is not None),
-                         **{f"n_{k}": int(v) for k, v in counts.items()}})
-        done_comps = conv.where(F.col("status") == "discrete").select(*CK)
-        stall_comps = conv.where(F.col("status") == "stalled").select(*CK)
+            counts = {r["status"]: int(r["n"]) for r in crows}
+            bcounts = {r["status"]: int(r["b"]) for r in crows}
+            rec.update({f"n_{k}": v for k, v in counts.items()})
+        iter_log.append(rec)
 
+        def with_status(df, status):
+            return df.join(_mb(conv.where(F.col("status") == status)
+                               .select(*CK), counts[status], broadcast_rows),
+                           CK, "left_semi")
         if counts.get("discrete"):
-            resolved.append(new_lab.drop("oh0", "oh1")
-                            .join(_mb(done_comps, counts["discrete"],
-                                      broadcast_rows), CK, "left_semi"))
+            resolved.append(with_status(new_lab.drop("oh0", "oh1"),
+                                        "discrete"))
         if counts.get("stalled"):
-            kernel_parts.append(btri.join(
-                _mb(stall_comps, counts["stalled"], broadcast_rows),
-                CK, "left_semi"))
+            kernel_parts.append(with_status(btri, "stalled"))
 
         # this round's collect materialized the new pair: the previous
         # round's tables are dead unless a resolved/kernel view reads them
@@ -1083,10 +848,7 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
                 # over-budget components fall back to the kernel (the
                 # reference uses wall-clock timeouts per document,
                 # RunNQuadsTest.java:76)
-                kernel_parts.append(btri.join(
-                    _mb(conv.where(F.col("status") == "active")
-                        .select(*CK), n_active, broadcast_rows),
-                    CK, "left_semi"))
+                kernel_parts.append(with_status(btri, "active"))
                 metrics["over_budget_comps"] = n_active
             break
 
@@ -1094,38 +856,33 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
         # lazy view over the checkpointed new_lab: both consumers (message
         # join, previous-colour rows) rescan it through a broadcast
         # semi-join — cheaper than materializing a fourth table per round
-        lab = new_lab.drop("oh0", "oh1") \
-            .join(_mb(active, n_active, broadcast_rows), CK, "left_semi")
+        lab = with_status(new_lab.drop("oh0", "oh1"), "active")
         conv_prev = conv.where(F.col("status") == "active") \
             .select(*CK, F.col("nc").alias("prev_nc"))
         n_act = n_active
         n_lab_rows = bcounts.get("active", 0)
 
         if ckpt is not None and it % checkpoint_every == 0:
-            res_u = resolved[0] if resolved else None
-            for p in (resolved[1:] if resolved else []):
-                res_u = res_u.union(p)
-            ker_u = kernel_parts[0] if kernel_parts else None
-            for p in (kernel_parts[1:] if kernel_parts else []):
-                ker_u = ker_u.union(p)
-            ckpt.commit(it, lab, conv_prev, res_u, ker_u)
+            ckpt.commit(it, lab, conv_prev,
+                        reduce(DataFrame.union, resolved) if resolved
+                        else None,
+                        reduce(DataFrame.union, kernel_parts) if kernel_parts
+                        else None)
 
     metrics["colour_iterations"] = it
     metrics["iterations_log"] = iter_log
-    metrics["t_loop_s"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
+    return resolved, kernel_parts
 
-    # leaf colours: distributed-discrete ∪ kernel output (interned schema)
+
+def _leaf_colours(spark, resolved, kernel_parts, hash_name, rows_buckets):
+    """The leaf_kernel phase: the materialized leaf colours of every
+    blank node and their row count, or (None, 0) for a bnode-free corpus.
+    ``rows_buckets``: about one task-sized component per kernel bucket."""
     parts = list(resolved)
     if kernel_parts:
-        kb = kernel_parts[0]
-        for p in kernel_parts[1:]:
-            kb = kb.union(p)
-        # about one task-sized component's worth of rows per bucket, and
         # no fewer buckets than the per-graph kernel route uses
-        kc = _kernel_colors(kb, hash_name, max(
-            4 * int(spark.conf.get("spark.sql.shuffle.partitions")),
-            metrics["bnode_triples"] // max(kernel_graph_rows, 1)))
+        kc = _kernel_colors(reduce(DataFrame.union, kernel_parts), hash_name,
+                            max(_kernel_buckets(spark), rows_buckets))
         c0, c1 = _ikey("graph_id", "comp")
         b0, b1 = _ikey("graph_id", "bnode")
         parts.append(kc.select(c0.alias("ck0"), c1.alias("ck1"),
@@ -1133,13 +890,185 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
                                "h0", "h1"))
     if not parts:
         return None, 0
-    leaf = parts[0]
-    for p in parts[1:]:
-        leaf = leaf.union(p)
-    leaf = ckpt_util.checkpoint(leaf)
-    n_leaf = leaf.count()
-    metrics["t_leaf_kernel_s"] = round(_time.time() - _t0, 3)
-    return leaf, n_leaf
+    leaf = ckpt_util.checkpoint(reduce(DataFrame.union, parts))
+    return leaf, leaf.count()
+
+
+def _comp_mux(btri, node_comp, leaf, n_leaf, n_comps, dip, hash_name,
+              broadcast_rows) -> DataFrame:
+    """The comp_mux phase: per-component canonical hash + duplicate mux
+    (GraphColouring.java:121-168, GraphLabelling.java:100-119), checkpointed
+    as (graph_id, ck0, ck1, contributes, cb0, cb1)."""
+    blank_pair = enc_pair(get_hash_family(hash_name).blank)
+    # btrij: triple hash columns decorated with their endpoints' leaf
+    # colours, joined on interned long keys — all fixed-width longs, no
+    # strings; consumed once by the per-triple hash below.  leaf is
+    # per-bnode (≪ triples): broadcast when it fits so the decoration is
+    # map-side and btri is never re-exchanged — the distributed analogue
+    # of GraphColouring.labelBlankNodes's O(triples) single pass over an
+    # in-memory colour map (GraphColouring.java:433-451); above
+    # broadcast_rows both joins fall back to shuffles.
+    slab = _mb(
+        leaf.select(F.col("bk0").alias("_s0"), F.col("bk1").alias("_s1"),
+                    F.col("h0").alias("sc0"), F.col("h1").alias("sc1")),
+        n_leaf, broadcast_rows)
+    olab = _mb(
+        leaf.select(F.col("bk0").alias("_o0"), F.col("bk1").alias("_o1"),
+                    F.col("h0").alias("oc0"), F.col("h1").alias("oc1")),
+        n_leaf, broadcast_rows)
+    btrij = (
+        btri
+        .join(slab, on=[btri.ks0 == slab._s0, btri.ks1 == slab._s1],
+              how="left").drop("_s0", "_s1")
+        .join(olab, on=[btri.ko0 == olab._o0, btri.ko1 == olab._o1],
+              how="left").drop("_o0", "_o1")
+        .select("graph_id", "ck0", "ck1", "p0", "p1", "ss0", "ss1",
+                "os0", "os1", "sc0", "sc1", "oc0", "oc1")
+    )
+
+    tm0, tm1 = combine3_pairs_sql(
+        F.coalesce("sc0", "ss0"), F.coalesce("sc1", "ss1"),
+        F.col("p0"), F.col("p1"),
+        F.coalesce("oc0", "os0"), F.coalesce("oc1", "os1"))
+    # per-triple hash rows, deduplicated (set semantics; distinct triples
+    # have distinct (t0, t1) because leaf colours are injective, so this
+    # 4-long dropDuplicates IS triple dedup, far narrower than shuffling
+    # the string triples).  This one exchange is the tail's structural
+    # minimum: a pre-keyed single-exchange variant (repartition on
+    # (ck0, ck1) feeding both the distinct and the fold) measured a
+    # consistent +13% REGRESSION in an interleaved A/B at sf0.1 — the
+    # fold's second exchange is already collapsed by partial aggregation
+    # (per-partition lane sums ≈ n_comps × n_partitions rows at any
+    # scale), so the explicit keying only forfeits map-side dedup and the
+    # balanced 4-key hash (BENCH.md round 5).
+    th = btrij.select("ck0", "ck1", tm0.alias("t0"), tm1.alias("t1")) \
+        .dropDuplicates()
+    cd0, cd1 = _ikey("graph_id", "comp")
+    # ONE aggregation over the per-bnode comp table yields BOTH the
+    # (graph_id, comp) decode dictionary AND the component's bnode count
+    # (the groupBy is the distinct)
+    comp_sizes = (node_comp.groupBy("graph_id", "comp")
+                  .agg(F.count("*").alias("nb"))
+                  .withColumn("ck0", cd0).withColumn("ck1", cd1))
+    # the component hash fold also emits the component's triple count
+    # (nt) from the same two passes — no separate aggregation over th
+    ghc = unordered_sum_pairs_sql(th, CK, "t0", "t1",
+                                  "g0", "g1", extra_init=blank_pair,
+                                  count_col="nt") \
+        .join(_mb(comp_sizes, n_comps, broadcast_rows), CK)
+
+    # duplicate-component key: with set-semantic input (deduped above) and
+    # injective leaf colours, (g0, g1) is the unordered fold over the
+    # component's exact distinct labelled triple set — the distributed
+    # analogue of the oracle's graphs_seen TreeSet equality
+    # (GraphLabelling.java:100-119); (nt, nb) guard the astronomically
+    # rare md5 digest collision between non-isomorphic components
+    dup_w = Window.partitionBy("graph_id", "g0", "g1", "nt", "nb") \
+                  .orderBy("comp")
+    return ckpt_util.checkpoint(
+        ghc
+        .withColumn("rank", F.row_number().over(dup_w))
+        # duplicate mux ints: first copy 0, then count+1 = 2, 3, ...
+        # (GraphLabelling.java:100-119 passing count+1 to
+        # getCanonicalGraph)
+        .withColumn("mux_i",
+                    F.when(F.col("rank") == 1, F.lit(0))
+                    .otherwise(F.col("rank")) if dip else F.lit(0))
+        .withColumn("contributes",
+                    F.lit(True) if dip else (F.col("rank") == 1))
+        # duplicate-mux digest: pure codegen for md5
+        .withColumns(dict(zip(("mx0", "mx1"),
+                              int_pair_exprs(hash_name)(F.col("mux_i")))))
+        .select("graph_id", "ck0", "ck1", "contributes",
+                *(c.alias(n) for c, n in zip(combine2_pairs_sql(
+                    "g0", "g1", F.col("mx0"), F.col("mx1")),
+                    ("cb0", "cb1")))))
+
+
+def _mux(comp_mux, leaf, ground, node_comp, n_comps, n_bnodes, upg,
+         hash_name, broadcast_rows) -> tuple[DataFrame, DataFrame]:
+    """The mux phase: the final per-bnode labels, checkpointed as
+    (bk0, bk1, label), and their (graph_id, bnode, label) view."""
+    # upg: graph-level unique hash (GraphLabelling.java:137-150), merged
+    # into the per-component mux table so every downstream consumer needs
+    # ONE compact join + ONE combine3 (combine2(combine2(h,cb),gh) ==
+    # combine3(h,cb,gh), identical lane arithmetic)
+    if upg:
+        tp = term_pair_exprs(hash_name)
+        gs0, gs1 = tp(F.col("subj"))
+        gp0, gp1 = tp(F.col("pred"))
+        go0, go1 = tp(F.col("obj"))
+        gm0, gm1 = combine3_pairs_sql("a0", "a1", "b0", "b1", "c0", "c1")
+        ground_th = (ground.select(
+            "graph_id", gs0.alias("a0"), gs1.alias("a1"),
+            gp0.alias("b0"), gp1.alias("b1"),
+            go0.alias("c0"), go1.alias("c1"))
+            .select("graph_id", gm0.alias("t0"), gm1.alias("t1"))
+            .dropDuplicates())
+        comb_h = comp_mux.where("contributes").select(
+            "graph_id", F.col("cb0").alias("t0"), F.col("cb1").alias("t1"))
+        ghash = unordered_sum_pairs_sql(
+            ground_th.union(comb_h), ["graph_id"], "t0", "t1", "gh0", "gh1",
+            extra_init=enc_pair(get_hash_family(hash_name).blank))
+        # per-graph table, rows ≤ n_components
+        mux = comp_mux.join(_mb(ghash, n_comps, broadcast_rows),
+                            "graph_id") \
+            .select("ck0", "ck1", "cb0", "cb1", "gh0", "gh1")
+
+        def final_pair(h0, h1):
+            return combine3_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"),
+                                      F.col("gh0"), F.col("gh1"))
+    else:
+        mux = comp_mux.select("ck0", "ck1", "cb0", "cb1")
+
+        def final_pair(h0, h1):
+            return combine2_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"))
+
+    # final per-bnode label: ONE final_pair fold over the per-bnode leaf
+    # table — the final colour is a pure function of (leaf colour,
+    # component mux row), so computing it per triple occurrence (as a
+    # fused in-row relabel would) repeats the same fold once per edge
+    fc0, fc1 = final_pair(F.col("h0"), F.col("h1"))
+    leaf_final = ckpt_util.checkpoint(
+        leaf.join(_mb(mux, n_comps, broadcast_rows), CK)
+        .select("bk0", "bk1",
+                F.concat(F.lit("_:SK00"), pair_hex(fc0, fc1))
+                .alias("label")))
+    # bnode decode dictionary: the CC node table already holds one row
+    # per distinct (graph, bnode) and is checkpointed — attach keys by
+    # codegen, no extra distinct shuffle
+    dk0, dk1 = _ikey("graph_id", "bnode")
+    bnode_dict = node_comp.select("graph_id", "bnode",
+                                  dk0.alias("bk0"), dk1.alias("bk1"))
+    return leaf_final, (leaf_final
+                        .join(_mb(bnode_dict, n_bnodes, broadcast_rows),
+                              ["bk0", "bk1"])
+                        .select("graph_id", "bnode", "label"))
+
+
+def _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows) -> DataFrame:
+    """The labelled triples (GraphColouring.labelBlankNodes), lazy: two
+    map-side joins of the bnode triples against the per-bnode labels on
+    interned long keys, plus the ground triples."""
+    sl = _mb(leaf_final.select(F.col("bk0").alias("_s0"),
+                               F.col("bk1").alias("_s1"),
+                               F.col("label").alias("_slab")),
+             n_leaf, broadcast_rows)
+    ol = _mb(leaf_final.select(F.col("bk0").alias("_o0"),
+                               F.col("bk1").alias("_o1"),
+                               F.col("label").alias("_olab")),
+             n_leaf, broadcast_rows)
+    return (
+        btri
+        .join(sl, on=[btri.ks0 == sl._s0, btri.ks1 == sl._s1], how="left")
+        .join(ol, on=[btri.ko0 == ol._o0, btri.ko1 == ol._o1], how="left")
+        .select("graph_id",
+                F.coalesce("_slab", "subj").alias("subj"),
+                "pred",
+                F.coalesce("_olab", "obj").alias("obj"))
+        .union(ground)
+        .dropDuplicates()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1154,8 +1083,8 @@ def _leaf_colours(loop, spark, btri, node_comp, n_bnodes, metrics, t0,
 
 def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
                           hash_name: str = "md5", dip: bool = True,
-                          upg: bool = True, max_leaves: int | None = None,
-                          n_buckets: int | None = None) -> CanonResult:
+                          upg: bool = True,
+                          max_leaves: int | None = None) -> CanonResult:
     out_schema = ("graph_id string, kind string, a string, b string, "
                   "c string")
 
@@ -1187,14 +1116,13 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
         return pd.DataFrame(rows,
                             columns=["graph_id", "kind", "a", "b", "c"])
 
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions")) * 4
-    with ckpt_util.scope() as held:
+    metrics = {"mode": "by_graph", "hash_name": hash_name}
+    with ckpt_util.scope() as held, obs.phase("by_graph", metrics):
         # no input dedupe needed: label_graph normalizes its group to a set
         out = ckpt_util.checkpoint(
             triples.select(*TRIPLE_COLS)
             .withColumn("_b", F.pmod(F.xxhash64("graph_id"),
-                                     F.lit(n_buckets)))
+                                     F.lit(_kernel_buckets(spark))))
             .groupBy("_b").applyInPandas(run, out_schema))
         labelled = (out.where(F.col("kind") == "t")
                     .select("graph_id", F.col("a").alias("subj"),
@@ -1203,7 +1131,6 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
         labels = (out.where(F.col("kind") == "l")
                   .select("graph_id", F.col("a").alias("bnode"),
                           F.col("b").alias("label")))
-        metrics = {"mode": "by_graph", "hash_name": hash_name}
         n_failed = out.where(F.col("kind") == "e").count()
         if n_failed:
             metrics["failed_graphs"] = n_failed

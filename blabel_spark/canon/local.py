@@ -471,14 +471,36 @@ class LabellingResult:
     unique_graph_hash: bytes | None
 
 
-def _canonical_component(col: _Colouring, mux: bytes) -> tuple[
+def colour_component(triples: list[Triple], static: dict[str, bytes],
+                     hf: HashFamily, prune: bool = True,
+                     max_leaves: int | None = None) -> tuple[
+                         _Colouring, _Colouring]:
+    """Colour one blank-node component from blank start colours
+    (GraphColouring.traverse, GraphColouring.java:180-253) and return the
+    search root and its minimum leaf by ``graph_sort_key``
+    (GraphColouring.java:137-141), whose colouring is the component's
+    canonical one.  ``static`` caches ground-term hashes; terms it lacks
+    are added."""
+    for t in triples:
+        for term in t:
+            if not is_bnode(term) and term not in static:
+                static[term] = hf.hash_string(term)
+    colors = {n: hf.blank
+              for t in triples for n in (t[0], t[2]) if is_bnode(n)}
+    col = _Colouring(triples=triples, static=static, colors=colors,
+                     path=[], leaves={}, colour_iters=[], prune=prune,
+                     hf=hf, leaf_budget=[max_leaves if max_leaves is not None
+                                         else MAX_LEAVES])
+    col.execute()
+    return col, col.leaves[min(col.leaves, key=graph_sort_key)][0]
+
+
+def _canonical_component(gc: _Colouring, mux: bytes) -> tuple[
         tuple[Triple, ...], dict[str, bytes], bytes]:
     """GraphColouring.getCanonicalGraph (GraphColouring.java:121-168):
-    pick the minimum leaf, mux combineOrdered(graphHash, mux) into every
-    colour of that leaf's colouring, relabel."""
-    best_graph = min(col.leaves, key=graph_sort_key)
-    gc = col.leaves[best_graph][0]
-    ghc = graph_hash(gc.triples, gc.colors, gc.static, blank=col.hf.blank)
+    mux combineOrdered(graphHash, mux) into every colour of the minimum
+    leaf's colouring ``gc``, relabel."""
+    ghc = graph_hash(gc.triples, gc.colors, gc.static, blank=gc.hf.blank)
     comb = combine_ordered((ghc, mux))
     muxed = {n: combine_ordered((c, comb)) for n, c in gc.colors.items()}
     return label_triples(gc.triples, muxed), muxed, comb
@@ -501,13 +523,11 @@ def label_graph(triples: list[Triple], dip: bool = True, upg: bool = True,
     hf = get_hash_family(hash_name)
     triples = sorted(set(triples))
     static: dict[str, bytes] = {}
-    all_bnodes: set[str] = set()
     for t in triples:
         for i, term in enumerate(t):
             if is_bnode(term):
                 if i == 1:
                     raise ValueError("blank node in predicate position")
-                all_bnodes.add(term)
             elif term not in static:
                 static[term] = hf.hash_string(term)
 
@@ -524,19 +544,12 @@ def label_graph(triples: list[Triple], dip: bool = True, upg: bool = True,
     graphs_seen: dict[tuple[Triple, ...], int] = {}
 
     for pivot in sorted(comps):
-        ctriples = comps[pivot]
-        colors = {n: hf.blank
-                  for t in ctriples for n in (t[0], t[2]) if is_bnode(n)}
-        col = _Colouring(triples=ctriples, static=static, colors=colors,
-                         path=[], leaves={}, colour_iters=[], prune=prune,
-                         hf=hf,
-                         leaf_budget=[max_leaves if max_leaves is not None
-                                      else MAX_LEAVES])
-        col.execute()
+        col, leaf = colour_component(comps[pivot], static, hf, prune,
+                                     max_leaves)
         total_iters += sum(col.colour_iters)
         total_leaves += sum(len(v) for v in col.leaves.values())
 
-        mapped, comp_colors, comb = _canonical_component(col, hf.hash_int(0))
+        mapped, comp_colors, comb = _canonical_component(leaf, hf.hash_int(0))
         count = graphs_seen.get(mapped)
         if count is None:
             graphs_seen[mapped] = 1
@@ -546,7 +559,7 @@ def label_graph(triples: list[Triple], dip: bool = True, upg: bool = True,
             graphs_seen[mapped] = count + 1
             if dip:
                 mapped, comp_colors, comb = _canonical_component(
-                    col, hf.hash_int(count + 1))
+                    leaf, hf.hash_int(count + 1))
                 hashes.append(comb)
                 unique_bnodes += len(comp_colors)
         full_graph.update(mapped)

@@ -129,12 +129,14 @@ def hash_int_pair_sql(col: Column) -> tuple[Column, Column]:
             raw1.bitwiseXOR(F.lit(MIN_LONG)))
 
 
-def hash_int_pair_udf_for(hash_name: str):
-    """Guava hashInt as a stored pair, for any 16-byte hash family.
+def int_pair_exprs(hash_name: str):
+    """Column expression factory: int → Guava hashInt as a stored pair,
+    for any 16-byte family.  md5 is pure codegen; the others run an Arrow
+    UDF that digests each DISTINCT input once (duplicate-mux ranks 0, 2,
+    3, … — a handful of values across millions of rows)."""
+    if hash_name == "md5":
+        return hash_int_pair_sql
 
-    Inputs are duplicate-mux ranks (0, 2, 3, …) — a handful of distinct
-    values across millions of rows — so the digest is computed once per
-    DISTINCT value and broadcast back by pandas map."""
     @F.pandas_udf(PAIR)
     def f(i: pd.Series) -> pd.DataFrame:
         from blabel_spark.hashing import enc_pair, get_hash_family
@@ -144,7 +146,11 @@ def hash_int_pair_udf_for(hash_name: str):
         h0 = i.map(lambda v: memo[int(v)][0])
         h1 = i.map(lambda v: memo[int(v)][1])
         return pd.DataFrame({"h0": h0, "h1": h1})
-    return f
+
+    def pair(col: Column) -> tuple[Column, Column]:
+        p = f(col)
+        return p.getField("h0"), p.getField("h1")
+    return pair
 
 
 def term_pair_exprs(hash_name: str):

@@ -88,12 +88,6 @@ def get_spark(app: str = "blabel-spark", cpus: int | None = None,
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"))
-        # the fixpoint loop marks BOTH its per-round tables (colours +
-        # convergence) for LAZY local checkpointing and materializes them
-        # with ONE action; RDD.doCheckpoint stops at the first marked
-        # ancestor unless this is set, which would leave the inner table's
-        # lineage untruncated → exponentially growing plans across rounds
-        .config("spark.checkpoint.checkpointAllMarkedAncestors", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -7,13 +7,13 @@ is set — the inner colour table never truncates and per-round plans DOUBLE
 (the event-log signature: job stage counts growing ~3/round, "Broadcasting
 large task binary" warnings).  These tests pin
 
-(a) that ``get_spark`` sessions set the conf and the lazy path keeps
-    per-round job/stage counts FLAT across rounds, and
-(b) that the eager fallback taken on foreign sessions
-    (``_lazy_checkpoint_ok`` False) produces bit-identical labels, also
-    with flat per-round plans.
+(a) that the lazy path keeps per-round job/stage counts FLAT across
+    rounds, and
+(b) that a session whose conf lacks the key (one not built by
+    ``get_spark``) gets the same labels and the same per-round plans: the
+    loop's phases set the key as a thread-local property (``obs.phase``).
 
-Reference anchor: the one-pass-per-round colouring loop both paths mirror,
+Reference anchor: the one-pass-per-round colouring loop,
 GraphColouring.java:463-666.
 """
 
@@ -50,10 +50,6 @@ def _assert_flat(log):
 
 def test_lazy_path_flat_plans(spark):
     from blabel_spark.canon import distributed as D
-    assert D._lazy_checkpoint_ok(spark), (
-        "get_spark must set spark.checkpoint.checkpointAllMarkedAncestors "
-        "(static conf) — without it lazy per-round checkpoints leak "
-        "lineage and plans double every round")
     res = D.canonicalize(spark, _chain_corpus(spark), route="fixpoint")
     assert res.metrics["colour_iterations"] >= 5
     _assert_flat(res.metrics["iterations_log"])
@@ -154,16 +150,24 @@ def test_mid_loop_failure_releases_every_block(spark, monkeypatch):
         return {int(k) for k in jmap.keySet().toArray()}
 
     sc = spark.sparkContext
-    # the round's job group is set when the failure hits: restore the
-    # thread's properties for the tests that follow
+
+    def caller_state():
+        return ({p: sc.getLocalProperty(p) for p in (
+            "spark.jobGroup.id", "spark.job.description",
+            "spark.checkpoint.checkpointAllMarkedAncestors")},
+            set(sc.getJobTags()))
+    # should the call leave a property set, restore the thread's
+    # properties for the tests that follow
     props = {p: sc.getLocalProperty(p) for p in (
         "spark.jobGroup.id", "spark.job.description",
         "spark.job.interruptOnCancel")}
     tri = _chain_corpus(spark)
     before = persistent_ids()
+    state = caller_state()
     try:
         with pytest.raises(RuntimeError, match="injected round-3"):
             D.canonicalize(spark, tri, route="fixpoint")
+        assert caller_state() == state, "failed round left its scope set"
     finally:
         for p, v in props.items():
             sc.setLocalProperty(p, v)
@@ -172,17 +176,28 @@ def test_mid_loop_failure_releases_every_block(spark, monkeypatch):
     assert not left, f"failed canonicalize left {len(left)} RDDs behind"
 
 
-def test_eager_fallback_parity_and_flat_plans(spark, monkeypatch):
+def test_foreign_session_parity_and_flat_plans(spark):
+    """With checkpointAllMarkedAncestors unset in the session conf, as in
+    a session not built by ``get_spark``, the rounds stay the lazy
+    one-job rounds: labels and the middle rounds' (n_jobs, n_stages)
+    equal the default session's."""
     from blabel_spark.canon import distributed as D
     tri = _chain_corpus(spark)
-    want = sorted(
-        (r["graph_id"], r["bnode"], r["label"])
-        for r in D.canonicalize(spark, tri, route="fixpoint")
-        .labels.collect())
 
-    monkeypatch.setattr(D, "_lazy_checkpoint_ok", lambda s: False)
-    res = D.canonicalize(spark, tri, route="fixpoint")
-    got = sorted((r["graph_id"], r["bnode"], r["label"])
-                 for r in res.labels.collect())
+    def run():
+        res = D.canonicalize(spark, tri, route="fixpoint")
+        log = res.metrics["iterations_log"]
+        _assert_flat(log)
+        return (sorted((r["graph_id"], r["bnode"], r["label"])
+                       for r in res.labels.collect()),
+                {(e["n_jobs"], e["n_stages"]) for e in log[1:-1]})
+    want = run()
+    key = "spark.checkpoint.checkpointAllMarkedAncestors"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        got = run()
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
     assert got == want
-    _assert_flat(res.metrics["iterations_log"])
