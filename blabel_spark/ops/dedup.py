@@ -1,7 +1,9 @@
 """Deduplication operators for training-data pipelines (SURVEY brief).
 
-All operators are pure DataFrame/Catalyst expressions — no Python in the
-hot path — and are designed around shuffle-minimal plans:
+The operators are DataFrame/Catalyst expressions, except the single-task
+union-find kernel of ``dedup_clusters`` (a ``mapInPandas`` over the pair
+graph, never over the corpus), and are designed around shuffle-minimal
+plans:
 
 * exact dedup: one hash-groupBy (map-side partial aggregation);
 * MinHash: per-row signature computation is a codegen expression over
@@ -9,7 +11,8 @@ hot path — and are designed around shuffle-minimal plans:
   quadratic all-pairs problem into an equi-join on band keys;
 * SimHash: per-token votes aggregated with one groupBy; 16-bit fingerprint
   assembled from conditional sums;
-* n-gram Jaccard verifies LSH candidate pairs only (never all pairs).
+* n-gram Jaccard verifies LSH candidate pairs only (never all pairs) by
+  intersecting the members' shingle arrays (no shuffle keyed by shingle).
 """
 
 from __future__ import annotations
@@ -44,9 +47,11 @@ def _shingles(text_col: str, k: int, unit: str) -> Column:
                          F.greatest(F.length(text) - (k - 1), F.lit(1)))
         return F.transform(idx, lambda i: text.substr(i, F.lit(k)))
     words = F.filter(F.split(text, " "), lambda w: F.length(w) > 0)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (k - 1), F.lit(1)))
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(words, i, k), " "))
+    # bind the tokens once, as lambda variable ws: an expression inside the
+    # per-shingle lambda is re-evaluated per shingle (quadratic in length)
+    return F.transform(F.array(words), lambda ws: F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(ws) - (k - 1), F.lit(1))),
+        lambda i: F.array_join(F.slice(ws, i, k), " ")))[0]
 
 
 def minhash_signatures(docs: DataFrame, n_hashes: int = 4, k: int = 5,
@@ -116,8 +121,8 @@ def shingle_input_docs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Docs that appear on either side of a candidate pair — the ONLY
     rows the Jaccard verify stage needs to shingle.  Candidate sets are
     typically a few percent of the corpus, so semi-joining here keeps the
-    k×-expansion explode off the other ~95% (at 100 TB the difference is
-    materializing the whole corpus k times vs just the pair members)."""
+    shingle arrays (k-shingles per doc, ~k× the text) off the other ~95%
+    of the corpus."""
     ids = (pairs.select(F.col("doc_a").alias("doc_id"))
            .union(pairs.select(F.col("doc_b").alias("doc_id")))
            .distinct())
@@ -127,35 +132,28 @@ def shingle_input_docs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
 def ngram_jaccard(docs: DataFrame, pairs: DataFrame, k: int = 5,
                   text_col: str = "text", unit: str = "char") -> DataFrame:
     """Jaccard similarity over distinct k-shingles for the given candidate
-    pairs only (never all pairs, never shingling docs outside the pairs)."""
-    # materialized once: the shingle relation feeds the per-doc counts AND
-    # both sides of the intersection join.  Restricted to pair members
-    # BEFORE the explode — shingling the full corpus to verify a small
-    # candidate set is a linear-but-needless k× materialization.  Its
-    # blocks belong to the caller's enclosing ckpt_util scope.
-    shingles = ckpt_util.checkpoint(shingle_input_docs(docs, pairs).select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingles(text_col, k, unit)))
-        .alias("sh")))
-    counts = shingles.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), "sh")
-    sb = shingles.select(F.col("doc_id").alias("_docb"),
-                         F.col("sh").alias("sh2"))
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(sb, (F.col("doc_b") == F.col("_docb"))
-              & (F.col("sh") == F.col("sh2")))
-        .groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_inter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    pairs only (never all pairs, never shingling docs outside the pairs):
+    each pair intersects its members' distinct-shingle arrays, so no
+    (doc, shingle) rows are exploded and building the plan runs no job.
+    Pairs with a doc missing from ``docs`` are dropped."""
+    sh = shingle_input_docs(docs, pairs).select(
+        "doc_id", F.array_distinct(_shingles(text_col, k, unit)).alias("sh"))
+    # array_intersect matches NULL to NULL, but a NULL text's lone NULL
+    # shingle must count in its size and never in an intersection
+    sh = sh.select("doc_id", F.size("sh").alias("n"),
+                   F.array_compact("sh").alias("sh"))
+    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"),
+                   F.col("sh").alias("a"))
+    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"),
+                   F.col("sh").alias("b"))
     return (
-        pairs.join(inter, ["doc_a", "doc_b"], "left").na.fill({"n_inter": 0})
-        .join(ca, "doc_a").join(cb, "doc_b")
-        .withColumn("jaccard",
-                    F.round(F.col("n_inter")
-                            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6))
-        .select("doc_a", "doc_b", "n_inter", "jaccard")
+        pairs.join(sa, "doc_a").join(sb, "doc_b")
+        .withColumn("n_inter", F.size(F.array_intersect("a", "b"))
+                    .cast("long"))
+        .select("doc_a", "doc_b", "n_inter",
+                F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b")
+                                            - F.col("n_inter")), 6)
+                .alias("jaccard"))
     )
 
 

@@ -42,9 +42,12 @@ def stratified_sample(docs: DataFrame, rates: dict[str, float],
     ``rates`` maps stratum values to keep-rates; strata not listed use
     ``default_rate``.  Returns the kept rows (all input columns).
     """
+    # concat, not concat_ws: a NULL key must give a NULL bucket (row
+    # dropped unless its stratum keeps all), as in the SQL twin —
+    # concat_ws would skip it and hash the bare salt
     bucket = F.substring(
-        F.md5(F.concat_ws(":", F.lit(salt),
-                          F.col(key_col).cast("string"))), 1, 8)
+        F.md5(F.concat(F.lit(salt), F.lit(":"),
+                       F.col(key_col).cast("string"))), 1, 8)
     thr = F.lit(_threshold_hex(default_rate))
     keep_all = F.lit(default_rate >= 1.0)
     # deterministic CASE order (sorted strata) — the expression tree is

@@ -2,6 +2,7 @@
 stay far below C(n,2) (all-pairs never scales), while seeded near-dups
 are still caught and verified with high Jaccard."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from blabel_spark.ops.dedup import (
@@ -219,3 +220,84 @@ def test_embedding_near_dups_finds_planted_pairs(spark):
     # one boundary miss, require no false positives below threshold
     assert len(found) >= len(planted) - 1, planted - set(got)
     assert all(sim >= 0.95 for sim in got.values())
+
+
+# Edge-case corpus for the verify stage: NULL, empty and whitespace-only
+# text, repeated shingles, identical docs, texts shorter than k.
+_EDGE_DOCS = [(0, None), (1, None), (2, ""), (3, "   "),
+              (4, "a a a a a a"), (5, "a a a a"), (6, "aaaaaa"),
+              (7, "the quick brown fox jumps"),
+              (8, "the quick brown fox jumps"),
+              (9, "quick brown fox jumps over"), (10, "x")]
+# 99 is absent from the docs: its pairs must be dropped
+_EDGE_PAIRS = [(0, 1), (0, 2), (1, 7), (2, 3), (2, 10), (4, 5), (4, 6),
+               (5, 6), (7, 8), (7, 9), (9, 10), (3, 10), (7, 99), (99, 8)]
+
+
+def _reference_shingles(text, k, unit):
+    """Python twin of dedup._shingles: a NULL text yields one NULL
+    shingle, a text shorter than one window yields one (short) shingle."""
+    if text is None:
+        return [None]
+    if unit == "char":
+        return [text[i:i + k] for i in range(max(len(text) - (k - 1), 1))]
+    w = [x for x in text.split(" ") if x]
+    return [" ".join(w[i:i + k]) for i in range(max(len(w) - (k - 1), 1))]
+
+
+def _half_up(x, places=6):
+    """Spark's round(): HALF_UP on the double's shortest decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places),
+                                           ROUND_HALF_UP))
+
+
+@pytest.mark.parametrize("unit", ["word", "char"])
+def test_ngram_jaccard_matches_brute_force(spark, unit):
+    """ngram_jaccard equals a Python set computation: sizes count
+    distinct shingles (a NULL shingle included), the intersection never
+    matches a NULL shingle, and a pair with a doc missing is dropped."""
+    k = 3
+    docs = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    pairs = spark.createDataFrame(_EDGE_PAIRS, "doc_a long, doc_b long")
+    jac = ngram_jaccard(docs, pairs, k=k, unit=unit)
+    assert jac.columns == ["doc_a", "doc_b", "n_inter", "jaccard"]
+    got = {(r["doc_a"], r["doc_b"]): (r["n_inter"], r["jaccard"])
+           for r in jac.collect()}
+
+    sets = {d: set(_reference_shingles(t, k, unit)) for d, t in _EDGE_DOCS}
+    want = {}
+    for a, b in _EDGE_PAIRS:
+        if a in sets and b in sets:
+            n_inter = len((sets[a] & sets[b]) - {None})
+            want[(a, b)] = (n_inter, _half_up(
+                n_inter / (len(sets[a]) + len(sets[b]) - n_inter)))
+    assert got == want
+    assert got[(0, 1)] == (0, 0.0)   # NULL text never matches
+    assert got[(7, 8)][1] == 1.0     # identical docs
+
+
+def test_ngram_jaccard_duplicate_pair_rows_score_alone(spark):
+    """A pair listed twice is scored twice, each row as if alone (an
+    exploded shingle join would count its intersection twice)."""
+    docs = spark.createDataFrame([(1, "a b c d e"), (2, "a b c d f")],
+                                 "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 2), (1, 2)], "doc_a long, doc_b long")
+    rows = [tuple(r) for r in
+            ngram_jaccard(docs, pairs, k=3, unit="word").collect()]
+    assert rows == [(1, 2, 2, 0.5), (1, 2, 2, 0.5)]
+
+
+def test_ngram_jaccard_construction_is_lazy(spark):
+    """Building the verify plan fires no Spark job (nothing is
+    checkpointed eagerly), and the plan never explodes shingles into
+    rows — the intersection runs on per-doc shingle arrays."""
+    from blabel_spark.obs import phase
+    docs = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    pairs = spark.createDataFrame(_EDGE_PAIRS, "doc_a long, doc_b long")
+    with phase("ngram_jaccard_build") as rec:
+        jac = ngram_jaccard(docs, pairs, k=3, unit="word")
+    assert rec["n_jobs"] == 0
+    assert len(jac.collect()) == 12
+    plan = jac._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan, plan

@@ -74,6 +74,35 @@ def test_stratified_sample_sql_twin_matches(spark):
     assert spark_ids == duck_ids
 
 
+def test_stratified_sample_null_keys_match_sql_twin(spark):
+    """A NULL key has no bucket: at a rate below 1 its row is dropped, as
+    in the SQL twin, whatever the rate (the bare-salt hash ``md5("s1")``
+    sits at rate ~0.554, so rate 0.99 would keep it)."""
+    import duckdb
+    n = 600
+    docs = spark.range(0, n).select(
+        F.col("id").alias("rid"),
+        F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id"))
+        .alias("doc_id"),
+        F.concat(F.lit("src"), (F.col("id") % 2).cast("string"))
+        .alias("source"))
+    rates = {"src1": 0.99}
+    spark_ids = sorted(
+        r["rid"] for r in
+        stratified_sample(docs, rates, default_rate=1.0).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT range AS rid, "
+                "CASE WHEN range % 7 = 0 THEN NULL ELSE range END AS doc_id, "
+                f"'src' || (range % 2) AS source FROM range({n})")
+    pred = stratified_sample_sql(rates, default_rate=1.0)
+    duck_ids = [x[0] for x in con.execute(
+        f"SELECT rid FROM documents WHERE {pred} ORDER BY 1").fetchall()]
+    assert spark_ids == duck_ids
+    # src0 keeps all rows, NULL keys included; src1 drops its NULL keys
+    assert {r for r in spark_ids if r % 7 == 0} == \
+        {r for r in range(0, n, 7) if r % 2 == 0}
+
+
 def test_threshold_hex_edges():
     assert _threshold_hex(0.0) == "00000000"
     assert _threshold_hex(1.0) == "ffffffff"  # clamped to 16^8 - 1

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """One timed run of a benchmark class in a fresh process, against whatever
 ``blabel_spark`` PYTHONPATH resolves — the child half of the interleaved
-A/B protocol (tools/ab_run.py).  Prints ONE JSON line.
+A/B protocol (tools/ab_run.py).  Prints ONE JSON line; its ``md5`` digests
+the class's output so both sides can be checked bit-exact.
 
 Classes:
   deep      4000 chains x diameter 26 -> ~13 colour rounds (the loop
@@ -13,6 +14,11 @@ Classes:
             chains, route="auto" with kernel_graph_rows=20 — component
             routing sends the chains to the loop and the rest to the
             kernel (the test_giant_graph_component_routing fixture)
+  dedup     the AB_SF_DIR documents table (AB_SF_DIR must be set):
+            word-3 MinHash -> LSH -> ngram_jaccard >= 0.5 ->
+            dedup_clusters -> select_keepers into a noop sink (warm-up:
+            the sibling sf0.001 directory); md5 is over the sorted keeper
+            rows
 
 Env: AB_CPUS (32), AB_CHAINS (4000 for deep, 6 for giant), AB_SF_DIR
 (/root/testdata/sf0.1).
@@ -36,8 +42,8 @@ def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def labels_md5(res):
-    rows = sorted(map(tuple, res.labels.collect()))
+def rows_md5(df):
+    rows = sorted(map(tuple, df.collect()))
     return hashlib.md5(repr(rows).encode()).hexdigest()
 
 
@@ -74,7 +80,7 @@ if klass == "deep":
            "t_prep_s": res.metrics["t_prep_s"],
            "t_loop_s": res.metrics["t_loop_s"],
            "t_mux_s": res.metrics.get("t_mux_s"),
-           "labels_md5": labels_md5(res)}
+           "md5": rows_md5(res.labels)}
 elif klass == "fixpoint":
     from blabel_spark.ops.triples_view import build_triples
     sf_dir = os.environ.get("AB_SF_DIR", "/root/testdata/sf0.1")
@@ -95,7 +101,7 @@ elif klass == "fixpoint":
            "t_leaf_kernel_s": res.metrics["t_leaf_kernel_s"],
            "t_comp_mux_s": res.metrics["t_comp_mux_s"],
            "t_mux_s": res.metrics["t_mux_s"],
-           "labels_md5": labels_md5(res)}
+           "md5": rows_md5(res.labels)}
 elif klass == "giant":
     from pyspark.sql import functions as F
 
@@ -135,7 +141,42 @@ elif klass == "giant":
            "t_prep_s": res.metrics["t_prep_s"],
            "t_loop_s": res.metrics["t_loop_s"],
            "t_leaf_kernel_s": res.metrics["t_leaf_kernel_s"],
-           "labels_md5": labels_md5(res)}
+           "md5": rows_md5(res.labels)}
+elif klass == "dedup":
+    from pyspark.sql import functions as F
+
+    from blabel_spark.ops.dedup import (dedup_clusters, lsh_candidate_pairs,
+                                        minhash_signatures, ngram_jaccard,
+                                        select_keepers)
+    from blabel_spark.ops.textstats import quality_score
+    sf_dir = os.environ["AB_SF_DIR"]
+
+    def keepers(docs):
+        sig = minhash_signatures(docs, n_hashes=4, k=3, unit="word")
+        pairs = lsh_candidate_pairs(docs, n_hashes=4, k=3, band_chars=4,
+                                    unit="word", signatures=sig)
+        verified = ngram_jaccard(docs, pairs, k=3, unit="word") \
+            .where(F.col("jaccard") >= 0.5)
+        return select_keepers(dedup_clusters(verified), quality_score(docs))
+
+    def load(path):
+        df = spark.read.parquet(f"{path}/documents.parquet") \
+            .localCheckpoint(True)
+        df.count()
+        return df
+
+    # warm-up on the smallest sibling scale factor of the timed one
+    noop(keepers(load(os.path.join(os.path.dirname(sf_dir), "sf0.001"))))
+
+    docs = load(sf_dir)
+    n = docs.count()
+    t0 = time.time()
+    out_df = keepers(docs)
+    noop(out_df)
+    wall = round(time.time() - t0, 3)
+    out = {"class": "dedup", "sf_dir": sf_dir, "n_docs": n,
+           "wall_s": wall, "docs_per_sec": round(n / wall, 1),
+           "md5": rows_md5(out_df)}
 else:
     raise SystemExit(f"unknown class {klass}")
 

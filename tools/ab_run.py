@@ -35,18 +35,16 @@ for r in range(reps):
             capture_output=True, text=True, check=True)
         rec = json.loads(out.stdout.strip().splitlines()[-1])
         results[path].append(rec)
-        print(f"rep {r} {path}: wall={rec['wall_s']}s "
-              f"t/s={rec['triples_per_sec']}", file=sys.stderr)
+        print(f"rep {r} {path}: wall={rec['wall_s']}s", file=sys.stderr)
 
 summary = {}
 for path, recs in results.items():
     walls = [x["wall_s"] for x in recs]
     summary[path] = {
         "walls_s": walls, "min_wall_s": min(walls),
-        "max_tps": max(x["triples_per_sec"] for x in recs),
-        "labels_md5": sorted({x["labels_md5"] for x in recs}),
+        "md5": sorted({x["md5"] for x in recs}),
         "detail_of_min": min(recs, key=lambda x: x["wall_s"]),
     }
-md5s = {m for s in summary.values() for m in s["labels_md5"]}
-summary["labels_bit_exact_across_sides"] = len(md5s) == 1
+md5s = {m for s in summary.values() for m in s["md5"]}
+summary["bit_exact_across_sides"] = len(md5s) == 1
 print(json.dumps({"class": klass, "reps": reps, **summary}, indent=1))
