@@ -51,6 +51,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blabel_spark import ckpt_util, obs
+from blabel_spark import components as cc
+from blabel_spark.components import _ikey
 from blabel_spark.hashing import enc_pair, get_hash_family
 from blabel_spark.pair_kernels import (
     combine2_pairs_sql,
@@ -110,166 +112,32 @@ class CanonResult:
 
 # ---------------------------------------------------------------------------
 # connected components of blank nodes (HashGraph.blankNodePartition,
-# HashGraph.java:260-304) — label propagation to fixpoint, component id =
-# minimum bnode (the reference's pivot).
+# HashGraph.java:260-304): an edge projection over ``components``, whose
+# component id is the minimum bnode (the reference's pivot).
 # ---------------------------------------------------------------------------
 
-def _cc_kernel(btri: DataFrame) -> DataFrame:
-    """Per-graph union-find — the reference's in-memory partition
-    (HashGraph.blankNodePartition, HashGraph.java:260-304) inside one
-    applyInPandas group per graph.  Right whenever single graphs fit a
-    task (the transcript north-star case: a graph is one conversation);
-    component id = minimum member bnode (pivot semantics)."""
-    schema = "graph_id string, bnode string, comp string"
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf["graph_id"].iloc[0]
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for s, o in zip(pdf["subj"], pdf["obj"]):
-            bs, bo = s.startswith("_:"), o.startswith("_:")
-            if bs:
-                parent.setdefault(s, s)
-            if bo:
-                parent.setdefault(o, o)
-            if bs and bo:
-                ra, rb = find(s), find(o)
-                if ra != rb:
-                    parent[rb] = ra
-        groups: dict[str, list[str]] = {}
-        for n in parent:
-            groups.setdefault(find(n), []).append(n)
-        rows = []
-        for members in groups.values():
-            m = min(members)
-            rows.extend((g, n, m) for n in members)
-        return pd.DataFrame(rows, columns=["graph_id", "bnode", "comp"])
-
-    return ckpt_util.checkpoint(
-        btri.select("graph_id", "subj", "obj")
-        .groupBy("graph_id").applyInPandas(run, schema))
-
-
-def bnode_components(btri: DataFrame, max_iter: int = 64,
-                     max_kernel_graph: int = 2_000_000,
+def bnode_components(btri: DataFrame,
                      graph_rows_bound: int | None = None) -> DataFrame:
-    """(graph_id, bnode) → comp for every bnode in btri.
-
-    Routing: when every graph fits one task (≤ ``max_kernel_graph``
-    bnode-touching rows — the conversation-scale regime the north star
-    targets), components come from the per-graph union-find kernel in ONE
-    pass.  Oversized graphs fall back to the iterative loop below: each
-    round does min-label propagation over edges AND a pointer-doubling
-    jump (comp ← comp[comp]), so convergence takes O(log diameter) rounds
-    — a 2^64-diameter chain would be needed to hit ``max_iter``, and
-    hitting it raises instead of silently returning a split partition
-    (components split across fake pivots would give conflicting canonical
-    labels downstream).
-
-    ``graph_rows_bound``: a caller-known UPPER bound on per-graph rows
-    (canonicalize's routing probe already computes one) — when it is
-    under ``max_kernel_graph`` the kernel route is taken without the
-    probe aggregation here (one fewer corpus-wide job); otherwise the
-    exact btri-row probe still decides."""
-    if max_kernel_graph:
-        if graph_rows_bound is not None and \
-                graph_rows_bound <= max_kernel_graph:
-            return _cc_kernel(btri)
-        biggest = (btri.groupBy("graph_id").agg(F.count("*").alias("n"))
-                   .agg(F.max("n").alias("m")).collect()[0]["m"]) or 0
-        if biggest <= max_kernel_graph:
-            return _cc_kernel(btri)
-    ks0, ks1 = _ikey("graph_id", "subj")
-    ko0, ko1 = _ikey("graph_id", "obj")
-    nodes = (
-        btri.where(is_bnode_col("subj"))
-        .select("graph_id", F.col("subj").alias("bnode"),
-                ks0.alias("k0"), ks1.alias("k1"))
-        .union(btri.where(is_bnode_col("obj"))
-               .select("graph_id", F.col("obj").alias("bnode"),
-                       ko0.alias("k0"), ko1.alias("k1")))
-        .distinct()
-    )
-    # edges keyed by interned node ids (join/shuffle on fixed-width longs;
-    # the propagated comp label stays the min bnode STRING — the
-    # reference's pivot semantics)
-    edges = (
-        btri.where(is_bnode_col("subj") & is_bnode_col("obj")
-                   & (F.col("subj") != F.col("obj")))
-        .select(ks0.alias("a0"), ks1.alias("a1"),
-                ko0.alias("b0"), ko1.alias("b1"))
-        .distinct()
-    )
-    with ckpt_util.scope() as held:
-        sym = ckpt_util.checkpoint(edges.union(edges.select(
-            F.col("b0").alias("a0"), F.col("b1").alias("a1"),
-            F.col("a0").alias("b0"), F.col("a1").alias("b1"))))
-        comp = ckpt_util.checkpoint(
-            nodes.withColumn("comp", F.col("bnode")))
-        pk0, pk1 = _ikey("graph_id", "comp")
-        for _ in range(max_iter):
-            # pointer doubling fused into the propagation join: besides the
-            # real (symmetric) edges, every node contributes a virtual edge
-            # comp(b) → b, so the min-aggregation sees comp(comp(b)) in the
-            # SAME join — one shuffle per round, O(log diameter) rounds
-            pointer = comp.select(pk0.alias("a0"), pk1.alias("a1"),
-                                  F.col("k0").alias("b0"),
-                                  F.col("k1").alias("b1"))
-            compr = comp.select(F.col("k0").alias("n0"), F.col("k1").alias("n1"),
-                                F.col("comp").alias("nbr_comp"))
-            nbrs = sym.union(pointer)
-            nbr_min = (
-                nbrs.join(compr, on=[nbrs.a0 == compr.n0, nbrs.a1 == compr.n1])
-                .groupBy("b0", "b1")
-                .agg(F.min("nbr_comp").alias("nbr_comp"))
-            )
-            # lazy checkpoint + one action: the changed-count job materializes
-            # the round's state and truncates lineage — one job per round,
-            # not an eager-checkpoint job plus a count job
-            new = ckpt_util.checkpoint(
-                comp.join(nbr_min, on=[comp.k0 == nbr_min.b0,
-                                       comp.k1 == nbr_min.b1], how="left")
-                .select("graph_id", "bnode", "k0", "k1",
-                        F.least("comp", F.coalesce("nbr_comp", "comp"))
-                        .alias("comp"),
-                        (F.col("comp") != F.least(
-                            "comp", F.coalesce("nbr_comp", "comp")))
-                        .alias("changed")), eager=False)
-            n_changed = new.where("changed").count()
-            # the count materialized `new`: the previous round's state is
-            # dead (O(1) retained tables, not O(rounds))
-            held.release(comp)
-            comp = new.drop("changed")
-            if n_changed == 0:
-                held.keep(comp)   # the return value; sym dies with the scope
-                return comp.drop("k0", "k1")
-    raise RuntimeError(
-        f"bnode_components failed to converge in {max_iter} rounds — "
-        "input graph pathologically deep or corrupted")
+    """(graph_id, bnode) → comp for every bnode in btri.  A triple with
+    blank ends s and o is the edge (s, o); one with a single blank end b
+    registers b as (b, b).  ``graph_rows_bound``: a caller-known upper
+    bound on per-graph rows (canonicalize's probe computes one); it
+    routes only when it fits the kernel, else ``components`` measures
+    the edges."""
+    if graph_rows_bound is not None and graph_rows_bound > cc.KERNEL_ROWS:
+        graph_rows_bound = None
+    bs, bo = is_bnode_col("subj"), is_bnode_col("obj")
+    edges = btri.where(bs | bo).select(
+        "graph_id",
+        F.when(bs, F.col("subj")).otherwise(F.col("obj")).alias("a"),
+        F.when(bo, F.col("obj")).otherwise(F.col("subj")).alias("b"))
+    return cc.components(edges, ["graph_id"], graph_rows_bound) \
+        .withColumnRenamed("node", "bnode")
 
 
 # ---------------------------------------------------------------------------
 # preparation
 # ---------------------------------------------------------------------------
-
-def _ikey(*cols) -> tuple:
-    """Flyweight term interning (S4, LabelRDFGraph.java:220-221 analogue):
-    a deterministic 128-bit key for a (graph, term) or (graph, comp) tuple
-    as two independently-seeded xxhash64 columns — pure codegen (native
-    JVM hash, far cheaper than md5), no dictionary shuffle, stable across
-    restarts (checkpoint-resume safe).  The fixpoint loop then shuffles,
-    joins and sorts fixed-width longs instead of N3 strings; 128 bits keep
-    the accidental-collision probability negligible at 10^12-row scale
-    (same budget the colour digests already accept)."""
-    return (F.xxhash64(F.lit(1), *[F.col(c) for c in cols]),
-            F.xxhash64(F.lit(2), *[F.col(c) for c in cols]))
-
 
 def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
           broadcast_rows, checkpoint_dir):
@@ -306,10 +174,12 @@ def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
     has_b = is_bnode_col("subj") | is_bnode_col("obj")
     ground = triples.where(~has_b)
     btri = triples.where(has_b)
-    node_comp = bnode_components(btri, graph_rows_bound=biggest)
     # the bnode→comp table has one row per blank node (≪ triples): its
-    # count is the n_bnodes metric AND the broadcast decision for the
-    # decoration join below, which otherwise exchanges the whole btri set
+    # count materializes the lazy checkpoint, and is the n_bnodes metric
+    # AND the broadcast decision for the decoration join below, which
+    # otherwise exchanges the whole btri set
+    node_comp = ckpt_util.checkpoint(
+        bnode_components(btri, graph_rows_bound=biggest), eager=False)
     n_bnodes = metrics["n_bnodes"] = node_comp.count()
     tp = term_pair_exprs(hash_name)
     p0, p1 = tp(F.col("pred"))

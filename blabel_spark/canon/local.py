@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from blabel_spark.components import union_find
 from blabel_spark.hashing import (
     BLANK_HASH,
     MINUS,
@@ -427,35 +428,17 @@ def blank_node_components(triples: list[Triple]) -> dict[str, list[Triple]]:
     """Split triples into connected-bnode components keyed by pivot (the
     minimum bnode of each component); ground triples dropped
     (HashGraph.blankNodePartition, HashGraph.java:260-304)."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a: str, b: str) -> None:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    for s, _, o in triples:
-        if is_bnode(s) and is_bnode(o) and s != o:
-            union(s, o)
-
+    root = union_find((s, o) for s, _, o in triples
+                      if is_bnode(s) and is_bnode(o))
     comps: dict[str, list[Triple]] = {}
     for t in triples:
         s, _, o = t
         b = s if is_bnode(s) else (o if is_bnode(o) else None)
         if b is None:
             continue
-        # union always parents the larger root under the smaller, so the
-        # root of a class IS its minimum bnode — the reference's pivot
-        # (TreeSet.first(), HashGraph.java:284-291).
-        pivot = find(b) if b in parent else b
+        # a root IS its component's minimum bnode — the reference's pivot
+        # (TreeSet.first(), HashGraph.java:284-291)
+        pivot = root.get(b, b)
         comps.setdefault(pivot, []).append(t)
     return comps
 

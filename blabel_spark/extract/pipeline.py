@@ -9,11 +9,9 @@ emitting (subj, pred, obj) triples whose blank nodes the canonicalizer
 Design rules:
 * E1 normalization NEVER alters ``text`` — the per-turn text-equality
   invariant (BASELINE.json input_hint) is tested byte-for-byte.
-* Mention detection exists in two bit-identical implementations:
-  a whole-stage-codegen JVM path (regexp_extract_all — preferred at scale,
-  zero Python) and an Arrow-batched pandas-UDF path (the north_star's
-  "vectorized pandas/Arrow UDFs" formulation). ``use_arrow`` switches;
-  tests assert parity.
+* Mention detection is one whole-stage-codegen JVM pass
+  (regexp_extract_all, zero Python); a test pins it to Python's
+  ``re.findall`` over the same grammar.
 * E3 linking is a broadcast hash join against the (tiny) gazetteer —
   never a per-row lookup UDF.  Unlinked mentions become conversation-scoped
   blank nodes, so identical surfaces co-refer within a conversation and the
@@ -22,24 +20,14 @@ Design rules:
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 # extraction grammar: "<Capitalized> <relation> <Capitalized>."
 RELATION_PHRASES = ["works at", "lives in", "knows", "visited", "founded"]
 MENTION_PATTERN = (r"([A-Z][a-z]+) ("
                    + "|".join(p.replace(" ", r" ") for p in RELATION_PHRASES)
                    + r") ([A-Z][a-z]+)\.")
-
-_MENTION_STRUCT = StructType([
-    StructField("subj_surface", StringType()),
-    StructField("rel", StringType()),
-    StructField("obj_surface", StringType()),
-])
 
 
 # ---------------------------------------------------------------------------
@@ -59,17 +47,16 @@ def normalize_turns(transcripts: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# E2: mention detection — JVM and Arrow implementations
+# E2: mention detection
 # ---------------------------------------------------------------------------
 
-def _detect_jvm(turns: DataFrame) -> DataFrame:
+def detect_mentions(turns: DataFrame) -> DataFrame:
     """Catalyst-only: ONE regexp_extract_all pass for full matches; the
     three capture groups are then recovered with plain string ops (the
     grammar makes a match unambiguous: first token = subject, last token
     before the dot = object, the middle words = the relation), so the
     regex engine runs once per turn instead of once plus three times per
-    mention — identical output to per-group regexp_extract, pinned by
-    the JVM/Arrow parity test."""
+    mention."""
     pat = MENTION_PATTERN.replace("'", "\\'")
     matches = turns.select(
         "conv_id", "turn_idx",
@@ -82,28 +69,6 @@ def _detect_jvm(turns: DataFrame) -> DataFrame:
         F.element_at(toks, 1).alias("subj_surface"),
         F.array_join(F.slice(toks, 2, F.size(toks) - 2), " ").alias("rel"),
         F.element_at(toks, -1).alias("obj_surface"))
-
-
-_COMPILED = re.compile(MENTION_PATTERN)
-
-
-@F.pandas_udf(ArrayType(_MENTION_STRUCT))
-def _detect_udf(text: pd.Series) -> pd.Series:
-    """Arrow-batched mention detector (same grammar as the JVM path)."""
-    return text.map(lambda t: [
-        {"subj_surface": s, "rel": r, "obj_surface": o}
-        for s, r, o in _COMPILED.findall(t or "")])
-
-
-def _detect_arrow(turns: DataFrame) -> DataFrame:
-    m = turns.select("conv_id", "turn_idx",
-                     F.explode(_detect_udf(F.col("text"))).alias("m"))
-    return m.select("conv_id", "turn_idx", "m.subj_surface", "m.rel",
-                    "m.obj_surface")
-
-
-def detect_mentions(turns: DataFrame, use_arrow: bool = False) -> DataFrame:
-    return _detect_arrow(turns) if use_arrow else _detect_jvm(turns)
 
 
 # ---------------------------------------------------------------------------
@@ -149,11 +114,10 @@ def link_and_assemble(spark: SparkSession, mentions: DataFrame,
 
 def extract_triples(spark: SparkSession, transcripts: DataFrame,
                     gazetteer_rows: list[tuple[str, str]],
-                    use_arrow: bool = False,
                     with_provenance: bool = False) -> DataFrame:
     """Full E1→E4: transcripts → distinct (graph_id, subj, pred, obj)."""
     turns = normalize_turns(transcripts)
-    mentions = detect_mentions(turns, use_arrow=use_arrow)
+    mentions = detect_mentions(turns)
     triples = link_and_assemble(spark, mentions, gazetteer_rows)
     if with_provenance:
         return triples

@@ -53,7 +53,7 @@ def trivial_prepass(spark: SparkSession, triples: DataFrame,
         wit_parts: list[DataFrame] = []
         for _ in range(max_passes):
             # edge identity interned to a 128-bit xxhash64 long pair (the S4
-            # flyweight trick, same budget as canon.distributed._ikey): the
+            # flyweight trick, same budget as components._ikey): the
             # containment joins/groupBys below run up to ``max_passes`` times
             # over THE OVERSIZED-GRAPH PATH, so their shuffle keys must be
             # fixed-width longs, not "±|pred|term" concat strings (reference

@@ -1,9 +1,7 @@
 """Deduplication operators for training-data pipelines (SURVEY brief).
 
-The operators are DataFrame/Catalyst expressions, except the single-task
-union-find kernel of ``dedup_clusters`` (a ``mapInPandas`` over the pair
-graph, never over the corpus), and are designed around shuffle-minimal
-plans:
+The operators are DataFrame/Catalyst expressions, and are designed
+around shuffle-minimal plans:
 
 * exact dedup: one hash-groupBy (map-side partial aggregation);
 * MinHash: per-row signature computation is a codegen expression over
@@ -12,7 +10,10 @@ plans:
 * SimHash: per-token votes aggregated with one groupBy; 16-bit fingerprint
   assembled from conditional sums;
 * n-gram Jaccard verifies LSH candidate pairs only (never all pairs) by
-  intersecting the members' shingle arrays (no shuffle keyed by shingle).
+  intersecting the members' shingle arrays (no shuffle keyed by shingle);
+* clusters are connected components over the pair graph
+  (``blabel_spark/components.py``: a single-task union-find over the
+  pairs, never the corpus, while they fit one task).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from blabel_spark import ckpt_util
+from blabel_spark.components import components
 
 HEX = "0123456789abcdef"
 
@@ -234,42 +236,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.9,
             .where(F.col("sim") >= threshold))
 
 
-def _cluster_kernel(edges: DataFrame) -> DataFrame:
-    """Single-task union-find over a (distinct, directed) pair-edge table
-    that fits one task — the same min-pivot semantics as the iterative
-    loop (keeper = minimum member), one Spark job instead of one per
-    propagation round."""
-    import pandas as pd
-    t = edges.schema["a"].dataType.simpleString()
-    schema = f"doc_id {t}, keeper_doc_id {t}"
-
-    def run(batches):
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for pdf in batches:
-            for a, b in zip(pdf["a"], pdf["b"]):
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # parent the larger root under the smaller so a
-                    # class root IS its minimum member (pivot semantics)
-                    parent[max(ra, rb)] = min(ra, rb)
-        if parent:
-            yield pd.DataFrame({"doc_id": list(parent),
-                                "keeper_doc_id": [find(n) for n in parent]})
-
-    return edges.coalesce(1).mapInPandas(run, schema)
-
-
-def dedup_clusters(pairs: DataFrame, max_iter: int = 32,
-                   kernel_max_pairs: int = 2_000_000) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Near-duplicate CLUSTERS from pairwise matches: connected
     components over the (doc_a, doc_b) pair graph, each document mapped
     to its cluster keeper (minimum doc id) — the final stage of a dedup
@@ -277,15 +244,11 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 32,
     Pairs may come from any of the pair producers (LSH+Jaccard, SimHash,
     embedding near-dups) or their union.
 
-    Routing (mirrors canon.distributed.bnode_components): when the
-    distinct pair graph fits one task (≤ ``kernel_max_pairs`` edges — the
-    common case, since candidate budgets keep pairs ≪ corpus), a
-    single-task union-find resolves every cluster in ONE job.  Larger
-    pair graphs take min-label propagation with pointer doubling fused
-    into the propagation join: one shuffle per round,
-    O(log cluster-diameter) rounds, every round a join over pairs —
-    never over the corpus.  Raises after ``max_iter`` rounds instead of
-    returning a split cluster.
+    ``components.components`` does the work over the distinct pair
+    edges: a pair graph that fits one task (the common case, since
+    candidate budgets keep pairs ≪ corpus) resolves in one single-task
+    union-find job; a larger one takes the propagation loop, whose
+    rounds join pairs, never the corpus.
 
     Returns (doc_id, keeper_doc_id) for every document that appears in
     at least one pair; docs without a match keep themselves by
@@ -297,44 +260,11 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 32,
         edges = ckpt_util.checkpoint(
             pairs.select(F.col("doc_a").alias("a"),
                          F.col("doc_b").alias("b")).distinct(), eager=False)
-        if edges.count() <= kernel_max_pairs:
-            held.keep(edges)   # the kernel's lazy output reads it
-            return _cluster_kernel(edges)
-        sym = edges.union(edges.select(F.col("b").alias("a"),
-                                       F.col("a").alias("b")))
-        comp = ckpt_util.checkpoint(
-            sym.select(F.col("a").alias("doc_id")).distinct()
-            .withColumn("comp", F.col("doc_id")))
-        for _ in range(max_iter):
-            pointer = comp.select(F.col("comp").alias("a"),
-                                  F.col("doc_id").alias("b"))
-            compr = comp.select(F.col("doc_id").alias("n"),
-                                F.col("comp").alias("nbr_comp"))
-            nbrs = sym.union(pointer)
-            nbr_min = (nbrs.join(compr, on=[nbrs.a == compr.n])
-                       .groupBy("b")
-                       .agg(F.min("nbr_comp").alias("nbr_comp")))
-            # lazy checkpoint + one action per round (the changed-count
-            # job materializes the state and truncates lineage)
-            new = ckpt_util.checkpoint(
-                comp.join(nbr_min, on=[comp.doc_id == nbr_min.b],
-                          how="left")
-                .select("doc_id",
-                        F.least("comp", F.coalesce("nbr_comp", "comp"))
-                        .alias("comp"),
-                        (F.col("comp") != F.least(
-                            "comp", F.coalesce("nbr_comp", "comp")))
-                        .alias("changed")), eager=False)
-            n_changed = new.where("changed").count()
-            held.release(comp)   # superseded: O(1) retained tables
-            comp = new.drop("changed")
-            if n_changed == 0:
-                held.keep(comp)
-                return comp.select("doc_id",
-                                   F.col("comp").alias("keeper_doc_id"))
-    raise RuntimeError(
-        f"dedup_clusters failed to converge in {max_iter} rounds — "
-        "pathologically deep pair graph")
+        out = components(edges, rows_bound=edges.count()).select(
+            F.col("node").alias("doc_id"),
+            F.col("comp").alias("keeper_doc_id"))
+        held.keep(edges, out)   # the kernel's lazy output reads edges
+        return out
 
 
 def embedding_candidate_pairs(emb: DataFrame, n_bits: int = 16,

@@ -189,7 +189,8 @@ FROM classes GROUP BY graph_id
 
 def q_connected_components(spark, sf):
     """J4: connected bnode components (HashGraph.blankNodePartition,
-    HashGraph.java:260-304) via the engine's label-propagation loop."""
+    HashGraph.java:260-304) via the engine's connected-components operator
+    (``components.py``)."""
     from blabel_spark.canon.distributed import bnode_components
     t = build_triples(spark, sf)
     btri = t.where(_is_b("subj") | _is_b("obj"))

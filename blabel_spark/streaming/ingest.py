@@ -34,7 +34,7 @@ def incremental_extract(spark: SparkSession, input_dir: str, output_dir: str,
     AvailableNow drain completes."""
     stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
               .parquet(input_dir))
-    mentions = detect_mentions(stream, use_arrow=False)
+    mentions = detect_mentions(stream)
     triples = link_and_assemble(spark, mentions, gazetteer_rows)
     q = (triples.writeStream
          .format("parquet")

@@ -110,11 +110,12 @@ def test_dedup_clusters_transitive(spark):
                    10: 10, 11: 10}
 
 
-def test_dedup_clusters_kernel_loop_parity(spark):
+def test_dedup_clusters_kernel_loop_parity(spark, monkeypatch):
     """Round-6 routing: small pair graphs resolve in a single-task
-    union-find kernel; the iterative loop (forced via kernel_max_pairs=0)
+    union-find kernel; the iterative loop (forced via KERNEL_ROWS=0)
     must produce the identical (doc_id, keeper) set — including on
     string-typed ids and deep chains that need transitive propagation."""
+    from blabel_spark import components
     from blabel_spark.ops.dedup import dedup_clusters
     long_pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)]        # one deep chain
@@ -122,9 +123,10 @@ def test_dedup_clusters_kernel_loop_parity(spark):
         "doc_a long, doc_b long")
     kern = {(r["doc_id"], r["keeper_doc_id"])
             for r in dedup_clusters(long_pairs).collect()}
-    loop = {(r["doc_id"], r["keeper_doc_id"])
-            for r in dedup_clusters(long_pairs,
-                                    kernel_max_pairs=0).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(components, "KERNEL_ROWS", 0)
+        loop = {(r["doc_id"], r["keeper_doc_id"])
+                for r in dedup_clusters(long_pairs).collect()}
     assert kern == loop
     assert all(k == 0 for d, k in kern if d <= 40)
 

@@ -180,9 +180,10 @@ def test_fixpoint_hub_beside_small_bnodes(spark):
     assert out == set(label_graph(trips).graph)
 
 
-def test_cc_kernel_and_iterative_paths_agree(spark):
+def test_cc_kernel_and_iterative_paths_agree(spark, monkeypatch):
     """Component routing: the per-graph union-find kernel and the
     iterative pointer-doubling loop must produce identical partitions."""
+    from blabel_spark import components
     from blabel_spark.canon.distributed import bnode_components
     graphs = {f"r{s}": random_graph(s) for s in range(6)}
     graphs["chain"] = [(f"_:n{i:02d}", "<p>", f"_:n{i + 1:02d}")
@@ -191,8 +192,8 @@ def test_cc_kernel_and_iterative_paths_agree(spark):
     df = spark.createDataFrame(rows, "graph_id string, subj string, "
                                      "pred string, obj string")
     a = sorted(map(tuple, bnode_components(df).collect()))
-    b = sorted(map(tuple,
-                   bnode_components(df, max_kernel_graph=0).collect()))
+    monkeypatch.setattr(components, "KERNEL_ROWS", 0)
+    b = sorted(map(tuple, bnode_components(df).collect()))
     assert a == b
 
 

@@ -1,10 +1,13 @@
 """Extraction pipeline tests: P/R vs ground truth, text-equality invariant,
-JVM vs Arrow detector parity, end-to-end extract→canonicalize."""
+detector vs Python regex, end-to-end extract→canonicalize."""
+
+import re
 
 from pyspark.sql import functions as F
 
 from blabel_spark.datagen import gazetteer, transcripts_df
 from blabel_spark.extract.pipeline import (
+    MENTION_PATTERN,
     detect_mentions,
     extract_triples,
     normalize_turns,
@@ -37,14 +40,18 @@ def test_precision_recall_vs_ground_truth(spark):
     assert precision == 1.0 and recall == 1.0
 
 
-def test_jvm_and_arrow_detectors_agree(spark):
+def test_jvm_detector_matches_python_regex(spark):
+    """The codegen detector recovers exactly the capture groups of
+    ``re.findall(MENTION_PATTERN, text)`` over the same turns."""
     tdf, _ = transcripts_df(spark, seed=7, n_convs=30)
     turns = normalize_turns(tdf)
-    a = detect_mentions(turns, use_arrow=False)
-    b = detect_mentions(turns, use_arrow=True)
     cols = ["conv_id", "turn_idx", "subj_surface", "rel", "obj_surface"]
-    assert sorted(map(tuple, a.select(cols).collect())) == \
-        sorted(map(tuple, b.select(cols).collect()))
+    got = sorted(map(tuple, detect_mentions(turns).select(cols).collect()))
+    want = sorted((r["conv_id"], r["turn_idx"], *m)
+                  for r in turns.select("conv_id", "turn_idx", "text")
+                  .collect()
+                  for m in re.findall(MENTION_PATTERN, r["text"] or ""))
+    assert want and got == want
 
 
 def test_distractors_not_extracted(spark):
