@@ -23,8 +23,8 @@ as ONE iterative join→groupBy loop over the whole corpus at once:
   not the key's message count — hub bnodes need no special path;
 * components that reach a fixpoint leave the loop (their colours freeze);
 * components whose fixpoint does not discriminate every bnode (automorphic
-  residue) are finished by the same kernel (``canon.local`` inside
-  ``applyInPandas``, many components per group) from blank colours;
+  residue) are finished by the same kernel (``canon.local``, one
+  ``groups.map_groups`` group per component) from blank colours;
 * order-insensitive hash folds (whole-graph hash, upg graph hash) are
   per-byte sums mod 256, aggregated JVM-side as 16 lane sums.
 
@@ -46,13 +46,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blabel_spark import ckpt_util, obs
 from blabel_spark import components as cc
 from blabel_spark.components import _ikey
+from blabel_spark.groups import map_groups
 from blabel_spark.hashing import enc_pair, get_hash_family
 from blabel_spark.pair_kernels import (
     combine2_pairs_sql,
@@ -350,48 +350,34 @@ def _next_colors(msgs: DataFrame, lab: DataFrame,
     return fold_messages(all_msgs, parts)
 
 
-def _kernel_buckets(spark: SparkSession) -> int:
-    """applyInPandas groups of a kernel route: four per shuffle partition."""
-    return 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _kernel_colors(btri_kernel: DataFrame, hash_name: str,
-                   n_buckets: int) -> DataFrame:
+def _kernel_colors(btri_kernel: DataFrame, hash_name: str) -> DataFrame:
     """Colour whole components with the local branch-and-bound kernel
     (GraphColouring.traverse + minimum-leaf selection, GraphColouring.java:
     137-141,180-253) from blank colours: task-sized components routed here
     directly, plus loop components that stalled (automorphic residue,
     refinement-audit failure) or ran over the round budget.
 
-    Components are hashed into ``n_buckets`` applyInPandas groups and
-    coloured one after another inside each group.  A group per component
-    would pay the grouped-map per-group cost (pandas frames in and out,
-    ~3.5 ms) once per component: on the 1,472 components of a merged
-    sf0.001 graph that measured 5.5-7.3 s against 0.8-1.4 s with 1-64
-    buckets (4-core host)."""
+    One ``groups.map_groups`` pass colours the components of a partition
+    one after another, sharing one ground-term hash cache; a task holds
+    one Arrow batch plus its largest component."""
     schema = ("graph_id string, comp string, bnode string, "
               "h0 long, h1 long")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(comps):
         from blabel_spark.canon.local import colour_component
-        from blabel_spark.hashing import enc_pair, get_hash_family
         hf = get_hash_family(hash_name)
         static: dict[str, bytes] = {}
-        rows = []
-        for (graph_id, comp), cpdf in pdf.groupby(["graph_id", "comp"],
-                                                  sort=False):
+        for cpdf in comps:
+            graph_id, comp = cpdf["graph_id"].iloc[0], cpdf["comp"].iloc[0]
             _, leaf = colour_component(
                 sorted(set(zip(cpdf["subj"], cpdf["pred"], cpdf["obj"]))),
                 static, hf)
-            rows.extend((graph_id, comp, b, *enc_pair(c))
-                        for b, c in leaf.colors.items())
-        return pd.DataFrame(rows, columns=["graph_id", "comp", "bnode",
-                                           "h0", "h1"])
+            for b, c in leaf.colors.items():
+                yield (graph_id, comp, b, *enc_pair(c))
 
-    return (btri_kernel.select("graph_id", "comp", "subj", "pred", "obj")
-            .withColumn("_b", F.pmod(F.xxhash64("graph_id", "comp"),
-                                     F.lit(n_buckets)))
-            .groupBy("_b").applyInPandas(run, schema))
+    return map_groups(
+        btri_kernel.select("graph_id", "comp", "subj", "pred", "obj"),
+        ["graph_id", "comp"], run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -494,9 +480,8 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                         kernel_parts, metrics, hash_name, broadcast_rows,
                         checkpoint_dir, checkpoint_every, max_iterations)
                 with obs.phase("leaf_kernel", metrics):
-                    leaf, n_leaf = _leaf_colours(
-                        spark, resolved, kernel_parts, hash_name,
-                        metrics["bnode_triples"] // max(kernel_graph_rows, 1))
+                    leaf, n_leaf = _leaf_colours(resolved, kernel_parts,
+                                                 hash_name)
                 if leaf is None:
                     # bnode-free corpus: the result reads none of our state
                     return CanonResult(
@@ -744,15 +729,12 @@ def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
     return resolved, kernel_parts
 
 
-def _leaf_colours(spark, resolved, kernel_parts, hash_name, rows_buckets):
+def _leaf_colours(resolved, kernel_parts, hash_name):
     """The leaf_kernel phase: the materialized leaf colours of every
-    blank node and their row count, or (None, 0) for a bnode-free corpus.
-    ``rows_buckets``: about one task-sized component per kernel bucket."""
+    blank node and their row count, or (None, 0) for a bnode-free corpus."""
     parts = list(resolved)
     if kernel_parts:
-        # no fewer buckets than the per-graph kernel route uses
-        kc = _kernel_colors(reduce(DataFrame.union, kernel_parts), hash_name,
-                            max(_kernel_buckets(spark), rows_buckets))
+        kc = _kernel_colors(reduce(DataFrame.union, kernel_parts), hash_name)
         c0, c1 = _ikey("graph_id", "comp")
         b0, b1 = _ikey("graph_id", "bnode")
         parts.append(kc.select(c0.alias("ck0"), c1.alias("ck1"),
@@ -944,7 +926,7 @@ def _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows) -> DataFrame:
 # ---------------------------------------------------------------------------
 # per-graph kernel canonicalizer — the reference's per-document execution
 # shape (RunNQuadsTest.java:257-451): each graph is labelled whole by the
-# golden-tested local kernel inside one Arrow-batched applyInPandas group.
+# golden-tested local kernel, one ``groups.map_groups`` group per graph.
 # Used for hash families wider than 16 bytes (sha1/sha256/sha512, which do
 # not fit the int64-pair fixpoint representation) and available as a
 # general fallback; graphs are embarrassingly parallel across the cluster
@@ -958,14 +940,11 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
     out_schema = ("graph_id string, kind string, a string, b string, "
                   "c string")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(graphs):
         from blabel_spark.canon.local import (
             HashCollisionError, SearchBudgetExceeded, label_graph)
-        rows = []
-        # one Arrow group carries MANY graphs (bucketed below) — per-graph
-        # scheduling overhead is amortized, essential when the corpus is
-        # millions of conversation-sized graphs
-        for g, gpdf in pdf.groupby("graph_id", sort=False):
+        for gpdf in graphs:
+            g = gpdf["graph_id"].iloc[0]
             trips = list(zip(gpdf["subj"], gpdf["pred"], gpdf["obj"]))
             try:
                 res = label_graph(trips, dip=dip, upg=upg,
@@ -976,24 +955,19 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
                 # its triples through unlabelled and report it, the
                 # reference's per-document timeout behaviour
                 # (RunNQuadsTest.java:296-320)
-                rows.extend((g, "t", s, p, o)
+                yield from ((g, "t", s, p, o)
                             for s, p, o in sorted(set(trips)))
-                rows.append((g, "e", type(e).__name__, str(e)[:200], ""))
+                yield (g, "e", type(e).__name__, str(e)[:200], "")
                 continue
-            rows.extend((g, "t", s, p, o) for s, p, o in res.graph)
-            rows.extend((g, "l", n, "_:SK00" + c.hex(), "")
+            yield from ((g, "t", s, p, o) for s, p, o in res.graph)
+            yield from ((g, "l", n, "_:SK00" + c.hex(), "")
                         for n, c in sorted(res.colors.items()))
-        return pd.DataFrame(rows,
-                            columns=["graph_id", "kind", "a", "b", "c"])
 
     metrics = {"mode": "by_graph", "hash_name": hash_name}
     with ckpt_util.scope() as held, obs.phase("by_graph", metrics):
         # no input dedupe needed: label_graph normalizes its group to a set
-        out = ckpt_util.checkpoint(
-            triples.select(*TRIPLE_COLS)
-            .withColumn("_b", F.pmod(F.xxhash64("graph_id"),
-                                     F.lit(_kernel_buckets(spark))))
-            .groupBy("_b").applyInPandas(run, out_schema))
+        out = ckpt_util.checkpoint(map_groups(
+            triples.select(*TRIPLE_COLS), ["graph_id"], run, out_schema))
         labelled = (out.where(F.col("kind") == "t")
                     .select("graph_id", F.col("a").alias("subj"),
                             F.col("b").alias("pred"),

@@ -14,7 +14,7 @@ canonical-labelling stack:
 
 This module serves two roles in the Spark engine:
 
-1. the ``applyInPandas`` per-component kernel for components the
+1. the per-component kernel (run by ``groups.map_groups``) for components the
    distributed fixpoint cannot fully discriminate (automorphic residue —
    branching search does not distribute), and
 2. the test oracle the distributed DataFrame loop is verified against.

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from blabel_spark import ckpt_util
+from blabel_spark.groups import map_groups
 
 KERNEL_ROWS = 2_000_000   # a group with at most this many edge rows fits a task
 MAX_ROUNDS = 64           # a 2^64-diameter chain would be needed to reach it
@@ -81,22 +82,22 @@ def _kernel(edges: DataFrame, group: list) -> DataFrame:
     schema = StructType([edges.schema[g] for g in group]
                         + [StructField("node", t), StructField("comp", t)])
 
-    def frame(root: dict, keys: dict) -> pd.DataFrame:
-        return pd.DataFrame({**keys, "node": list(root),
-                             "comp": list(root.values())})
-
     edges = edges.select(*group, "a", "b")
     if group:
-        # one group per task: a task's memory is bounded by one graph
-        return edges.groupBy(*group).applyInPandas(
-            lambda pdf: frame(union_find(zip(pdf["a"], pdf["b"])),
-                              {g: pdf[g].iloc[0] for g in group}), schema)
+        # a task holds one Arrow batch plus its largest group
+        def per_group(pdfs):
+            for pdf in pdfs:
+                keys = [pdf[g].iloc[0] for g in group]
+                root = union_find(zip(pdf["a"], pdf["b"]))
+                yield from ((*keys, n, r) for n, r in root.items())
+        return map_groups(edges, group, per_group, schema)
 
     def run(batches):
         root = union_find(e for pdf in batches
                           for e in zip(pdf["a"], pdf["b"]))
         if root:
-            yield frame(root, {})
+            yield pd.DataFrame({"node": list(root),
+                                "comp": list(root.values())})
 
     # one task over the whole edge table, with no exchange
     return edges.coalesce(1).mapInPandas(run, schema)

@@ -3,7 +3,7 @@
 The reference processes corpora one document at a time through its leaning
 stack (RunNQuadsTest.java:257-451); the Spark translation keeps that shape:
 conversations/documents are embarrassingly parallel, each graph's core is
-computed whole-graph inside one Arrow-batched ``applyInPandas`` group.
+computed whole-graph as one ``groups.map_groups`` group.
 Leaning cannot be decomposed per bnode-component (a component can map into
 a DIFFERENT component of the same graph — e.g. an edge folding into a
 longer chain), so the group key is graph_id, not (graph_id, comp).
@@ -16,7 +16,7 @@ Escalation ladder, mirroring the reference's staged stack
    guard so independently-accepted mappings cannot invalidate each
    other; shrinks graphs too large for one task before any kernel sees
    them (opt-in via ``prepass_rows``).
-2. the DFS kernel per graph (``applyInPandas``).
+2. the DFS kernel per graph (``groups.map_groups``).
 3. graphs whose kernel search exceeds its budget re-route to the BFS
    join-chain solver (lean.bfs) — the partial-solution table is the
    distributed object.
@@ -24,11 +24,11 @@ Escalation ladder, mirroring the reference's staged stack
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blabel_spark import ckpt_util
+from blabel_spark.groups import map_groups
 
 _OUT_SCHEMA = ("graph_id string, kind string, a string, b string, c string")
 
@@ -180,35 +180,32 @@ def trivial_prepass(spark: SparkSession, triples: DataFrame,
 
 
 def _kernel_fn(budget: int):
-    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _kernel(graphs):
         from blabel_spark.lean.local import LeanBudgetExceeded, lean_graph
-        graph_id = pdf["graph_id"].iloc[0]
-        triples = list(zip(pdf["subj"], pdf["pred"], pdf["obj"]))
-        rows = []
-        try:
-            res = lean_graph(triples, budget=budget)
-            for s, p, o in res.lean:
-                rows.append((graph_id, "t", s, p, o))
-            for k, v in sorted(res.core_map.items()):
-                rows.append((graph_id, "w", k, v, ""))
-        except LeanBudgetExceeded:
-            # over-budget graphs are flagged and re-routed to the
-            # distributed BFS join-chain solver by lean_graphs (the
-            # reference escalates through its leaning configs the same
-            # way; per-document timeout reporting at
-            # RunNQuadsTest.java:296-320)
-            for s, p, o in sorted(set(triples)):
-                rows.append((graph_id, "t", s, p, o))
-            rows.append((graph_id, "w", "__budget_exceeded__", "", ""))
-        return pd.DataFrame(rows,
-                            columns=["graph_id", "kind", "a", "b", "c"])
+        for pdf in graphs:
+            graph_id = pdf["graph_id"].iloc[0]
+            triples = list(zip(pdf["subj"], pdf["pred"], pdf["obj"]))
+            try:
+                res = lean_graph(triples, budget=budget)
+            except LeanBudgetExceeded:
+                # over-budget graphs are flagged and re-routed to the
+                # distributed BFS join-chain solver by lean_graphs (the
+                # reference escalates through its leaning configs the same
+                # way; per-document timeout reporting at
+                # RunNQuadsTest.java:296-320)
+                yield from ((graph_id, "t", s, p, o)
+                            for s, p, o in sorted(set(triples)))
+                yield (graph_id, "w", "__budget_exceeded__", "", "")
+                continue
+            yield from ((graph_id, "t", s, p, o) for s, p, o in res.lean)
+            yield from ((graph_id, "w", k, v, "")
+                        for k, v in sorted(res.core_map.items()))
     return _kernel
 
 
 def lean_graphs(spark: SparkSession, triples: DataFrame,
                 bfs_fallback: bool = True,
                 kernel_budget: int = 200_000,
-                bfs_max_rows: int = 2_000_000,
                 prepass: bool | str = "auto",
                 kernel_graph_rows: int = 100_000,
                 max_bfs_graphs: int = 64
@@ -226,8 +223,8 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
     filter runs FIRST (the reference's staged stack runs its trivial
     stage unconditionally before search, GraphLeaning.java:121-140),
     shrinking oversized graphs before any kernel sees them; graphs
-    still over the threshold afterwards never enter ``applyInPandas``
-    (a merely-huge graph would otherwise OOM one task) — they go to
+    still over the threshold afterwards never enter the kernel (a
+    merely-huge graph would otherwise OOM one task) — they go to
     the BFS solver when their residual pattern count permits, else
     pass through flagged.  ``prepass=True``/``False`` forces the stage
     on/off.
@@ -267,9 +264,8 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
 
     small = tri if not n_big else \
         tri.join(F.broadcast(big_ids), "graph_id", "left_anti")
-    out = ckpt_util.checkpoint(
-        small.groupBy("graph_id")
-        .applyInPandas(_kernel_fn(kernel_budget), _OUT_SCHEMA))
+    out = ckpt_util.checkpoint(map_groups(
+        small, ["graph_id"], _kernel_fn(kernel_budget), _OUT_SCHEMA))
     lean = (out.where(F.col("kind") == "t")
             .select("graph_id", F.col("a").alias("subj"),
                     F.col("b").alias("pred"), F.col("c").alias("obj")))
@@ -305,8 +301,7 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
             gtri = tri.where(F.col("graph_id") == g) \
                       .select("subj", "pred", "obj")
             try:
-                lean_df, core = bfs_lean_graph(spark, gtri,
-                                               max_rows=bfs_max_rows)
+                lean_df, core = bfs_lean_graph(spark, gtri)
                 extra_lean.append(lean_df.select(
                     F.lit(g).alias("graph_id"), "subj", "pred", "obj"))
                 extra_wit.extend((g, k, v) for k, v in sorted(core.items()))

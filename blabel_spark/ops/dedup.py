@@ -274,14 +274,13 @@ def embedding_candidate_pairs(emb: DataFrame, n_bits: int = 16,
     """Distinct (id_a, id_b) banded sign-LSH candidate pairs — the
     pre-verification stage of embedding_near_dups, exposed so the
     candidate budget (≪ C(n,2)) can be asserted independently."""
-    from blabel_spark.ops.similarity import _bucket_array_col
-    # one pass computes all L buckets (width-routed: literal codegen or
-    # the Arrow tensor kernel — see similarity._bucket_array_col); one
-    # posexplode emits the (table_id, bucket) join keys
+    from blabel_spark.ops.similarity import table_buckets_udf
+    # one Arrow pass computes all L buckets; one posexplode emits the
+    # (table_id, bucket) join keys
     keyed = emb.select(
         "vec_id",
-        F.posexplode(_bucket_array_col(F.col(vec_col), dim, n_bits,
-                                       n_tables, seed))
+        F.posexplode(table_buckets_udf(dim, n_bits, n_tables, seed)(
+            F.col(vec_col)))
         .alias("table_id", "bucket"))
     left = keyed.select(F.col("vec_id").alias("id_a"), "table_id", "bucket")
     right = keyed.select(F.col("vec_id").alias("id_b"), "table_id", "bucket")

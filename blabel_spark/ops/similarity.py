@@ -7,7 +7,8 @@ broadcast of the (tiny) query vector against a scan of the embedding table
 Scale path: sign-LSH bucketing — each vector keyed by the sign pattern of
 its leading dimensions; a query probes only its own bucket (optionally
 hamming-1 neighbours), turning an O(n) scan into an O(n / 2^bits) one.
-Everything is codegen expressions (zip_with / aggregate); no Python UDFs.
+Bucket strings come from one Arrow kernel (``table_buckets_udf``); scoring
+is codegen expressions (zip_with / aggregate).
 """
 
 from __future__ import annotations
@@ -61,33 +62,28 @@ def projection_matrix(dim: int, n_bits: int, seed: int = 42):
     return rng.standard_normal((n_bits, dim))
 
 
-def _proj_bit(vec: Column, w) -> Column:
-    arr = F.array(*[F.lit(float(x)) for x in w])
-    d = _dot(F.transform(vec, lambda x: x.cast("double")), arr)
-    return F.when(d >= 0, "1").otherwise("0")
-
-
 def table_buckets_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     """All ``n_tables`` sign-LSH bucket strings of an array<float> column
     in ONE Arrow pass: a pandas UDF holding the (n_tables·n_bits, dim)
     hyperplane tensor, returning array<string> (element t = table t's
     bucket).
 
-    This is the width-safe replacement for inlining every hyperplane
-    weight as a Column literal (``_proj_bit``): the literal form puts
-    n_tables × n_bits × dim float literals into the plan — ~12k at the
-    sandbox's dim=64 but 150k-800k at real embedding widths (768-4096),
-    which breaks Catalyst analysis time and whole-stage codegen's 64 KB
+    Inlining every hyperplane weight as a Column literal would put
+    n_tables × n_bits × dim float literals into the plan — 150k-800k at
+    real embedding widths (768-4096), which breaks Catalyst analysis time
+    (2s at dim=768 × 8 hyperplanes) and whole-stage codegen's 64 KB
     method limit long before data volume matters.  Here the plan carries
-    ONE expression regardless of width.
+    ONE expression regardless of width; even at dim=64 the kernel
+    measured faster than the literal form's per-query Janino compile
+    (ann_multitable 2.8s → 0.6s at 12 tables × 3 bits).
 
-    Bit-exactness with the literal path (and with the frozen DuckDB
-    oracles): the JVM path computes per-element float64 products and
-    left-folds the sum in index order from 0.0; the kernel accumulates
-    ``acc += E[:, j] * W[:, j]`` for j = 0..dim-1 — the identical IEEE
-    operation sequence per (row, bit), so every sign (including -0.0 and
-    exact-zero dots) matches bit-for-bit.  Parity is test-pinned at
-    dim=64 and the plan-size bound at dim=768.
+    Bit-exactness with a JVM dot-product fold (and with the frozen DuckDB
+    oracles): the kernel accumulates ``acc += E[:, j] * W[:, j]`` for
+    j = 0..dim-1 from 0.0 — per (row, bit) the same IEEE operation
+    sequence as float64 products left-folded in index order, so every
+    sign (including -0.0 and exact-zero dots) matches bit-for-bit.  The
+    tests pin it against a per-element Python fold at dim=64 and 768,
+    and the plan-size bound at dim=768.
 
     Rows are processed in bounded slices so very wide embeddings cannot
     blow up worker memory even with a large Arrow batch size.
@@ -124,30 +120,13 @@ def table_buckets_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     return F.pandas_udf(ArrayType(StringType()))(f)
 
 
-def _bucket_array_col(col: Column, dim: int, n_bits: int, n_tables: int,
-                      seed: int) -> Column:
-    """array<string> of the ``n_tables`` sign-LSH bucket strings for an
-    embedding column — ONE Arrow kernel pass (``table_buckets_udf``).
-
-    The kernel is the default at every width: it is bit-exact with the
-    literal-expression reference (``_table_bucket_cols``, retained for
-    the parity tests), keeps the plan O(1) in embedding width where the
-    literal form inlines n_tables × n_bits × dim float literals
-    (Catalyst analysis alone took 2s at dim=768 × 8 hyperplanes, and the
-    64 KB codegen method limit breaks far below real widths), and
-    measured parity-to-better at the sandbox's dim=64 (the per-query
-    Janino compile of thousands of literal terms costs more than the
-    Python stage: ann_multitable 2.8s → 0.6s at 12 tables × 3 bits)."""
-    return table_buckets_udf(dim, n_bits, n_tables, seed)(col)
-
-
 def sign_lsh_buckets(emb: DataFrame, n_bits: int = 8, dim: int = 64,
                      seed: int = 42,
                      vec_col: str = "embedding") -> DataFrame:
     """(vec_id, label, bucket): bucket = sign pattern of the vector
     against n_bits seeded Gaussian hyperplanes — one Arrow kernel pass,
     no shuffle."""
-    bucket = _bucket_array_col(F.col(vec_col), dim, n_bits, 1, seed)[0]
+    bucket = table_buckets_udf(dim, n_bits, 1, seed)(F.col(vec_col))[0]
     return emb.select("vec_id", "label", bucket.alias("bucket"))
 
 
@@ -196,7 +175,7 @@ def multitable_lsh_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
     bucket columns (pure codegen); the candidate filter is an OR of L
     equality tests against broadcast scalars — no join, no shuffle before
     the final top-k."""
-    arr = _bucket_array_col(F.col(vec_col), dim, n_bits, n_tables, seed)
+    arr = table_buckets_udf(dim, n_bits, n_tables, seed)(F.col(vec_col))
     with_b = emb.select("vec_id", "label", vec_col,
                         *[arr[t].alias(f"b{t}") for t in range(n_tables)])
     qrows = with_b.where(F.col("vec_id") == query_vec_id).collect()
@@ -216,21 +195,6 @@ def multitable_lsh_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
             .orderBy(F.desc("sim"), F.asc("vec_id")).limit(k))
 
 
-def _table_bucket_cols(col: Column, dim: int, n_bits: int, n_tables: int,
-                       seed: int) -> list[Column]:
-    """One sign-LSH bucket string per table as literal-weight codegen
-    expressions.  NOT used on any default path (the plan grows linearly
-    with n_tables × n_bits × dim — a scale-killer at real embedding
-    widths); retained as the independent reference implementation the
-    Arrow kernel (``table_buckets_udf``) is parity-tested against."""
-    out = []
-    for t in range(n_tables):
-        W = projection_matrix(dim, n_bits, seed + t)
-        bits = [_proj_bit(col, W[i]) for i in range(n_bits)]
-        out.append(F.concat(*bits))
-    return out
-
-
 def batch_candidate_ids(emb: DataFrame, queries: DataFrame, *,
                         n_bits: int = 8, n_tables: int = 6, seed: int = 42,
                         vec_col: str = "embedding", qvec_col: str = "qvec",
@@ -244,15 +208,12 @@ def batch_candidate_ids(emb: DataFrame, queries: DataFrame, *,
     deduped without shuffling 2×dim floats per candidate row (at real
     embedding widths the payload would dominate the exchange).  Callers
     attach vectors after the distinct with one join per side."""
+    buckets = table_buckets_udf(dim, n_bits, n_tables, seed)
     data_keyed = emb.select(
-        "vec_id",
-        F.posexplode(_bucket_array_col(
-            F.col(vec_col), dim, n_bits, n_tables, seed))
+        "vec_id", F.posexplode(buckets(F.col(vec_col)))
         .alias("table_id", "bucket"))
     q_keyed = queries.select(
-        "query_id",
-        F.posexplode(_bucket_array_col(
-            F.col(qvec_col), dim, n_bits, n_tables, seed))
+        "query_id", F.posexplode(buckets(F.col(qvec_col)))
         .alias("table_id", "bucket"))
     return (q_keyed.join(data_keyed, ["table_id", "bucket"])
             .where(F.col("query_id") != F.col("vec_id"))

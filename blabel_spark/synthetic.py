@@ -8,15 +8,16 @@ corpus, and emit one reference-format TSV row per document
 RunNQuadsTest.java:307,341) — the exact input ``ops.analyse`` re-aggregates.
 
 The corpus is built driver-side (classes are parametric, not data), the
-benchmark runs distributed: one timed kernel call per graph inside
-bucketed ``applyInPandas`` groups, failures recorded as negative runtimes
-(the reference's timeout convention)."""
+benchmark runs distributed: one timed kernel call per graph, one
+``groups.map_groups`` group per graph, failures recorded as negative
+runtimes (the reference's timeout convention)."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from blabel_spark.groups import map_groups
 
 
 # ---------------------------------------------------------------------------
@@ -78,8 +79,8 @@ _ROW_SCHEMA = ("mode string, doc string, triples long, bnodes long, "
 
 
 def run_benchmark(spark: SparkSession, corpus: DataFrame,
-                  mode: str = "BOTH", lean_budget: int = 200_000,
-                  n_buckets: int = 64) -> DataFrame:
+                  mode: str = "BOTH", lean_budget: int = 200_000
+                  ) -> DataFrame:
     """Timed per-graph kernel runs → reference-format benchmark rows:
     LABEL rows carry (colour_iterations, leaf_count) in (x1, x2); LEAN
     rows carry (lean_triples, lean_bnodes).  Negative runtime = the
@@ -88,12 +89,12 @@ def run_benchmark(spark: SparkSession, corpus: DataFrame,
     if mode not in ("LEAN", "LABEL", "BOTH"):
         raise ValueError(f"mode must be LEAN|LABEL|BOTH, got {mode!r}")
 
-    def run(pdf: pd.DataFrame):
+    def run(graphs):
         import time
         from blabel_spark.canon.local import is_bnode, label_graph
         from blabel_spark.lean.local import LeanBudgetExceeded, lean_graph
-        rows = []
-        for doc, gpdf in pdf.groupby("graph_id", sort=False):
+        for gpdf in graphs:
+            doc = gpdf["graph_id"].iloc[0]
             trips = sorted(set(zip(gpdf["subj"], gpdf["pred"],
                                    gpdf["obj"])))
             nb = len({t for tr in trips for t in (tr[0], tr[2])
@@ -103,11 +104,11 @@ def run_benchmark(spark: SparkSession, corpus: DataFrame,
                 try:
                     res = label_graph(trips)
                     ms = int((time.perf_counter() - t0) * 1000)
-                    rows.append(("LABEL", doc, len(trips), nb, ms,
-                                 res.colour_iterations, res.leaf_count))
+                    yield ("LABEL", doc, len(trips), nb, ms,
+                           res.colour_iterations, res.leaf_count)
                 except Exception:
                     ms = -max(int((time.perf_counter() - t0) * 1000), 1)
-                    rows.append(("LABEL", doc, len(trips), nb, ms, 0, 0))
+                    yield ("LABEL", doc, len(trips), nb, ms, 0, 0)
             if mode in ("LEAN", "BOTH"):
                 t0 = time.perf_counter()
                 try:
@@ -115,19 +116,13 @@ def run_benchmark(spark: SparkSession, corpus: DataFrame,
                     ms = int((time.perf_counter() - t0) * 1000)
                     lb = len({t for tr in lr.lean for t in (tr[0], tr[2])
                               if is_bnode(t)})
-                    rows.append(("LEAN", doc, len(trips), nb, ms,
-                                 len(lr.lean), lb))
+                    yield ("LEAN", doc, len(trips), nb, ms, len(lr.lean),
+                           lb)
                 except LeanBudgetExceeded:
                     ms = -max(int((time.perf_counter() - t0) * 1000), 1)
-                    rows.append(("LEAN", doc, len(trips), nb, ms, 0, 0))
-        return pd.DataFrame(rows, columns=["mode", "doc", "triples",
-                                           "bnodes", "runtime_ms",
-                                           "x1", "x2"])
+                    yield ("LEAN", doc, len(trips), nb, ms, 0, 0)
 
-    return (corpus
-            .withColumn("_b", F.pmod(F.xxhash64("graph_id"),
-                                     F.lit(n_buckets)))
-            .groupBy("_b").applyInPandas(run, _ROW_SCHEMA))
+    return map_groups(corpus, ["graph_id"], run, _ROW_SCHEMA)
 
 
 def to_tsv_lines(bench: DataFrame) -> DataFrame:

@@ -290,9 +290,13 @@ def test_auto_route_big_graph_never_enters_kernel(spark):
     def spy(budget):
         inner = orig(budget)
 
-        def wrapped(pdf):
-            seen_kernel_graphs.append((pdf["graph_id"].iloc[0], len(pdf)))
-            return inner(pdf)
+        def wrapped(graphs):
+            def seen(pdfs):
+                for pdf in pdfs:
+                    seen_kernel_graphs.append((pdf["graph_id"].iloc[0],
+                                               len(pdf)))
+                    yield pdf
+            return inner(seen(graphs))
         return wrapped
 
     ld._kernel_fn = spy

@@ -25,9 +25,11 @@ def test_corpus_shapes(spark):
     assert n["chain-10"] == 10
 
 
-def test_benchmark_both_modes(spark):
+def test_benchmark_both_modes(spark, recwarn):
     bench = run_benchmark(spark, synthetic_corpus(spark, SPEC),
                           mode="BOTH").collect()
+    assert not [w for w in recwarn
+                if "Cannot infer the eval type" in str(w.message)]
     by = {(r["mode"], r["doc"]): r for r in bench}
     assert len(by) == 2 * len(SPEC)
     lab = by[("LABEL", "clique-4")]

@@ -19,9 +19,13 @@ Classes:
             dedup_clusters -> select_keepers into a noop sink (warm-up:
             the sibling sf0.001 directory); md5 is over the sorted keeper
             rows
+  kg        AB_CONVS (250) generated transcripts -> extract_triples ->
+            lean_graphs -> canonicalize (per-graph route) into a noop
+            sink (warm-up: 50 conversations); md5 is over the sorted
+            labelled rows
 
 Env: AB_CPUS (32), AB_CHAINS (4000 for deep, 6 for giant), AB_SF_DIR
-(/root/testdata/sf0.1).
+(/root/testdata/sf0.1), AB_CONVS (250).
 A smaller warm-up pass of the same class runs first so JIT/session warmup
 never lands in the timed window (the round-2 protocol).
 """
@@ -177,6 +181,34 @@ elif klass == "dedup":
     out = {"class": "dedup", "sf_dir": sf_dir, "n_docs": n,
            "wall_s": wall, "docs_per_sec": round(n / wall, 1),
            "md5": rows_md5(out_df)}
+elif klass == "kg":
+    from blabel_spark.datagen import gazetteer, transcripts_df
+    from blabel_spark.extract.pipeline import extract_triples
+    from blabel_spark.lean.distributed import lean_graphs
+
+    def load(n_convs):
+        df = transcripts_df(spark, seed=1, n_convs=n_convs)[0] \
+            .localCheckpoint(True)
+        df.count()
+        return df
+
+    def labelled(transcripts):
+        triples = extract_triples(spark, transcripts, gazetteer())
+        res = canonicalize(spark, lean_graphs(spark, triples)[0])
+        if res.metrics.get("mode") != "by_graph":
+            raise SystemExit(f"expected the by_graph route: {res.metrics}")
+        return res.labelled
+
+    noop(labelled(load(50)))
+
+    transcripts = load(int(os.environ.get("AB_CONVS", "250")))
+    n = transcripts.count()
+    t0 = time.time()
+    out_df = labelled(transcripts)
+    noop(out_df)
+    wall = round(time.time() - t0, 3)
+    out = {"class": "kg", "n_turns": n, "wall_s": wall,
+           "turns_per_sec": round(n / wall, 1), "md5": rows_md5(out_df)}
 else:
     raise SystemExit(f"unknown class {klass}")
 
