@@ -175,12 +175,12 @@ def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
     ground = triples.where(~has_b)
     btri = triples.where(has_b)
     # the bnode→comp table has one row per blank node (≪ triples): its
-    # count materializes the lazy checkpoint, and is the n_bnodes metric
+    # row count, observed by the checkpoint's job, is the n_bnodes metric
     # AND the broadcast decision for the decoration join below, which
     # otherwise exchanges the whole btri set
-    node_comp = ckpt_util.checkpoint(
-        bnode_components(btri, graph_rows_bound=biggest), eager=False)
-    n_bnodes = metrics["n_bnodes"] = node_comp.count()
+    node_comp, n_bnodes = ckpt_util.counted(
+        bnode_components(btri, graph_rows_bound=biggest))
+    metrics["n_bnodes"] = n_bnodes
     tp = term_pair_exprs(hash_name)
     p0, p1 = tp(F.col("pred"))
     s0, s1 = tp(F.col("subj"))
@@ -576,8 +576,7 @@ def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
         metrics["resumed_from_iteration"] = it
         resolved = [res_df] if res_df is not None else []
         kernel_parts = [kern_df] if kern_df is not None else []
-        active = ckpt_util.checkpoint(conv_prev.select(*CK))
-        n_act = conv_prev.count()
+        active, n_act = ckpt_util.counted(conv_prev.select(*CK))
         n_lab_rows = lab.count()
     elif n_loop:
         # node_comp already holds exactly one row per (graph, bnode): the
@@ -742,8 +741,7 @@ def _leaf_colours(resolved, kernel_parts, hash_name):
                                "h0", "h1"))
     if not parts:
         return None, 0
-    leaf = ckpt_util.checkpoint(reduce(DataFrame.union, parts))
-    return leaf, leaf.count()
+    return ckpt_util.counted(reduce(DataFrame.union, parts))
 
 
 def _comp_mux(btri, node_comp, leaf, n_leaf, n_comps, dip, hash_name,
@@ -966,8 +964,10 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
     metrics = {"mode": "by_graph", "hash_name": hash_name}
     with ckpt_util.scope() as held, obs.phase("by_graph", metrics):
         # no input dedupe needed: label_graph normalizes its group to a set
-        out = ckpt_util.checkpoint(map_groups(
-            triples.select(*TRIPLE_COLS), ["graph_id"], run, out_schema))
+        out, n_failed = ckpt_util.counted(
+            map_groups(triples.select(*TRIPLE_COLS), ["graph_id"], run,
+                       out_schema),
+            where=F.col("kind") == "e")
         labelled = (out.where(F.col("kind") == "t")
                     .select("graph_id", F.col("a").alias("subj"),
                             F.col("b").alias("pred"),
@@ -975,7 +975,6 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
         labels = (out.where(F.col("kind") == "l")
                   .select("graph_id", F.col("a").alias("bnode"),
                           F.col("b").alias("label")))
-        n_failed = out.where(F.col("kind") == "e").count()
         if n_failed:
             metrics["failed_graphs"] = n_failed
             metrics["failed_sample"] = [

@@ -17,7 +17,8 @@ from __future__ import annotations
 from contextlib import contextmanager
 from contextvars import ContextVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def ckpt_rdd(df: DataFrame):
@@ -98,3 +99,24 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     if h is not None:
         s.held[h.id()] = h
     return out
+
+
+def counted(df: DataFrame, where: Column | str | None = None
+            ) -> tuple[DataFrame, int]:
+    """``(checkpoint(df), n)``: the eager checkpoint, its blocks registered
+    with the innermost open scope, and ``n = count(when(where, 1))`` over
+    its rows (every row when ``where`` is None; a string is a SQL
+    expression).
+
+    ``n`` is observed by the checkpoint's own job; no other action runs.
+    The observation is the last operator before that action, so the
+    metric comes from the result stage and a retried shuffle stage
+    cannot count twice.  Each call uses a fresh unnamed ``Observation``,
+    because only an observation's first action is recorded.
+    """
+    if isinstance(where, str):
+        where = F.expr(where)
+    n = F.count(F.lit(1) if where is None else F.when(where, 1))
+    obs = Observation()
+    out = checkpoint(df.observe(obs, n.alias("n")))
+    return out, obs.get["n"]

@@ -122,14 +122,14 @@ def main(argv: list[str] | None = None) -> int:
         if args.every > 1:
             triples = triples.where(
                 F.pmod(F.xxhash64("graph_id"), F.lit(args.every)) == 0)
-        write_ntriples(triples, args.output)
-        n = spark.read.text(args.output).count()
+        n = write_ntriples(triples, args.output)
         n_docs = triples.select("graph_id").distinct().count()
         print(f"CONTROL\t{n_docs}\t{n}\t{round(_time.time() - t0, 3)}",
               file=sys.stderr)
         return 0
 
     if args.cmd == "bench-synthetic":
+        from blabel_spark.sources.io import write_counted
         from blabel_spark.spark_util import get_spark
         from blabel_spark.synthetic import (
             run_benchmark, synthetic_corpus, to_tsv_lines)
@@ -138,9 +138,9 @@ def main(argv: list[str] | None = None) -> int:
                 for c in args.classes.split(",") if c]
         corpus = synthetic_corpus(spark, spec)
         bench = run_benchmark(spark, corpus, mode=args.mode)
-        to_tsv_lines(bench).coalesce(1).write.mode("overwrite") \
-            .text(args.output)
-        n = spark.read.text(args.output).count()
+        n = write_counted(to_tsv_lines(bench).coalesce(1),
+                          lambda d: d.write.mode("overwrite")
+                          .text(args.output))
         print(f"wrote {n} benchmark rows to {args.output}", file=sys.stderr)
         return 0
 
@@ -184,8 +184,7 @@ def main(argv: list[str] | None = None) -> int:
         out = out.select("graph_id", rel("subj"), "pred", rel("obj"))
     if args.single:
         out = out.coalesce(1)
-    write_ntriples(out, args.output)
-    n = spark.read.text(args.output).count()
+    n = write_ntriples(out, args.output)
     print(f"wrote {n} statements to {args.output}", file=sys.stderr)
     return 0
 

@@ -142,15 +142,14 @@ def _loop(edges: DataFrame, group: list) -> DataFrame:
                 .groupBy("b0", "b1")
                 .agg(F.min("nbr_comp").alias("nbr_comp")))
             least = F.least("comp", F.coalesce("nbr_comp", "comp"))
-            # lazy checkpoint + one action: the changed-count job
-            # materializes the round's state and truncates lineage
-            new = ckpt_util.checkpoint(
+            # one job per round: the checkpoint materializes the round's
+            # state, truncates lineage and observes the changed count
+            new, n_changed = ckpt_util.counted(
                 comp.join(nbr_min, on=[comp.k0 == nbr_min.b0,
                                        comp.k1 == nbr_min.b1], how="left")
                 .select(*group, "node", "k0", "k1", least.alias("comp"),
                         (F.col("comp") != least).alias("changed")),
-                eager=False)
-            n_changed = new.where("changed").count()
+                where="changed")
             held.release(comp)   # superseded: O(1) retained tables
             comp = new.drop("changed")
             if n_changed == 0:

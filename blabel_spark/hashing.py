@@ -245,16 +245,6 @@ def combine_unordered(hashes: Iterable[bytes]) -> bytes:
     return r.to_bytes(n, "big")
 
 
-def to_hex(h: bytes) -> str:
-    """Guava ``HashCode.toString()``: lowercase hex, byte order preserved.
-
-    Sorting hashes by this hex string (GraphColouring.HashCodeComparator,
-    GraphColouring.java:751-758) is identical to sorting the raw byte
-    strings unsigned-lexicographically, i.e. plain ``bytes`` comparison.
-    """
-    return h.hex()
-
-
 # ---------------------------------------------------------------------------
 # int64-pair representation.
 #

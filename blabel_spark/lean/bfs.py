@@ -102,9 +102,7 @@ def _solutions(gtriples: DataFrame, patterns: list[tuple[str, str, str]],
             alias = f"v{len(cols)}"
             cols[bnode] = alias
             joined = joined.withColumn(alias, F.col(src))
-        nxt = ckpt_util.checkpoint(
-            joined.drop("_cs", "_co").dropDuplicates())
-        n = nxt.count()
+        nxt, n = ckpt_util.counted(joined.drop("_cs", "_co").dropDuplicates())
         held.release(sols)
         sols = nxt
         if n == 0:

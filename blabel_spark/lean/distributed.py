@@ -108,10 +108,10 @@ def trivial_prepass(spark: SparkSession, triples: DataFrame,
                                 & (~((F.col("n_x") == F.col("n_y"))
                                      & F.col("y").startswith("_:")
                                      & (F.col("y") > F.col("x"))))))
-            dominated = ckpt_util.checkpoint(
+            dominated, n_dom = ckpt_util.counted(
                 dom_pairs.select("graph_id", F.col("x").alias("b"))
                 .distinct())
-            if dominated.limit(1).count() == 0:
+            if not n_dom:
                 break
             # simultaneity guard: drop (b→y) when y is dominated or any edge
             # value of b is dominated
@@ -124,9 +124,9 @@ def trivial_prepass(spark: SparkSession, triples: DataFrame,
                               ["graph_id", "val"], "left_semi")
                         .select("graph_id", "x").distinct())
             safe = safe.join(bad_vals, ["graph_id", "x"], "left_anti")
-            accepted = ckpt_util.checkpoint(
+            accepted, n_acc = ckpt_util.counted(
                 safe.groupBy("graph_id", "x").agg(F.min("y").alias("y")))
-            if accepted.limit(1).count() == 0:
+            if not n_acc:
                 break
             wit_parts.append(accepted.select(
                 "graph_id", F.col("x").alias("bnode"),
@@ -255,17 +255,18 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
 
     # graphs still too large for one task bypass the kernel entirely
     if run_pre or biggest is None or biggest > kernel_graph_rows:
-        big_ids = ckpt_util.checkpoint(
+        big_ids, n_big = ckpt_util.counted(
             tri.groupBy("graph_id").agg(F.count("*").alias("n"))
             .where(F.col("n") > kernel_graph_rows).select("graph_id"))
-        n_big = big_ids.count()
     else:
         big_ids, n_big = None, 0
 
     small = tri if not n_big else \
         tri.join(F.broadcast(big_ids), "graph_id", "left_anti")
-    out = ckpt_util.checkpoint(map_groups(
-        small, ["graph_id"], _kernel_fn(kernel_budget), _OUT_SCHEMA))
+    out, n_over = ckpt_util.counted(
+        map_groups(small, ["graph_id"], _kernel_fn(kernel_budget),
+                   _OUT_SCHEMA),
+        where=(F.col("kind") == "w") & (F.col("a") == "__budget_exceeded__"))
     lean = (out.where(F.col("kind") == "t")
             .select("graph_id", F.col("a").alias("subj"),
                     F.col("b").alias("pred"), F.col("c").alias("obj")))
@@ -273,18 +274,20 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
                .select("graph_id", F.col("a").alias("bnode"),
                        F.col("b").alias("target")))
 
-    # bounded collect: kernel-flagged (hard) graphs first — they are the
-    # BFS solver's intended case — then oversized ones, up to the cap
-    over = [r["graph_id"] for r in
+    # bounded collects, run only when an observed count says they find
+    # something: kernel-flagged (hard) graphs first — they are the BFS
+    # solver's intended case — then oversized ones, up to the cap
+    todo = []
+    if bfs_fallback and n_over:
+        todo = sorted(
+            r["graph_id"] for r in
             out.where((F.col("kind") == "w")
                       & (F.col("a") == "__budget_exceeded__"))
             .select("graph_id").distinct()
-            .limit(max_bfs_graphs + 1).collect()]
-    big_list = [] if big_ids is None else \
-        [r["graph_id"] for r in big_ids.limit(max_bfs_graphs + 1).collect()]
-    todo = []
-    if bfs_fallback:
-        todo = sorted(over)[:max_bfs_graphs]
+            .limit(max_bfs_graphs + 1).collect())[:max_bfs_graphs]
+    if bfs_fallback and n_big:
+        big_list = [r["graph_id"] for r in
+                    big_ids.limit(max_bfs_graphs + 1).collect()]
         todo += sorted(set(big_list) - set(todo))[:max_bfs_graphs - len(todo)]
 
     if todo:

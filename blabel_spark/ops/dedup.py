@@ -255,12 +255,11 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
     construction and are not emitted.
     """
     with ckpt_util.scope() as held:
-        # lazy checkpoint + one action: the routing count materializes the
-        # distinct edge table, so no separate checkpoint job runs
-        edges = ckpt_util.checkpoint(
+        # the checkpoint's own job observes the routing row count
+        edges, n_edges = ckpt_util.counted(
             pairs.select(F.col("doc_a").alias("a"),
-                         F.col("doc_b").alias("b")).distinct(), eager=False)
-        out = components(edges, rows_bound=edges.count()).select(
+                         F.col("doc_b").alias("b")).distinct())
+        out = components(edges, rows_bound=n_edges).select(
             F.col("node").alias("doc_id"),
             F.col("comp").alias("keeper_doc_id"))
         held.keep(edges, out)   # the kernel's lazy output reads edges

@@ -31,8 +31,10 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -53,6 +55,17 @@ def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,
         w.format("iceberg").saveAsTable(path)
     else:
         w.parquet(path)
+
+
+def write_counted(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
+    """Run ``write``, one write action, on ``df`` and return the number
+    of rows it wrote, observed by the write's own job: nothing is read
+    back.  The observation is the last operator before the write, and
+    each call uses a fresh unnamed ``Observation`` (only an observation's
+    first action is recorded)."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return obs.get["n"]
 
 
 class FixpointCheckpoint:
@@ -113,7 +126,6 @@ def lineage_metrics(labelled: DataFrame, triples_in: DataFrame,
                     extra: dict | None = None) -> DataFrame:
     """Per-graph-partition lineage/metrics rows: counts in/out plus run
     metadata.  Written next to each output commit (north_rule)."""
-    from pyspark.sql import functions as F
     run_id = run_id or uuid.uuid4().hex[:12]
     ins = triples_in.groupBy("graph_id").agg(F.count("*").alias("n_in"))
     outs = labelled.groupBy("graph_id").agg(F.count("*").alias("n_out"))
@@ -157,15 +169,16 @@ def materialize_kg(spark: SparkSession, labelled: DataFrame,
                    metrics_extra: dict | None = None) -> str:
     """Write the canonical triple table partitioned by graph bucket plus
     its lineage/metrics table, then commit the snapshot manifest entry
-    (written LAST — the commit point); returns the run id."""
-    from pyspark.sql import functions as F
+    (written LAST — the commit point); returns the run id.  The entry's
+    ``n_rows`` is observed by the triple write itself: the commit reads
+    nothing back."""
     run_id = uuid.uuid4().hex[:12]
     out = labelled.withColumn(
         "graph_bucket", F.pmod(F.xxhash64("graph_id"), F.lit(64)))
-    write_table(out, f"{out_dir}/triples", partition_by=["graph_bucket"])
+    n_rows = write_counted(out, lambda d: write_table(
+        d, f"{out_dir}/triples", partition_by=["graph_bucket"]))
     m = lineage_metrics(labelled, triples_in, run_id, metrics_extra)
     write_table(m, f"{out_dir}/metrics")
-    n_rows = spark.read.parquet(f"{out_dir}/triples").count()
     append_snapshot(out_dir, {
         "run_id": run_id,
         "committed_at": time.time(),

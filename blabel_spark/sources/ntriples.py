@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blabel_spark.sources.io import write_counted
+
 # one RDF term in N3 convention: IRI, bnode, or literal with optional
 # @lang / ^^<datatype> suffix
 _TERM = r'(<[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"(?:@[A-Za-z0-9-]+|\^\^<[^>]*>)?)'
@@ -71,5 +73,8 @@ def format_ntriples(triples: DataFrame, quads: bool = False) -> DataFrame:
     return triples.select(F.concat(line, F.lit(" .")).alias("value"))
 
 
-def write_ntriples(triples: DataFrame, path: str, quads: bool = False) -> None:
-    format_ntriples(triples, quads).write.mode("overwrite").text(path)
+def write_ntriples(triples: DataFrame, path: str, quads: bool = False) -> int:
+    """Write ``triples`` as N-Triples (N-Quads) text files under ``path``;
+    returns the number of statements written, observed by the write."""
+    return write_counted(format_ntriples(triples, quads),
+                         lambda d: d.write.mode("overwrite").text(path))

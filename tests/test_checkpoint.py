@@ -97,3 +97,27 @@ def test_snapshot_manifest(spark, corpus, tmp_path):
     import json
     snaps = json.load(open(f"{out_dir}/_snapshots.json"))
     assert [s["run_id"] for s in snaps] == [rid1, rid2]
+
+
+def test_materialize_reads_nothing_back(spark, corpus, tmp_path,
+                                        monkeypatch):
+    """The snapshot's n_rows is observed by the triple write itself:
+    committing reads no table back."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from blabel_spark.canon.distributed import canonicalize
+    from blabel_spark.sources.io import latest_snapshot, materialize_kg
+    rows = [(g, s, p, o) for g, trips in corpus.items() for s, p, o in trips]
+    df = spark.createDataFrame(rows, "graph_id string, subj string, "
+                                     "pred string, obj string")
+    labelled = canonicalize(spark, df).labelled
+    n = labelled.count()
+    out_dir = str(tmp_path / "kg3")
+
+    def no_read(self, *args, **kwargs):
+        raise AssertionError("materialize_kg read a table back")
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameReader, "parquet", no_read)
+        materialize_kg(spark, labelled, df, out_dir)
+    assert latest_snapshot(out_dir)["n_rows"] == n
+    assert spark.read.parquet(f"{out_dir}/triples").count() == n

@@ -25,6 +25,50 @@ def test_local_checkpoint_only_in_ckpt_util():
     assert users == [], f"localCheckpoint outside ckpt_util: {users}"
 
 
+def test_observation_only_in_ckpt_util_and_io():
+    """Row counts of written or checkpointed tables are observed through
+    ``ckpt_util.counted`` and ``sources.io.write_counted`` only."""
+    users = sorted(p.relative_to(PKG).as_posix() for p in PKG.rglob("*.py")
+                   if "Observation(" in p.read_text())
+    assert users == ["ckpt_util.py", "sources/io.py"]
+
+
+def test_counted_matches_count(spark):
+    from pyspark.sql import functions as F
+    df = spark.range(50).repartition(3)
+    for where in (None, "id % 3 = 0", F.col("id") < 10):
+        with ckpt_util.scope():
+            out, n = ckpt_util.counted(df, where)
+            assert n == (df if where is None else df.where(where)).count()
+            assert out.count() == 50
+    for empty in (spark.range(0), spark.createDataFrame([], "id long"),
+                  df.where("id < 0").groupBy("id").count()):
+        with ckpt_util.scope():
+            assert ckpt_util.counted(empty)[1] == 0
+
+
+def test_counted_blocks_released_on_scope_exit(spark):
+    before = _persistent_ids(spark)
+    with ckpt_util.scope():
+        out, n = ckpt_util.counted(spark.range(11))
+        assert n == 11
+        assert ckpt_util.ckpt_rdd(out).id() in _persistent_ids(spark)
+    assert _persistent_ids(spark) - before == set()
+
+
+def test_counted_runs_fewer_jobs_than_checkpoint_then_count(spark):
+    from pyspark.sql import functions as F
+
+    from blabel_spark import obs
+    df = (spark.range(200).repartition(4)
+          .groupBy((F.col("id") % 7).alias("k")).count())
+    with obs.phase("lazy_then_count") as lazy, ckpt_util.scope():
+        assert ckpt_util.checkpoint(df, eager=False).count() == 7
+    with obs.phase("counted") as observed, ckpt_util.scope():
+        assert ckpt_util.counted(df)[1] == 7
+    assert observed["n_jobs"] < lazy["n_jobs"]
+
+
 def test_scope_keep_release_and_exit(spark):
     """keep hands blocks to the enclosing scope, release unpersists only
     blocks the scope holds, and exit — also by exception — releases the
