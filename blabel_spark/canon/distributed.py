@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from blabel_spark import ckpt_util, obs
 from blabel_spark import components as cc
+from blabel_spark.canon import local as canon_local
 from blabel_spark.components import _ikey
 from blabel_spark.groups import map_groups
 from blabel_spark.hashing import enc_pair, get_hash_family
@@ -67,21 +68,28 @@ from blabel_spark.pair_kernels import (
 TRIPLE_COLS = ("graph_id", "subj", "pred", "obj")
 CK = ["ck0", "ck1"]   # interned component key
 
+# Loop rounds before still-active components fall back to the kernel.
+MAX_ITERATIONS = 64
+# Known-size dimension tables up to this many rows (≈ 100-300 MB) broadcast.
+BROADCAST_ROWS = 2_000_000
+# With ``checkpoint_dir``, loop state is committed every this many rounds.
+CHECKPOINT_EVERY = 5
+
 
 def is_bnode_col(c):
     return F.col(c).startswith("_:")
 
 
-def _mb(df: DataFrame, n_rows: int | None, limit: int) -> DataFrame:
+def _mb(df: DataFrame, n_rows: int | None) -> DataFrame:
     """Conditionally broadcast a dimension table whose exact row count is
     already known from a prior action.  Checkpointed tables report no
     size stats, so without the hint AQE plans every join against them as
-    a full exchange of the big side.  Above ``limit`` rows the table may
-    not fit executor memory and the plain co-partitioned shuffle join is
-    the correct plan — the fallback keeps the 10^12-triple case honest
-    while the per-component/per-bnode tables (≪ triples) ride broadcast
-    hash joins whenever they fit."""
-    if n_rows is not None and n_rows <= limit:
+    a full exchange of the big side.  Above ``BROADCAST_ROWS`` rows the
+    table may not fit executor memory and the plain co-partitioned
+    shuffle join is the correct plan — the fallback keeps the
+    10^12-triple case honest while the per-component/per-bnode tables
+    (≪ triples) ride broadcast hash joins whenever they fit."""
+    if n_rows is not None and n_rows <= BROADCAST_ROWS:
         return F.broadcast(df)
     return df
 
@@ -140,7 +148,7 @@ def bnode_components(btri: DataFrame,
 # ---------------------------------------------------------------------------
 
 def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
-          broadcast_rows, checkpoint_dir):
+          checkpoint_dir):
     """The prep phase: None on the per-graph kernel route, else (btri,
     ground, node_comp, loop_comps, kernel_parts) — ``loop_comps`` keys
     the components that enter the loop (None: all), ``kernel_parts``
@@ -203,7 +211,7 @@ def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
     # under AQE captures UnknownPartitioning, so downstream aggregations
     # cannot see the co-partitioning — the mux tail repartitions itself.)
     parts = int(btri.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    comp_broadcasts = n_bnodes <= broadcast_rows
+    comp_broadcasts = n_bnodes <= BROADCAST_ROWS
     if comp_broadcasts and btri.rdd.getNumPartitions() < parts:
         btri = btri.repartition(parts)
     # decoration join on the INTERNED anchor key, not the (graph_id,
@@ -219,7 +227,7 @@ def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
     ak1 = F.when(is_bnode_col("subj"), k_s1).otherwise(k_o1)
     btri = ckpt_util.checkpoint(
         btri.withColumn("_a0", ak0).withColumn("_a1", ak1)
-        .join(_mb(comp_keyed, n_bnodes, broadcast_rows), ["_a0", "_a1"])
+        .join(_mb(comp_keyed, n_bnodes), ["_a0", "_a1"])
         .drop("_a0", "_a1")
         .withColumn("ck0", c0).withColumn("ck1", c1)
         .withColumn("p0", p0).withColumn("p1", p1)
@@ -256,7 +264,7 @@ def _prep(triples, metrics, hash_name, route, kernel_graph_rows,
     if not n_loop:
         return btri, ground, node_comp, None, [btri]
     loop_comps = _mb(ckpt_util.checkpoint(comp_rows.where(big).select(*CK)),
-                     n_loop, broadcast_rows)
+                     n_loop)
     return (btri, ground, node_comp, loop_comps,
             [btri.join(loop_comps, CK, "left_anti")])
 
@@ -289,13 +297,13 @@ def _edge_views(btri: DataFrame, plus_pair=None,
 
 
 def _iteration_messages(static_msgs: DataFrame, bb_edges: DataFrame,
-                        lab: DataFrame, lab_rows: int | None = None,
-                        broadcast_rows: int = 0) -> DataFrame:
+                        lab: DataFrame, lab_rows: int | None = None
+                        ) -> DataFrame:
     # the other end's interned key (ok) is globally unique (128-bit over
     # graph_id+term), so the colour lookup joins on two longs only.  The
     # colour table shrinks as components converge and rides a broadcast
     # while it fits (lab_rows is exact, carried from the previous round's
-    # convergence aggregation); above ``broadcast_rows`` — the 10^12-row
+    # convergence aggregation); above ``BROADCAST_ROWS`` — the 10^12-row
     # regime where no executor holds the colour table — the join becomes
     # a shuffle-hash build of the colour side against ``bb_edges``, which
     # was checkpointed pre-partitioned on (ok0, ok1) so ONLY the per-bnode
@@ -305,7 +313,7 @@ def _iteration_messages(static_msgs: DataFrame, bb_edges: DataFrame,
                            F.col("bk1").alias("_n1"),
                            F.col("h0").alias("oc0"),
                            F.col("h1").alias("oc1"))
-    if lab_rows is not None and lab_rows <= broadcast_rows:
+    if lab_rows is not None and lab_rows <= BROADCAST_ROWS:
         other_lab = F.broadcast(other_lab)
     else:
         other_lab = other_lab.hint("shuffle_hash")
@@ -384,42 +392,15 @@ def _kernel_colors(btri_kernel: DataFrame, hash_name: str) -> DataFrame:
 # canonicalize and its phases
 # ---------------------------------------------------------------------------
 
-DEFAULT_MAX_ITERATIONS = 64
-
-
-def _warn_by_graph_ignores(metrics: dict, checkpoint_dir,
-                           max_iterations) -> None:
-    """The per-graph kernel route has no mid-fixpoint state, so
-    fixpoint-only knobs are inert there.  A run the user believes is
-    resumable via ``checkpoint_dir`` is not — say so loudly and record it
-    in metrics instead of silently dropping the options.  The non-default
-    test references the same DEFAULT_MAX_ITERATIONS constant as the
-    canonicalize signature, so a changed default cannot silently drift
-    this check."""
-    ignored = []
-    if checkpoint_dir:
-        ignored.append("checkpoint_dir")
-    if max_iterations != DEFAULT_MAX_ITERATIONS:
-        ignored.append("max_iterations")
-    if ignored:
-        import warnings
-        metrics["ignored_options"] = ignored
-        warnings.warn(
-            f"canonicalize took the per-graph kernel route; options "
-            f"{ignored} only apply to the distributed fixpoint and were "
-            f"ignored (pass route='fixpoint' to force the resumable path)",
-            stacklevel=3)
+ROUTES = ("auto", "fixpoint", "by_graph")
 
 
 def canonicalize(spark: SparkSession, triples: DataFrame, *,
                  dip: bool = True, upg: bool = True,
                  hash_name: str = "md5",
-                 max_iterations: int = DEFAULT_MAX_ITERATIONS,
                  route: str = "auto",
                  kernel_graph_rows: int = 100_000,
-                 broadcast_rows: int = 2_000_000,
-                 checkpoint_dir: str | None = None,
-                 checkpoint_every: int = 5) -> CanonResult:
+                 checkpoint_dir: str | None = None) -> CanonResult:
     """Canonically label blank nodes of every graph in ``triples``.
 
     Input schema: (graph_id, subj, pred, obj) strings in N3 convention.
@@ -427,9 +408,10 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     the reference), including dip/upg muxing.
 
     With ``checkpoint_dir`` set, the loop state is committed every
-    ``checkpoint_every`` iterations and a restarted run resumes from the
-    last commit (colours are pure functions of the previous round, so
-    replay is idempotent; see sources.io.FixpointCheckpoint).
+    ``CHECKPOINT_EVERY`` rounds and a restarted run resumes from the last
+    commit (colours are pure functions of the previous round, so replay
+    is idempotent; see sources.io.FixpointCheckpoint).  Components still
+    active after ``MAX_ITERATIONS`` rounds are finished by the kernel.
 
     Routing (``route="auto"``): when every graph fits one task
     (≤ ``kernel_graph_rows`` rows — the per-document regime the reference
@@ -441,21 +423,21 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     larger ones enter the distributed pair fixpoint (none: no round
     runs).  ``route="fixpoint"`` and any run with ``checkpoint_dir``
     send every component through the fixpoint; ``route="by_graph"``
-    forces the per-graph kernel.  All paths are bit-identical (parity
-    tests assert it).  ``metrics`` records the split as
-    ``n_kernel_components`` / ``n_loop_components``.
+    forces the per-graph kernel; any other ``route`` raises ValueError.
+    All paths are bit-identical (parity tests assert it).  ``metrics``
+    records the split as ``n_kernel_components`` / ``n_loop_components``.
 
-    ``broadcast_rows``: per-component / per-bnode dimension tables whose
-    exact counts are known (from actions the loop performs anyway) join
-    via broadcast when at most this many rows — above it every such join
-    falls back to the co-partitioned exchange.  2M rows ≈ 100-300 MB
-    broadcast, safe for ordinary executors; tune down for small ones.
+    Per-component / per-bnode dimension tables whose exact counts are
+    known (from actions the loop performs anyway) join via broadcast when
+    at most ``BROADCAST_ROWS`` rows, else by the co-partitioned exchange.
 
     ``metrics["phases"]`` holds a record (wall, jobs, stages; see
     ``obs.phase``) for each phase, which between them run every Spark job
     of the call; each loop round's record is its ``iterations_log``
     entry.  The relabel stays lazy and runs in the caller's sink.
     """
+    if route not in ROUTES:
+        raise ValueError(f"route must be one of {ROUTES}, got {route!r}")
     metrics: dict = {}
     # RDF graphs are triple SETS (the reference loads into HashGraph /
     # TreeSet structures), but a whole-corpus dropDuplicates here would
@@ -469,7 +451,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     with ckpt_util.scope() as run:
         with obs.phase("prep", metrics):
             prep = _prep(triples, metrics, hash_name, route,
-                         kernel_graph_rows, broadcast_rows, checkpoint_dir)
+                         kernel_graph_rows, checkpoint_dir)
         if prep is not None:
             btri, ground, node_comp, loop_comps, kernel_parts = prep
             # loop-era state dies once leaf, its last consumer, materializes
@@ -477,8 +459,7 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                 with obs.phase("loop", metrics):
                     resolved, kernel_parts = _fixpoint(
                         loop, spark, btri, node_comp, loop_comps,
-                        kernel_parts, metrics, hash_name, broadcast_rows,
-                        checkpoint_dir, checkpoint_every, max_iterations)
+                        kernel_parts, metrics, hash_name, checkpoint_dir)
                 with obs.phase("leaf_kernel", metrics):
                     leaf, n_leaf = _leaf_colours(resolved, kernel_parts,
                                                  hash_name)
@@ -491,20 +472,19 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                 loop.keep(leaf)
             with obs.phase("comp_mux", metrics):
                 comp_mux = _comp_mux(btri, node_comp, leaf, n_leaf,
-                                     metrics["n_components"], dip, hash_name,
-                                     broadcast_rows)
+                                     metrics["n_components"], dip, hash_name)
             with obs.phase("mux", metrics):
                 leaf_final, labels = _mux(
                     comp_mux, leaf, ground, node_comp,
                     metrics["n_components"], metrics["n_bnodes"], upg,
-                    hash_name, broadcast_rows)
+                    hash_name)
             # leaf_final (just materialized) supersedes both the raw leaf
             # colours and the per-component mux table — release them; the
             # result now rides on exactly three checkpoints: btri,
             # node_comp, leaf_final
             run.release(leaf, comp_mux)
             return CanonResult(
-                _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows),
+                _relabel(btri, ground, leaf_final, n_leaf),
                 labels, metrics,
                 _retained=run.keep(btri, node_comp, leaf_final))
     res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
@@ -512,13 +492,21 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     res.metrics["phases"] = {**metrics.pop("phases"),
                              **res.metrics["phases"]}
     res.metrics.update(metrics)
-    _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations)
+    if checkpoint_dir:
+        # the per-graph route has no mid-fixpoint state: a run the user
+        # believes is resumable is not — say so loudly, and record it
+        import warnings
+        res.metrics["ignored_options"] = ["checkpoint_dir"]
+        warnings.warn(
+            "canonicalize took the per-graph kernel route; option "
+            "checkpoint_dir only applies to the distributed fixpoint and "
+            "was ignored (pass route='fixpoint' to force the resumable path)",
+            stacklevel=2)
     return res
 
 
 def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
-              metrics, hash_name, broadcast_rows, checkpoint_dir,
-              checkpoint_every, max_iterations):
+              metrics, hash_name, checkpoint_dir):
     """The loop phase: the colour views (ck0, ck1, bk0, bk1, h0, h1) of
     components that turned discrete, and ``kernel_parts`` plus those the
     leaf kernel must finish.  Loop-era tables register with ``loop``, the
@@ -542,7 +530,7 @@ def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
     #   the ~200-node combine3 lane tree OUT of every round's plan
     #   analysis and map stage;
     # * bnode→bnode edges are pre-partitioned on the colour lookup key:
-    #   when the colour table outgrows broadcast_rows, each round's
+    #   when the colour table outgrows BROADCAST_ROWS, each round's
     #   shuffle-hash join then exchanges only the (per-bnode, shrinking)
     #   colour table — never this (triple-scale) side.
     # Both are built from the loop components' rows only, and not at all
@@ -610,10 +598,8 @@ def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
         with obs.phase("round") as rec:
             rec["iteration"] = it
             sm = static_msgs if active is None else \
-                static_msgs.join(_mb(active, n_act, broadcast_rows),
-                                 CK, "left_semi")
-            msgs = _iteration_messages(sm, bb_edges, lab, n_lab_rows,
-                                       broadcast_rows)
+                static_msgs.join(_mb(active, n_act), CK, "left_semi")
+            msgs = _iteration_messages(sm, bb_edges, lab, n_lab_rows)
             # ONE driver-sequenced job per round: both checkpoints are
             # LAZY, and the status collect below runs fold → audit →
             # status as one job, materializing both tables for every later
@@ -678,7 +664,7 @@ def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
 
         def with_status(df, status):
             return df.join(_mb(conv.where(F.col("status") == status)
-                               .select(*CK), counts[status], broadcast_rows),
+                               .select(*CK), counts[status]),
                            CK, "left_semi")
         if counts.get("discrete"):
             resolved.append(with_status(new_lab.drop("oh0", "oh1"),
@@ -697,8 +683,8 @@ def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
             if not read]
 
         n_active = counts.get("active", 0)
-        if n_active == 0 or it >= max_iterations:
-            if n_active and it >= max_iterations:
+        if n_active == 0 or it >= MAX_ITERATIONS:
+            if n_active and it >= MAX_ITERATIONS:
                 # over-budget components fall back to the kernel (the
                 # reference uses wall-clock timeouts per document,
                 # RunNQuadsTest.java:76)
@@ -716,7 +702,7 @@ def _fixpoint(loop, spark, btri, node_comp, loop_comps, kernel_parts,
         n_act = n_active
         n_lab_rows = bcounts.get("active", 0)
 
-        if ckpt is not None and it % checkpoint_every == 0:
+        if ckpt is not None and it % CHECKPOINT_EVERY == 0:
             ckpt.commit(it, lab, conv_prev,
                         reduce(DataFrame.union, resolved) if resolved
                         else None,
@@ -744,8 +730,8 @@ def _leaf_colours(resolved, kernel_parts, hash_name):
     return ckpt_util.counted(reduce(DataFrame.union, parts))
 
 
-def _comp_mux(btri, node_comp, leaf, n_leaf, n_comps, dip, hash_name,
-              broadcast_rows) -> DataFrame:
+def _comp_mux(btri, node_comp, leaf, n_leaf, n_comps, dip,
+              hash_name) -> DataFrame:
     """The comp_mux phase: per-component canonical hash + duplicate mux
     (GraphColouring.java:121-168, GraphLabelling.java:100-119), checkpointed
     as (graph_id, ck0, ck1, contributes, cb0, cb1)."""
@@ -757,15 +743,15 @@ def _comp_mux(btri, node_comp, leaf, n_leaf, n_comps, dip, hash_name,
     # map-side and btri is never re-exchanged — the distributed analogue
     # of GraphColouring.labelBlankNodes's O(triples) single pass over an
     # in-memory colour map (GraphColouring.java:433-451); above
-    # broadcast_rows both joins fall back to shuffles.
+    # BROADCAST_ROWS both joins fall back to shuffles.
     slab = _mb(
         leaf.select(F.col("bk0").alias("_s0"), F.col("bk1").alias("_s1"),
                     F.col("h0").alias("sc0"), F.col("h1").alias("sc1")),
-        n_leaf, broadcast_rows)
+        n_leaf)
     olab = _mb(
         leaf.select(F.col("bk0").alias("_o0"), F.col("bk1").alias("_o1"),
                     F.col("h0").alias("oc0"), F.col("h1").alias("oc1")),
-        n_leaf, broadcast_rows)
+        n_leaf)
     btrij = (
         btri
         .join(slab, on=[btri.ks0 == slab._s0, btri.ks1 == slab._s1],
@@ -805,7 +791,7 @@ def _comp_mux(btri, node_comp, leaf, n_leaf, n_comps, dip, hash_name,
     ghc = unordered_sum_pairs_sql(th, CK, "t0", "t1",
                                   "g0", "g1", extra_init=blank_pair,
                                   count_col="nt") \
-        .join(_mb(comp_sizes, n_comps, broadcast_rows), CK)
+        .join(_mb(comp_sizes, n_comps), CK)
 
     # duplicate-component key: with set-semantic input (deduped above) and
     # injective leaf colours, (g0, g1) is the unordered fold over the
@@ -836,7 +822,7 @@ def _comp_mux(btri, node_comp, leaf, n_leaf, n_comps, dip, hash_name,
 
 
 def _mux(comp_mux, leaf, ground, node_comp, n_comps, n_bnodes, upg,
-         hash_name, broadcast_rows) -> tuple[DataFrame, DataFrame]:
+         hash_name) -> tuple[DataFrame, DataFrame]:
     """The mux phase: the final per-bnode labels, checkpointed as
     (bk0, bk1, label), and their (graph_id, bnode, label) view."""
     # upg: graph-level unique hash (GraphLabelling.java:137-150), merged
@@ -861,8 +847,7 @@ def _mux(comp_mux, leaf, ground, node_comp, n_comps, n_bnodes, upg,
             ground_th.union(comb_h), ["graph_id"], "t0", "t1", "gh0", "gh1",
             extra_init=enc_pair(get_hash_family(hash_name).blank))
         # per-graph table, rows ≤ n_components
-        mux = comp_mux.join(_mb(ghash, n_comps, broadcast_rows),
-                            "graph_id") \
+        mux = comp_mux.join(_mb(ghash, n_comps), "graph_id") \
             .select("ck0", "ck1", "cb0", "cb1", "gh0", "gh1")
 
         def final_pair(h0, h1):
@@ -880,7 +865,7 @@ def _mux(comp_mux, leaf, ground, node_comp, n_comps, n_bnodes, upg,
     # fused in-row relabel would) repeats the same fold once per edge
     fc0, fc1 = final_pair(F.col("h0"), F.col("h1"))
     leaf_final = ckpt_util.checkpoint(
-        leaf.join(_mb(mux, n_comps, broadcast_rows), CK)
+        leaf.join(_mb(mux, n_comps), CK)
         .select("bk0", "bk1",
                 F.concat(F.lit("_:SK00"), pair_hex(fc0, fc1))
                 .alias("label")))
@@ -891,23 +876,22 @@ def _mux(comp_mux, leaf, ground, node_comp, n_comps, n_bnodes, upg,
     bnode_dict = node_comp.select("graph_id", "bnode",
                                   dk0.alias("bk0"), dk1.alias("bk1"))
     return leaf_final, (leaf_final
-                        .join(_mb(bnode_dict, n_bnodes, broadcast_rows),
-                              ["bk0", "bk1"])
+                        .join(_mb(bnode_dict, n_bnodes), ["bk0", "bk1"])
                         .select("graph_id", "bnode", "label"))
 
 
-def _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows) -> DataFrame:
+def _relabel(btri, ground, leaf_final, n_leaf) -> DataFrame:
     """The labelled triples (GraphColouring.labelBlankNodes), lazy: two
     map-side joins of the bnode triples against the per-bnode labels on
     interned long keys, plus the ground triples."""
     sl = _mb(leaf_final.select(F.col("bk0").alias("_s0"),
                                F.col("bk1").alias("_s1"),
                                F.col("label").alias("_slab")),
-             n_leaf, broadcast_rows)
+             n_leaf)
     ol = _mb(leaf_final.select(F.col("bk0").alias("_o0"),
                                F.col("bk1").alias("_o1"),
                                F.col("label").alias("_olab")),
-             n_leaf, broadcast_rows)
+             n_leaf)
     return (
         btri
         .join(sl, on=[btri.ks0 == sl._s0, btri.ks1 == sl._s1], how="left")
@@ -933,8 +917,10 @@ def _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows) -> DataFrame:
 
 def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
                           hash_name: str = "md5", dip: bool = True,
-                          upg: bool = True,
-                          max_leaves: int | None = None) -> CanonResult:
+                          upg: bool = True) -> CanonResult:
+    # a graph over canon.local.MAX_LEAVES search leaves passes through
+    # unlabelled; read on the driver, the kernel closure carries it
+    max_leaves = canon_local.MAX_LEAVES
     out_schema = ("graph_id string, kind string, a string, b string, "
                   "c string")
 

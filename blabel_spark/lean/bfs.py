@@ -32,6 +32,12 @@ from blabel_spark import ckpt_util
 from blabel_spark.canon.local import is_bnode
 
 
+# Budget on the partial-solution table's row count.
+MAX_ROWS = 2_000_000
+# Budget on a graph's blank-node triples (the driver-side pattern list).
+MAX_PATTERNS = 5_000
+
+
 class BFSBudgetExceeded(Exception):
     pass
 
@@ -62,7 +68,7 @@ def _order_patterns(patterns: list[tuple[str, str, str]]
 
 
 def _solutions(gtriples: DataFrame, patterns: list[tuple[str, str, str]],
-               max_rows: int, held: ckpt_util.Scope
+               held: ckpt_util.Scope
                ) -> tuple[DataFrame, list[str], list[str]]:
     """Chained-join evaluation: returns (solution table with one column
     per blank node, column aliases, bnode names — both sorted by bnode).
@@ -108,29 +114,27 @@ def _solutions(gtriples: DataFrame, patterns: list[tuple[str, str, str]],
         if n == 0:
             # should never happen: identity is always a solution
             raise BFSBudgetExceeded("no solution — inconsistent input")
-        if n > max_rows:
+        if n > MAX_ROWS:
             raise BFSBudgetExceeded(
-                f"solution table {n} rows > budget {max_rows} "
+                f"solution table {n} rows > budget {MAX_ROWS} "
                 f"after pattern {i + 1}/{len(patterns)}")
     return sols, [cols[b] for b in sorted(cols)], sorted(cols)
 
 
-def bfs_lean_graph(spark: SparkSession, gtriples: DataFrame,
-                   max_rows: int = 2_000_000,
-                   max_patterns: int = 5_000
+def bfs_lean_graph(spark: SparkSession, gtriples: DataFrame
                    ) -> tuple[DataFrame, dict[str, str]]:
     """Lean ONE graph (gtriples: subj/pred/obj of a single graph)
     distributed.  Returns (lean triples DataFrame, composed core map).
 
     Raises BFSBudgetExceeded when the solution table outgrows
-    ``max_rows`` (the caller flags and passes the graph through, as the
+    ``MAX_ROWS`` (the caller flags and passes the graph through, as the
     reference does on per-document timeout, RunNQuadsTest.java:296-320),
-    or when the graph has more than ``max_patterns`` bnode triples: the
+    or when the graph has more than ``MAX_PATTERNS`` bnode triples: the
     pattern list is a driver-side object that drives one chained join
     per pattern, so it must stay small — a graph that large is *big*,
     not combinatorially hard, which is the trivial pre-pass's regime,
     not this solver's.  The bound makes the driver-side collect loud
-    and O(max_patterns) instead of O(graph).
+    and O(MAX_PATTERNS) instead of O(graph).
     """
     with ckpt_util.scope() as held:
         core: dict[str, str] = {}
@@ -139,10 +143,10 @@ def bfs_lean_graph(spark: SparkSession, gtriples: DataFrame,
         while True:
             prows = (current.where(F.col("subj").startswith("_:")
                                    | F.col("obj").startswith("_:"))
-                     .limit(max_patterns + 1).collect())
-            if len(prows) > max_patterns:
+                     .limit(MAX_PATTERNS + 1).collect())
+            if len(prows) > MAX_PATTERNS:
                 raise BFSBudgetExceeded(
-                    f"graph has > {max_patterns} blank-node triples — too "
+                    f"graph has > {MAX_PATTERNS} blank-node triples — too "
                     "large for the BFS pattern-join solver (route it through "
                     "trivial_prepass / pass-through instead)")
             patterns = [(r["subj"], r["pred"], r["obj"]) for r in prows]
@@ -153,7 +157,7 @@ def bfs_lean_graph(spark: SparkSession, gtriples: DataFrame,
             for b in bnodes:
                 core.setdefault(b, b)
             sols, sol_cols, sol_bnodes = _solutions(
-                current, _order_patterns(patterns), max_rows, held)
+                current, _order_patterns(patterns), held)
             # fewest distinct bnode bindings, and strictly proper
             # (BFSGraphLeaning.getCore:36-60); deterministic tie-break by the
             # full binding tuple

@@ -14,8 +14,8 @@ Escalation ladder, mirroring the reference's staged stack
 1. ``trivial_prepass`` — the join-based trivial-non-lean filter (SURVEY
    J5, rarest-edge probing) applied DISTRIBUTED, with a simultaneity
    guard so independently-accepted mappings cannot invalidate each
-   other; shrinks graphs too large for one task before any kernel sees
-   them (opt-in via ``prepass_rows``).
+   other; shrinks graphs too large for one task (over
+   ``KERNEL_GRAPH_ROWS`` rows) before any kernel sees them.
 2. the DFS kernel per graph (``groups.map_groups``).
 3. graphs whose kernel search exceeds its budget re-route to the BFS
    join-chain solver (lean.bfs) — the partial-solution table is the
@@ -32,18 +32,27 @@ from blabel_spark.groups import map_groups
 
 _OUT_SCHEMA = ("graph_id string, kind string, a string, b string, c string")
 
+# Graphs with more rows than this never enter the per-graph DFS kernel.
+KERNEL_GRAPH_ROWS = 100_000
+# DFS kernel search budget per graph; over it the graph goes to lean.bfs.
+KERNEL_BUDGET = 200_000
+# At most this many graphs per call run the driver-coordinated BFS solver.
+MAX_BFS_GRAPHS = 64
+# Trivial pre-pass rounds (each a fixed chain of joins).
+MAX_PASSES = 8
 
-def trivial_prepass(spark: SparkSession, triples: DataFrame,
-                    max_passes: int = 8
+
+def trivial_prepass(spark: SparkSession, triples: DataFrame
                     ) -> tuple[DataFrame, DataFrame]:
-    """Distributed trivial-non-lean elimination to (bounded) fixpoint:
-    per pass, every blank node probes candidate dominators on its RAREST
-    edge only (GraphLeaning.java:836-850), exact edge-set containment is
-    verified on surviving pairs, and a mapping b→y is accepted only when
-    neither y nor any value of b's edges is itself dominated this pass —
-    simultaneously-applied mappings therefore cannot invalidate each
-    other's containments (a stricter, order-free version of the local
-    kernel's sequential guard, lean/local.py:96-124).
+    """Distributed trivial-non-lean elimination to fixpoint (at most
+    ``MAX_PASSES`` passes): per pass, every blank node probes candidate
+    dominators on its RAREST edge only (GraphLeaning.java:836-850), exact
+    edge-set containment is verified on surviving pairs, and a mapping
+    b→y is accepted only when neither y nor any value of b's edges is
+    itself dominated this pass — simultaneously-applied mappings
+    therefore cannot invalidate each other's containments (a stricter,
+    order-free version of the local kernel's sequential guard,
+    lean/local.py:96-124).
 
     Returns (reduced triples, witness (graph_id, bnode, target))."""
     with ckpt_util.scope() as held:
@@ -51,10 +60,10 @@ def trivial_prepass(spark: SparkSession, triples: DataFrame,
             triples.select("graph_id", "subj", "pred", "obj")
             .dropDuplicates())
         wit_parts: list[DataFrame] = []
-        for _ in range(max_passes):
+        for _ in range(MAX_PASSES):
             # edge identity interned to a 128-bit xxhash64 long pair (the S4
             # flyweight trick, same budget as components._ikey): the
-            # containment joins/groupBys below run up to ``max_passes`` times
+            # containment joins/groupBys below run up to ``MAX_PASSES`` times
             # over THE OVERSIZED-GRAPH PATH, so their shuffle keys must be
             # fixed-width longs, not "±|pred|term" concat strings (reference
             # anchor: GraphLeaning.indexAllEdges interns Edge hashcodes,
@@ -203,68 +212,52 @@ def _kernel_fn(budget: int):
     return _kernel
 
 
-def lean_graphs(spark: SparkSession, triples: DataFrame,
-                bfs_fallback: bool = True,
-                kernel_budget: int = 200_000,
-                prepass: bool | str = "auto",
-                kernel_graph_rows: int = 100_000,
-                max_bfs_graphs: int = 64
+def lean_graphs(spark: SparkSession, triples: DataFrame
                 ) -> tuple[DataFrame, DataFrame]:
     """Returns (lean_triples, witness) DataFrames.
 
     lean_triples: (graph_id, subj, pred, obj) — the per-graph cores.
     witness:      (graph_id, bnode, target) — complete core maps.
 
-    Scale routing (``prepass="auto"``, the default): one size probe
-    decides the ladder, mirroring ``canonicalize(route="auto")``.  When
-    every graph fits a task (≤ ``kernel_graph_rows`` rows) the corpus
-    goes straight to the per-graph DFS kernel — the reference's
-    per-document regime.  Otherwise the distributed trivial-non-lean
-    filter runs FIRST (the reference's staged stack runs its trivial
-    stage unconditionally before search, GraphLeaning.java:121-140),
-    shrinking oversized graphs before any kernel sees them; graphs
-    still over the threshold afterwards never enter the kernel (a
-    merely-huge graph would otherwise OOM one task) — they go to
-    the BFS solver when their residual pattern count permits, else
-    pass through flagged.  ``prepass=True``/``False`` forces the stage
-    on/off.
+    Scale routing: one size probe decides the ladder, mirroring
+    ``canonicalize(route="auto")``.  When every graph fits a task
+    (≤ ``KERNEL_GRAPH_ROWS`` rows) the corpus goes straight to the
+    per-graph DFS kernel — the reference's per-document regime.
+    Otherwise the distributed trivial-non-lean filter runs FIRST (the
+    reference's staged stack runs its trivial stage unconditionally
+    before search, GraphLeaning.java:121-140), shrinking oversized graphs
+    before any kernel sees them; graphs still over the threshold
+    afterwards never enter the kernel (a merely-huge graph would
+    otherwise OOM one task) — they go to the BFS solver when their
+    residual pattern count permits, else pass through flagged.
 
-    Graphs whose DFS kernel search exceeds its budget (combinatorially
-    hard, not merely large) are re-run through the distributed BFS
-    join-chain solver (lean.bfs) when ``bfs_fallback`` — its huge
+    Graphs whose DFS kernel search exceeds ``KERNEL_BUDGET``
+    (combinatorially hard, not merely large) are re-run through the
+    distributed BFS join-chain solver (lean.bfs) — its huge
     partial-solution table is sharded across executors, which is exactly
     the resource the single-task kernel lacks.  The driver processes at
-    most ``max_bfs_graphs`` such graphs (each is a driver-coordinated
+    most ``MAX_BFS_GRAPHS`` such graphs (each is a driver-coordinated
     join chain); any beyond the cap — and any graph that exhausts BOTH
     budgets — passes through unleaned with a ``__budget_exceeded__``
     witness row, the reference's per-document timeout behaviour
     (RunNQuadsTest.java:296-320).  No driver-side collect in this
-    function is larger than ``max_bfs_graphs`` ids + the witness maps.
+    function is larger than ``MAX_BFS_GRAPHS`` ids + the witness maps.
     """
     tri = triples.select("graph_id", "subj", "pred", "obj")
-    pre_wit = None
-    if prepass == "auto":
-        biggest = (tri.groupBy("graph_id").agg(F.count("*").alias("n"))
-                   .agg(F.max("n").alias("m")).collect()[0]["m"]) or 0
-        run_pre = biggest > kernel_graph_rows
-    else:
-        run_pre = bool(prepass)
-        biggest = None
-    if run_pre:
+    biggest = (tri.groupBy("graph_id").agg(F.count("*").alias("n"))
+               .agg(F.max("n").alias("m")).collect()[0]["m"]) or 0
+    pre_wit, big_ids, n_big = None, None, 0
+    if biggest > KERNEL_GRAPH_ROWS:
         tri, pre_wit = trivial_prepass(spark, tri)
-
-    # graphs still too large for one task bypass the kernel entirely
-    if run_pre or biggest is None or biggest > kernel_graph_rows:
+        # graphs still too large for one task bypass the kernel entirely
         big_ids, n_big = ckpt_util.counted(
             tri.groupBy("graph_id").agg(F.count("*").alias("n"))
-            .where(F.col("n") > kernel_graph_rows).select("graph_id"))
-    else:
-        big_ids, n_big = None, 0
+            .where(F.col("n") > KERNEL_GRAPH_ROWS).select("graph_id"))
 
     small = tri if not n_big else \
         tri.join(F.broadcast(big_ids), "graph_id", "left_anti")
     out, n_over = ckpt_util.counted(
-        map_groups(small, ["graph_id"], _kernel_fn(kernel_budget),
+        map_groups(small, ["graph_id"], _kernel_fn(KERNEL_BUDGET),
                    _OUT_SCHEMA),
         where=(F.col("kind") == "w") & (F.col("a") == "__budget_exceeded__"))
     lean = (out.where(F.col("kind") == "t")
@@ -278,24 +271,25 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
     # something: kernel-flagged (hard) graphs first — they are the BFS
     # solver's intended case — then oversized ones, up to the cap
     todo = []
-    if bfs_fallback and n_over:
+    if n_over:
         todo = sorted(
             r["graph_id"] for r in
             out.where((F.col("kind") == "w")
                       & (F.col("a") == "__budget_exceeded__"))
             .select("graph_id").distinct()
-            .limit(max_bfs_graphs + 1).collect())[:max_bfs_graphs]
-    if bfs_fallback and n_big:
+            .limit(MAX_BFS_GRAPHS + 1).collect())[:MAX_BFS_GRAPHS]
+    if n_big:
         big_list = [r["graph_id"] for r in
-                    big_ids.limit(max_bfs_graphs + 1).collect()]
-        todo += sorted(set(big_list) - set(todo))[:max_bfs_graphs - len(todo)]
+                    big_ids.limit(MAX_BFS_GRAPHS + 1).collect()]
+        todo += sorted(set(big_list) - set(todo))[
+            :MAX_BFS_GRAPHS - len(todo)]
 
     if todo:
         from blabel_spark.lean.bfs import BFSBudgetExceeded, bfs_lean_graph
         redo = spark.createDataFrame([(g,) for g in todo],
                                      "graph_id string")
         # kernel output of re-routed graphs is replaced by BFS output;
-        # anti-join against the (≤ max_bfs_graphs)-row id table, never a
+        # anti-join against the (≤ MAX_BFS_GRAPHS)-row id table, never a
         # driver-built isin over an unbounded list
         lean = lean.join(F.broadcast(redo), "graph_id", "left_anti")
         witness = witness.join(F.broadcast(redo), "graph_id", "left_anti")
@@ -318,9 +312,9 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
             witness = witness.union(spark.createDataFrame(
                 extra_wit, "graph_id string, bnode string, target string"))
 
-    # oversized graphs NOT processed above (beyond the cap, or
-    # bfs_fallback off) pass through unleaned, flagged — id set stays a
-    # DataFrame, nothing unbounded reaches the driver
+    # oversized graphs NOT processed above (beyond the cap) pass through
+    # unleaned, flagged — id set stays a DataFrame, nothing unbounded
+    # reaches the driver
     if n_big:
         done = spark.createDataFrame([(g,) for g in todo],
                                      "graph_id string") if todo else \

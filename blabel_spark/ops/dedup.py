@@ -42,7 +42,10 @@ def _shingles(text_col: str, k: int, unit: str) -> Column:
     for natural text); ``unit="word"`` joins k consecutive whitespace
     tokens — the right granularity when the token vocabulary is small
     relative to document length (char shingles then collide on every
-    frequent substring and near-dup detection degenerates to all-pairs)."""
+    frequent substring and near-dup detection degenerates to all-pairs).
+    Any other ``unit`` raises ValueError."""
+    if unit not in ("char", "word"):
+        raise ValueError(f"unit must be 'char' or 'word', got {unit!r}")
     text = F.col(text_col)
     if unit == "char":
         idx = F.sequence(F.lit(1),

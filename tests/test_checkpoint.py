@@ -2,6 +2,7 @@
 
 import pytest
 
+from blabel_spark.canon import distributed
 from blabel_spark.canon.local import label_graph
 
 
@@ -29,26 +30,27 @@ def _run(spark, corpus, **kw):
     return out, res.metrics
 
 
-def test_checkpointed_run_matches_fresh(spark, corpus, tmp_path):
+def test_checkpointed_run_matches_fresh(spark, corpus, tmp_path,
+                                        monkeypatch):
     # route="fixpoint": this test compares a fresh fixpoint run with a
     # checkpointed one (auto-routing would pick the per-graph kernel on
     # this small corpus and record no iterations)
     base, m0 = _run(spark, corpus, route="fixpoint")
     assert m0["colour_iterations"] >= 5  # checkpoints actually fire
-    ck, m1 = _run(spark, corpus, checkpoint_dir=str(tmp_path / "ck"),
-                  checkpoint_every=2)
+    monkeypatch.setattr(distributed, "CHECKPOINT_EVERY", 2)
+    ck, m1 = _run(spark, corpus, checkpoint_dir=str(tmp_path / "ck"))
     assert ck == base
     # oracle agreement too
     for g, trips in corpus.items():
         assert ck[g] == set(label_graph(trips).graph)
 
 
-def test_resume_from_checkpoint(spark, corpus, tmp_path):
+def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
     ckdir = str(tmp_path / "ck2")
-    base, _ = _run(spark, corpus, checkpoint_dir=ckdir, checkpoint_every=2)
+    monkeypatch.setattr(distributed, "CHECKPOINT_EVERY", 2)
+    base, _ = _run(spark, corpus, checkpoint_dir=ckdir)
     # second invocation finds the last commit and replays only the tail
-    resumed, m = _run(spark, corpus, checkpoint_dir=ckdir,
-                      checkpoint_every=2)
+    resumed, m = _run(spark, corpus, checkpoint_dir=ckdir)
     assert m.get("resumed_from_iteration", 0) >= 2
     assert resumed == base
 

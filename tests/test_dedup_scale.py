@@ -303,3 +303,18 @@ def test_ngram_jaccard_construction_is_lazy(spark):
     assert len(jac.collect()) == 12
     plan = jac._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in plan, plan
+
+
+@pytest.mark.parametrize("unit", ["chars", "words", "Word", ""])
+def test_unknown_shingle_unit_rejected(spark, unit):
+    """An unknown shingle ``unit`` raises instead of silently shingling
+    by word, in every entry point that shingles text."""
+    docs = spark.createDataFrame([(1, "a b c d e")],
+                                 "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 1)], "doc_a long, doc_b long")
+    with pytest.raises(ValueError, match="unit"):
+        minhash_signatures(docs, k=3, unit=unit)
+    with pytest.raises(ValueError, match="unit"):
+        lsh_candidate_pairs(docs, k=3, unit=unit)
+    with pytest.raises(ValueError, match="unit"):
+        ngram_jaccard(docs, pairs, k=3, unit=unit)

@@ -9,6 +9,8 @@ dip/upg muxing, SK00 rendering.
 
 import random
 
+import pytest
+
 from blabel_spark.canon.local import label_graph
 from tests.test_local_canon import (
     FIXTURES,
@@ -284,17 +286,19 @@ def test_giant_graph_component_routing(spark):
                        _sorted_rows(ref.labels)), route
 
 
-def test_by_graph_pathological_graph_reported_not_fatal(spark):
+def test_by_graph_pathological_graph_reported_not_fatal(spark, monkeypatch):
     """A graph whose branch-and-bound exceeds its leaf budget must not
     sink the corpus job: its triples pass through unlabelled, the failure
     is reported in metrics, and healthy graphs still label (the
     reference's per-document timeout behaviour)."""
+    from blabel_spark.canon import local
     from blabel_spark.canon.distributed import canonicalize_by_graph
     rows = [("bad", s, p, o) for s, p, o in FIXTURES["grid-3x3"]]
     rows += [("ok", "_:a", "<p>", "<u>")]
     df = spark.createDataFrame(rows, "graph_id string, subj string, "
                                      "pred string, obj string")
-    res = canonicalize_by_graph(spark, df, max_leaves=1)
+    monkeypatch.setattr(local, "MAX_LEAVES", 1)
+    res = canonicalize_by_graph(spark, df)
     m = res.metrics
     assert m["failed_graphs"] == 1
     assert m["failed_sample"][0][0] == "bad"
@@ -327,16 +331,52 @@ def test_empty_and_ground_only_inputs(spark):
         assert res.labels.count() == 0, route
 
 
-def test_fixpoint_all_shuffle_fallback_parity(spark):
-    """broadcast_rows=0 forces every dimension join onto the shuffle
+def test_fixpoint_all_shuffle_fallback_parity(spark, monkeypatch):
+    """BROADCAST_ROWS=0 forces every dimension join onto the shuffle
     fallback (the 10^12-scale path where no table fits executor
     memory); labels must be bit-identical to the broadcast plan."""
+    from blabel_spark.canon import distributed
     from blabel_spark.canon.distributed import canonicalize
     from blabel_spark.ops.triples_view import build_triples
     t = build_triples(spark, "/root/testdata/sf0.001").localCheckpoint(True)
     a = canonicalize(spark, t, route="fixpoint")
-    b = canonicalize(spark, t, route="fixpoint", broadcast_rows=0)
+    monkeypatch.setattr(distributed, "BROADCAST_ROWS", 0)
+    b = canonicalize(spark, t, route="fixpoint")
     assert sorted(map(tuple, a.labels.collect())) == \
         sorted(map(tuple, b.labels.collect()))
     assert sorted(map(tuple, a.labelled.collect())) == \
         sorted(map(tuple, b.labelled.collect()))
+
+
+@pytest.mark.parametrize("route", ["fixpiont", "by-graph", "AUTO", ""])
+def test_unknown_route_rejected(spark, route):
+    """A misspelt route raises instead of silently running the fixpoint."""
+    from blabel_spark.canon.distributed import canonicalize
+    df = spark.createDataFrame([("g", "_:a", "<p>", "<o>")],
+                               "graph_id string, subj string, "
+                               "pred string, obj string")
+    with pytest.raises(ValueError, match="route"):
+        canonicalize(spark, df, route=route)
+
+
+def test_fixpoint_over_budget_components_finish_in_kernel(spark,
+                                                          monkeypatch):
+    """Components still active after MAX_ITERATIONS rounds are finished
+    by the kernel: a 12-edge chain needs about six rounds, so with a
+    budget of two every chain runs over, and the labels stay bit-exact
+    with the local oracle."""
+    from blabel_spark.canon import distributed
+    from blabel_spark.synthetic import chain
+    monkeypatch.setattr(distributed, "MAX_ITERATIONS", 2)
+    graphs = {f"g{j}": chain(12) for j in range(3)}
+    rows = [(g, s, p, o) for g, trips in graphs.items() for s, p, o in trips]
+    df = spark.createDataFrame(rows, "graph_id string, subj string, "
+                                     "pred string, obj string")
+    res = distributed.canonicalize(spark, df, route="fixpoint")
+    assert res.metrics["colour_iterations"] == 2
+    assert res.metrics["over_budget_comps"] == 3
+    got: dict[str, set] = {g: set() for g in graphs}
+    for r in res.labelled.collect():
+        got[r.graph_id].add((r.subj, r.pred, r.obj))
+    for g, trips in graphs.items():
+        assert got[g] == set(label_graph(trips).graph), g

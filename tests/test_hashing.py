@@ -229,8 +229,8 @@ def test_hash_int_pair_sql_matches_scalar(spark):
 
 
 def test_by_graph_route_warns_on_ignored_fixpoint_options(spark):
-    """checkpoint_dir (and other fixpoint-only knobs) must not be
-    silently dropped when the per-graph kernel route is taken."""
+    """checkpoint_dir, the fixpoint's one option, must not be silently
+    dropped when the per-graph kernel route is taken."""
     import warnings
 
     from blabel_spark.canon.distributed import canonicalize
