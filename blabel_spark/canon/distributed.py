@@ -953,7 +953,7 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
         out, n_failed = ckpt_util.counted(
             map_groups(triples.select(*TRIPLE_COLS), ["graph_id"], run,
                        out_schema),
-            where=F.col("kind") == "e")
+            F.col("kind") == "e")
         labelled = (out.where(F.col("kind") == "t")
                     .select("graph_id", F.col("a").alias("subj"),
                             F.col("b").alias("pred"),

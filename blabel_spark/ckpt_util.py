@@ -101,22 +101,22 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return out
 
 
-def counted(df: DataFrame, where: Column | str | None = None
-            ) -> tuple[DataFrame, int]:
-    """``(checkpoint(df), n)``: the eager checkpoint, its blocks registered
-    with the innermost open scope, and ``n = count(when(where, 1))`` over
-    its rows (every row when ``where`` is None; a string is a SQL
-    expression).
+def counted(df: DataFrame, *where: Column | str | None) -> tuple:
+    """``(checkpoint(df), n, ...)``: the eager checkpoint, its blocks
+    registered with the innermost open scope, and one
+    ``n = count(when(cond, 1))`` over its rows per condition in ``where``
+    (every row for no condition or None; a string is a SQL expression).
 
-    ``n`` is observed by the checkpoint's own job; no other action runs.
-    The observation is the last operator before that action, so the
-    metric comes from the result stage and a retried shuffle stage
+    The counts are observed by the checkpoint's own job; no other action
+    runs.  The observation is the last operator before that action, so
+    the metrics come from the result stage and a retried shuffle stage
     cannot count twice.  Each call uses a fresh unnamed ``Observation``,
     because only an observation's first action is recorded.
     """
-    if isinstance(where, str):
-        where = F.expr(where)
-    n = F.count(F.lit(1) if where is None else F.when(where, 1))
+    ns = [F.count(F.lit(1) if w is None else
+                  F.when(F.expr(w) if isinstance(w, str) else w, 1))
+          .alias(f"n{i}") for i, w in enumerate(where or (None,))]
     obs = Observation()
-    out = checkpoint(df.observe(obs, n.alias("n")))
-    return out, obs.get["n"]
+    out = checkpoint(df.observe(obs, *ns))
+    got = obs.get
+    return (out, *(got[f"n{i}"] for i in range(len(ns))))

@@ -149,7 +149,7 @@ def _loop(edges: DataFrame, group: list) -> DataFrame:
                                        comp.k1 == nbr_min.b1], how="left")
                 .select(*group, "node", "k0", "k1", least.alias("comp"),
                         (F.col("comp") != least).alias("changed")),
-                where="changed")
+                "changed")
             held.release(comp)   # superseded: O(1) retained tables
             comp = new.drop("changed")
             if n_changed == 0:

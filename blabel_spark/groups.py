@@ -7,18 +7,21 @@ and colours one blank-node component at a time (GraphLabelling.java:
 
 from __future__ import annotations
 
-from itertools import islice
+from itertools import groupby, islice
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
 _OUT_ROWS = 10_000   # rows per output frame: one default Arrow batch
+_SIZE = "__group_rows"   # the capped runner's per-row group size
 
 
 def map_groups(df: DataFrame, keys: list[str], fn,
-               schema: StructType | str) -> DataFrame:
+               schema: StructType | str, max_rows: int | None = None,
+               over=None) -> DataFrame:
     """Run ``fn`` over the groups of ``df`` by ``keys`` in one hash
     exchange, one sort and one ``mapInPandas`` pass that cuts each Arrow
     batch at key changes, so a task's Python memory is one batch plus its
@@ -26,17 +29,64 @@ def map_groups(df: DataFrame, keys: list[str], fn,
     per-key pandas frames in key order (each key once; NULL keys form a
     group, as in ``groupBy``) and yields output rows as tuples in
     ``schema`` order; state it sets up before its loop lives as long as
-    the partition."""
+    the partition.
+
+    With ``max_rows`` set, a group of more rows never reaches ``fn``:
+    each batch slice of it goes to ``over(pdf)``, which yields output
+    rows in ``schema`` order like ``fn``.  The group size is a window
+    count that rides the same exchange and sort, and a task's Python
+    memory is one batch plus its largest group under the cap.  ``fn`` is
+    then called once per run of small groups between oversized ones, so
+    its state lives per run, not per partition."""
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
-    return (df.repartition(*keys).sortWithinPartitions(*keys)
-            .mapInPandas(lambda batches: _partition(
-                batches, keys, fn, schema.fieldNames()), schema))
+    names = schema.fieldNames()
+    if max_rows is None:
+        return (df.repartition(*keys).sortWithinPartitions(*keys)
+                .mapInPandas(lambda batches: _partition(
+                    batches, keys, fn, names), schema))
+    # the window's own exchange and sort by ``keys`` are the runner's; the
+    # sort below only states the order the batches rely on and is elided
+    sized = df.withColumn(_SIZE, F.count(F.lit(1)).over(
+        Window.partitionBy(*keys)))
+    return (sized.sortWithinPartitions(*keys)
+            .mapInPandas(lambda batches: _capped(
+                batches, keys, fn, names, max_rows, over), schema))
 
 
 def _partition(batches, keys, fn, names):
     """The ``mapInPandas`` body: ``fn``'s rows, packed into frames."""
-    rows = iter(fn(_groups(batches, keys)))
+    yield from _packed(fn(_groups(batches, keys)), names)
+
+
+def _capped(batches, keys, fn, names, max_rows, over):
+    """The capped ``mapInPandas`` body: each run of small groups goes
+    through ``_partition``, each slice of an oversized group to ``over``."""
+    for big, run in groupby(_segments(batches, max_rows), lambda s: s[0]):
+        frames = (pdf for _, pdf in run)
+        if big:
+            for pdf in frames:
+                yield from _packed(over(pdf), names)
+        else:
+            yield from _partition(frames, keys, fn, names)
+
+
+def _segments(batches, max_rows):
+    """``(oversized, slice)`` per run of a batch's rows on the same side
+    of the cap, the size column dropped."""
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        big = pdf[_SIZE].to_numpy() > max_rows
+        bounds = [0, *(np.flatnonzero(big[1:] != big[:-1]) + 1), len(pdf)]
+        pdf = pdf.drop(columns=_SIZE)
+        for a, b in zip(bounds, bounds[1:]):
+            yield bool(big[a]), pdf.iloc[a:b]
+
+
+def _packed(rows, names):
+    """Output rows as frames of at most ``_OUT_ROWS`` rows."""
+    rows = iter(rows)
     while chunk := list(islice(rows, _OUT_ROWS)):
         yield pd.DataFrame(chunk, columns=names)
 

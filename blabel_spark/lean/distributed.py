@@ -11,18 +11,23 @@ longer chain), so the group key is graph_id, not (graph_id, comp).
 Escalation ladder, mirroring the reference's staged stack
 (GraphLeaning.java:121-140 trivial fixpoint → search):
 
-1. ``trivial_prepass`` — the join-based trivial-non-lean filter (SURVEY
-   J5, rarest-edge probing) applied DISTRIBUTED, with a simultaneity
-   guard so independently-accepted mappings cannot invalidate each
-   other; shrinks graphs too large for one task (over
-   ``KERNEL_GRAPH_ROWS`` rows) before any kernel sees them.
-2. the DFS kernel per graph (``groups.map_groups``).
-3. graphs whose kernel search exceeds its budget re-route to the BFS
-   join-chain solver (lean.bfs) — the partial-solution table is the
-   distributed object.
+1. the DFS kernel per graph (``groups.map_groups`` capped at
+   ``KERNEL_GRAPH_ROWS`` rows), whose local trivial filter runs before
+   its search; a graph too large for one task passes through it
+   untouched, sized on the kernel's own exchange — no probe runs first.
+2. only for those graphs, ``trivial_prepass`` — the join-based
+   trivial-non-lean filter (SURVEY J5, rarest-edge probing) applied
+   DISTRIBUTED, with a simultaneity guard so independently-accepted
+   mappings cannot invalidate each other — shrinks them, and a second
+   capped kernel pass leans the ones that now fit.
+3. graphs whose kernel search exceeds its budget, and graphs still over
+   the cap, re-route to the BFS join-chain solver (lean.bfs) — the
+   partial-solution table is the distributed object.
 """
 
 from __future__ import annotations
+
+from itertools import repeat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -212,6 +217,23 @@ def _kernel_fn(budget: int):
     return _kernel
 
 
+def _passed_through(pdf):
+    """A batch slice of an oversized graph, handed back unleaned."""
+    return zip(pdf["graph_id"], repeat("p"), pdf["subj"], pdf["pred"],
+               pdf["obj"])
+
+
+def _kernel_pass(tri: DataFrame) -> tuple[DataFrame, int, int]:
+    """One capped kernel pass, checkpointed: (out, flagged graphs' flag
+    rows, pass-through rows), both counts observed by the checkpoint."""
+    return ckpt_util.counted(
+        map_groups(tri, ["graph_id"], _kernel_fn(KERNEL_BUDGET),
+                   _OUT_SCHEMA, max_rows=KERNEL_GRAPH_ROWS,
+                   over=_passed_through),
+        (F.col("kind") == "w") & (F.col("a") == "__budget_exceeded__"),
+        F.col("kind") == "p")
+
+
 def lean_graphs(spark: SparkSession, triples: DataFrame
                 ) -> tuple[DataFrame, DataFrame]:
     """Returns (lean_triples, witness) DataFrames.
@@ -219,17 +241,18 @@ def lean_graphs(spark: SparkSession, triples: DataFrame
     lean_triples: (graph_id, subj, pred, obj) — the per-graph cores.
     witness:      (graph_id, bnode, target) — complete core maps.
 
-    Scale routing: one size probe decides the ladder, mirroring
-    ``canonicalize(route="auto")``.  When every graph fits a task
-    (≤ ``KERNEL_GRAPH_ROWS`` rows) the corpus goes straight to the
-    per-graph DFS kernel — the reference's per-document regime.
-    Otherwise the distributed trivial-non-lean filter runs FIRST (the
-    reference's staged stack runs its trivial stage unconditionally
-    before search, GraphLeaning.java:121-140), shrinking oversized graphs
-    before any kernel sees them; graphs still over the threshold
-    afterwards never enter the kernel (a merely-huge graph would
-    otherwise OOM one task) — they go to the BFS solver when their
-    residual pattern count permits, else pass through flagged.
+    Scale routing rides the kernel pass itself: ``map_groups`` sizes
+    every graph on its own exchange, so no probe runs first and the
+    input plan runs once.  A graph that fits a task (≤
+    ``KERNEL_GRAPH_ROWS`` rows) goes straight to the per-graph DFS
+    kernel — the reference's per-document regime; the kernel's own
+    trivial filter runs before its search (GraphLeaning.java:121-140).
+    Larger graphs pass through the kernel untouched; only when some do,
+    the distributed trivial-non-lean filter runs on them alone, shrinking
+    them before a second capped pass.  Graphs still over the threshold
+    after it never enter the kernel (a merely-huge graph would otherwise
+    OOM one task) — they go to the BFS solver when their residual
+    pattern count permits, else pass through flagged.
 
     Graphs whose DFS kernel search exceeds ``KERNEL_BUDGET``
     (combinatorially hard, not merely large) are re-run through the
@@ -243,24 +266,21 @@ def lean_graphs(spark: SparkSession, triples: DataFrame
     (RunNQuadsTest.java:296-320).  No driver-side collect in this
     function is larger than ``MAX_BFS_GRAPHS`` ids + the witness maps.
     """
-    tri = triples.select("graph_id", "subj", "pred", "obj")
-    biggest = (tri.groupBy("graph_id").agg(F.count("*").alias("n"))
-               .agg(F.max("n").alias("m")).collect()[0]["m"]) or 0
-    pre_wit, big_ids, n_big = None, None, 0
-    if biggest > KERNEL_GRAPH_ROWS:
-        tri, pre_wit = trivial_prepass(spark, tri)
-        # graphs still too large for one task bypass the kernel entirely
-        big_ids, n_big = ckpt_util.counted(
-            tri.groupBy("graph_id").agg(F.count("*").alias("n"))
-            .where(F.col("n") > KERNEL_GRAPH_ROWS).select("graph_id"))
-
-    small = tri if not n_big else \
-        tri.join(F.broadcast(big_ids), "graph_id", "left_anti")
-    out, n_over = ckpt_util.counted(
-        map_groups(small, ["graph_id"], _kernel_fn(KERNEL_BUDGET),
-                   _OUT_SCHEMA),
-        where=(F.col("kind") == "w") & (F.col("a") == "__budget_exceeded__"))
-    lean = (out.where(F.col("kind") == "t")
+    out, n_over, n_pass = _kernel_pass(
+        triples.select("graph_id", "subj", "pred", "obj"))
+    pre_wit, n_big = None, 0
+    if n_pass:
+        passed = out.where(F.col("kind") == "p").select(
+            "graph_id", F.col("a").alias("subj"), F.col("b").alias("pred"),
+            F.col("c").alias("obj"))
+        tri, pre_wit = trivial_prepass(spark, passed)
+        # graphs still too large for one task pass through again
+        out2, n_over2, n_big = _kernel_pass(tri)
+        out = out.where(F.col("kind") != "p").union(out2)
+        n_over += n_over2
+    # a flagged graph's "t" rows and an oversized graph's "p" rows are its
+    # (deduplicated) input: the BFS solver's, or the unleaned pass-through
+    lean = (out.where(F.col("kind") != "w")
             .select("graph_id", F.col("a").alias("subj"),
                     F.col("b").alias("pred"), F.col("c").alias("obj")))
     witness = (out.where(F.col("kind") == "w")
@@ -278,6 +298,7 @@ def lean_graphs(spark: SparkSession, triples: DataFrame
                       & (F.col("a") == "__budget_exceeded__"))
             .select("graph_id").distinct()
             .limit(MAX_BFS_GRAPHS + 1).collect())[:MAX_BFS_GRAPHS]
+    big_ids = out.where(F.col("kind") == "p").select("graph_id").distinct()
     if n_big:
         big_list = [r["graph_id"] for r in
                     big_ids.limit(MAX_BFS_GRAPHS + 1).collect()]
@@ -291,19 +312,20 @@ def lean_graphs(spark: SparkSession, triples: DataFrame
         # kernel output of re-routed graphs is replaced by BFS output;
         # anti-join against the (≤ MAX_BFS_GRAPHS)-row id table, never a
         # driver-built isin over an unbounded list
+        source = lean
         lean = lean.join(F.broadcast(redo), "graph_id", "left_anti")
         witness = witness.join(F.broadcast(redo), "graph_id", "left_anti")
         extra_lean, extra_wit = [], []
         for g in todo:
-            gtri = tri.where(F.col("graph_id") == g) \
-                      .select("subj", "pred", "obj")
+            gtri = source.where(F.col("graph_id") == g) \
+                         .select("subj", "pred", "obj")
             try:
                 lean_df, core = bfs_lean_graph(spark, gtri)
                 extra_lean.append(lean_df.select(
                     F.lit(g).alias("graph_id"), "subj", "pred", "obj"))
                 extra_wit.extend((g, k, v) for k, v in sorted(core.items()))
             except BFSBudgetExceeded:
-                extra_lean.append(gtri.dropDuplicates().select(
+                extra_lean.append(gtri.select(
                     F.lit(g).alias("graph_id"), "subj", "pred", "obj"))
                 extra_wit.append((g, "__budget_exceeded__", ""))
         for df in extra_lean:
@@ -312,17 +334,13 @@ def lean_graphs(spark: SparkSession, triples: DataFrame
             witness = witness.union(spark.createDataFrame(
                 extra_wit, "graph_id string, bnode string, target string"))
 
-    # oversized graphs NOT processed above (beyond the cap) pass through
-    # unleaned, flagged — id set stays a DataFrame, nothing unbounded
-    # reaches the driver
+    # oversized graphs NOT processed above (beyond the cap) keep their
+    # pass-through rows in ``lean`` and are flagged — the id set stays a
+    # DataFrame, nothing unbounded reaches the driver
     if n_big:
         done = spark.createDataFrame([(g,) for g in todo],
-                                     "graph_id string") if todo else \
-            spark.createDataFrame([], "graph_id string")
+                                     "graph_id string")
         rest = big_ids.join(F.broadcast(done), "graph_id", "left_anti")
-        lean = lean.union(
-            tri.join(F.broadcast(rest), "graph_id", "left_semi")
-            .dropDuplicates())
         witness = witness.union(rest.select(
             "graph_id", F.lit("__budget_exceeded__").alias("bnode"),
             F.lit("").alias("target")))

@@ -127,12 +127,14 @@ def lineage_metrics(labelled: DataFrame, triples_in: DataFrame,
     """Per-graph-partition lineage/metrics rows: counts in/out plus run
     metadata.  Written next to each output commit (north_rule)."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    ins = triples_in.groupBy("graph_id").agg(F.count("*").alias("n_in"))
-    outs = labelled.groupBy("graph_id").agg(F.count("*").alias("n_out"))
-    m = ins.join(outs, "graph_id", "full") \
-           .na.fill({"n_in": 0, "n_out": 0}) \
-           .withColumn("run_id", F.lit(run_id)) \
-           .withColumn("committed_at", F.current_timestamp())
+    # one exchange: input rows tagged 1 and output rows tagged 0, summed
+    tagged = triples_in.select("graph_id", F.lit(1).alias("_in")).union(
+        labelled.select("graph_id", F.lit(0).alias("_in")))
+    m = tagged.groupBy("graph_id") \
+              .agg(F.sum("_in").alias("n_in"),
+                   F.sum(1 - F.col("_in")).alias("n_out")) \
+              .withColumn("run_id", F.lit(run_id)) \
+              .withColumn("committed_at", F.current_timestamp())
     for k, v in (extra or {}).items():
         m = m.withColumn(k, F.lit(v))
     return m

@@ -123,3 +123,20 @@ def test_materialize_reads_nothing_back(spark, corpus, tmp_path,
         materialize_kg(spark, labelled, df, out_dir)
     assert latest_snapshot(out_dir)["n_rows"] == n
     assert spark.read.parquet(f"{out_dir}/triples").count() == n
+
+
+def test_lineage_metrics_zero_fills_both_sides(spark):
+    """A graph with input rows but no output rows gets ``n_out == 0``,
+    and one with output but no input ``n_in == 0``."""
+    from blabel_spark.sources.io import lineage_metrics
+    schema = "graph_id string, subj string, pred string, obj string"
+    tin = spark.createDataFrame(
+        [("g1", "<a>", "<p>", "<b>"), ("g1", "<a>", "<p>", "<c>"),
+         ("g2", "<a>", "<p>", "<b>")], schema)
+    out = spark.createDataFrame(
+        [("g1", "<a>", "<p>", "<b>"), ("g3", "<a>", "<p>", "<b>")], schema)
+    m = lineage_metrics(out, tin, "r1")
+    got = {r.graph_id: (r.n_in, r.n_out, r.run_id) for r in m.collect()}
+    assert got == {"g1": (2, 1, "r1"), "g2": (1, 0, "r1"),
+                   "g3": (0, 1, "r1")}
+    assert dict(m.dtypes)["n_in"] == dict(m.dtypes)["n_out"] == "bigint"

@@ -105,3 +105,18 @@ def test_query_leaves_no_blocks_after_scope(spark, name):
         QUERIES[name](spark, SF).collect()
     left = _persistent_ids(spark) - before
     assert not left, f"{name} left {len(left)} persistent RDDs"
+
+
+def test_counted_observes_several_conditions_in_one_job(spark):
+    from pyspark.sql import functions as F
+
+    from blabel_spark import obs
+    df = spark.range(0, 60, numPartitions=3)
+    with obs.phase("two_counts") as rec, ckpt_util.scope():
+        out, n3, n_small, n_all = ckpt_util.counted(
+            df, "id % 3 = 0", F.col("id") < 10, None)
+    assert (n3, n_small, n_all) == (20, 10, 60)
+    assert rec["n_jobs"] == 1
+    with ckpt_util.scope():
+        out, n = ckpt_util.counted(df.where("id < 0"), "id % 3 = 0")
+        assert n == 0 and out.count() == 0

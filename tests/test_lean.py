@@ -336,6 +336,79 @@ def test_auto_route_cap_passes_through_flagged(spark, monkeypatch):
     assert {(f"<g{i}>", "<p>", f"<o{i}>") for i in range(80)} <= got
 
 
+
+def test_lazy_input_is_computed_once(spark):
+    """``lean_graphs`` runs no action before its kernel's checkpoint: a
+    lazy input of small graphs is computed exactly once."""
+    from pyspark.sql import functions as F
+
+    from blabel_spark import ckpt_util
+    from blabel_spark.lean.distributed import lean_graphs
+    rows = [(g, s, p, o) for g, trips in CASES.items() for s, p, o in trips]
+    df = spark.createDataFrame(rows, "graph_id string, subj string, "
+                                     "pred string, obj string")
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(s):
+        acc.add(1)
+        return s
+
+    tick_udf = F.udf(tick, "string").asNondeterministic()
+    # on the key column, so no plan over the input can prune it away
+    lazy = df.withColumn("graph_id", tick_udf("graph_id"))
+    with ckpt_util.scope():
+        lean, witness = lean_graphs(spark, lazy)
+        assert acc.value == len(rows)
+        assert lean.count() == sum(len(lean_graph(t).lean)
+                                   for t in CASES.values())
+
+
+def test_mixed_corpus_small_graphs_skip_the_prepass(spark, monkeypatch):
+    """With oversized graphs in the corpus, the small graphs still go
+    straight to the kernel (their output equals the local oracle
+    exactly); an oversized graph that the pre-pass shrinks under the
+    threshold is leaned by a second kernel pass, one that stays over it
+    by the BFS solver — both canonically equal to the local core, with a
+    witness covering every input bnode."""
+    from blabel_spark.lean import distributed as ld
+    fold = [("_:a", "<r>", "_:b"),
+            ("_:x", "<r>", "_:y"), ("_:y", "<r>", "_:z")]
+    big = {
+        # 2 dominated bnodes + their dominators + the fold: 7 rows, 5
+        # after the pre-pass
+        "shrinks": [(f"_:d{i}", "<p>", f"<o{i}>") for i in range(2)]
+        + [(f"<g{i}>", "<p>", f"<o{i}>") for i in range(2)] + fold,
+        # 13 rows after the pre-pass: still over the threshold
+        "stays": [(f"_:d{i}", "<p>", f"<o{i}>") for i in range(2)]
+        + [(f"<g{i}>", "<p>", f"<o{i}>") for i in range(10)] + fold,
+    }
+    graphs = {**CASES, **big}
+    rows = [(g, s, p, o) for g, trips in graphs.items() for s, p, o in trips]
+    df = spark.createDataFrame(rows, "graph_id string, subj string, "
+                                     "pred string, obj string")
+    monkeypatch.setattr(ld, "KERNEL_GRAPH_ROWS",
+                        max(len(t) for t in CASES.values()))
+    lean, witness = ld.lean_graphs(spark, df)
+    got, wit = {}, {}
+    for r in lean.collect():
+        got.setdefault(r.graph_id, []).append((r.subj, r.pred, r.obj))
+    for r in witness.collect():
+        wit.setdefault(r.graph_id, {})[r.bnode] = r.target
+    for name, trips in CASES.items():
+        res = lean_graph(trips)
+        assert sorted(got[name]) == sorted(res.lean), name
+        assert wit.get(name, {}) == res.core_map, name
+    for name, trips in big.items():
+        want = lean_graph(trips).lean
+        assert label_graph(sorted(got[name])).graph == \
+            label_graph(list(want)).graph, name
+        in_b = {t for tr in trips for t in (tr[0], tr[2]) if is_bnode(t)}
+        assert set(wit[name]) == in_b, name
+        surv = {t for tr in got[name] for t in (tr[0], tr[2])}
+        assert all(not is_bnode(t) or t in surv
+                   for t in wit[name].values()), name
+
+
 # -- five-config metamorphic matrix (TestFramework.java:151-155,235-241) ------
 
 DFS_CONFIGS = [("sorted", True), ("random", True),
